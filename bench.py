@@ -320,6 +320,28 @@ def _cpu_jiffies() -> tuple[int, int]:
     return busy, tree
 
 
+def _timed_sample(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """Build and run ``fn(spark, sf_dir)`` once through the noop sink,
+    then release whatever it cached. Returns (wall seconds,
+    external-CPU fraction): the share of machine busy-CPU during the
+    sample that was NOT this process tree — ~0 quiesced, >0 flags a
+    contaminated sample. The tree delta is clamped at 0 (a Python worker
+    exiting mid-sample takes its accumulated jiffies out of the sum,
+    driving the raw delta negative) and the ratio at 1 (it is a
+    fraction)."""
+    busy0, tree0 = _cpu_jiffies()
+    t0 = time.perf_counter()
+    _force(fn(spark, sf_dir))
+    wall = time.perf_counter() - t0
+    busy1, tree1 = _cpu_jiffies()
+    d_busy = max(busy1 - busy0, 1)
+    d_tree = max(tree1 - tree0, 0)
+    # Queries that persist intermediates (similarity join, CC) must not
+    # hold blocks into the next measurement — isolate each run.
+    spark.catalog.clearCache()
+    return wall, round(min(max(d_busy - d_tree, 0) / d_busy, 1.0), 3)
+
+
 def _loadavg() -> list[float]:
     with open("/proc/loadavg") as fh:
         return [float(x) for x in fh.read().split()[:3]]
@@ -512,22 +534,7 @@ def main() -> None:
         for attempt in range(max_retries + 1):
             if name in slow:
                 jvm_gc()
-            busy0, tree0 = _cpu_jiffies()
-            t0 = time.perf_counter()
-            _force(specs[name].fn(spark, sf_dir))
-            wall = time.perf_counter() - t0
-            busy1, tree1 = _cpu_jiffies()
-            # Fraction of machine busy-CPU during this sample that was NOT
-            # this bench: ~0 quiesced, >0 flags a contaminated sample. The
-            # tree delta is clamped at 0 (a Python worker exiting mid-sample
-            # takes its accumulated jiffies out of the sum, driving the raw
-            # delta negative) and the ratio at 1 (it is a fraction).
-            d_busy = max(busy1 - busy0, 1)
-            d_tree = max(tree1 - tree0, 0)
-            ext = round(min(max(d_busy - d_tree, 0) / d_busy, 1.0), 3)
-            # Queries that persist intermediates (similarity join, CC) must
-            # not hold blocks into the next measurement — isolate each run.
-            spark.catalog.clearCache()
+            wall, ext = _timed_sample(spark, specs[name].fn, sf_dir)
             if ext <= max_ext or attempt == max_retries:
                 samples[name].append(wall)
                 external[name].append(ext)

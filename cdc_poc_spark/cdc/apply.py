@@ -10,16 +10,18 @@ Delta/Iceberg MERGE compiles to anyway.
 
 ``merge_upsert`` applies a change batch against an existing state
 DataFrame (the incremental form used by streaming foreachBatch), and
-``merge_into_parquet`` persists it with dedup-overwrite — the documented
-fallback when no transactional table format is on the classpath (SURVEY
-§7 "degrade to the pure-Spark dedup/overwrite path"). Schema evolution
-uses unionByName(allowMissingColumns=True) — the mergeSchema semantics
-of consumer.py:76.
+``merge_into_parquet_bucketed`` persists it by rewriting only the
+touched key buckets — the documented fallback when no transactional
+table format is on the classpath (SURVEY §7 "degrade to the pure-Spark
+dedup/overwrite path"). Schema evolution uses
+unionByName(allowMissingColumns=True) — the mergeSchema semantics of
+consumer.py:76.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -77,36 +79,13 @@ def merge_upsert(
     return apply_changes(combined, key_cols, seq_col, op_col, delete_ops)
 
 
-def merge_into_parquet(
-    spark: SparkSession,
-    target_path: str,
-    batch_df: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    delete_ops: tuple[str, ...] = ("d", "D"),
-) -> None:
-    """Dedup-overwrite merge against a parquet target (the no-Iceberg
-    fallback; with Iceberg/Delta on the classpath the same batch feeds
-    SQL MERGE INTO instead).
-
-    Note for scale: overwrite rewrites the whole target — correct but
-    O(state); a transactional format with MERGE rewrites only matched
-    files. The interface is identical so deployments swap the sink."""
-    import shutil
-
-    state = None
-    if os.path.exists(target_path):
-        state = spark.read.parquet(target_path)
-    merged = merge_upsert(state, batch_df, key_cols, seq_col, op_col, delete_ops)
-    # Write-ahead + swap: the merged plan reads the files being replaced,
-    # so land the new state beside the target and rename — distributed
-    # write, no driver materialization.
-    tmp = target_path.rstrip("/") + ".__tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(target_path):
-        shutil.rmtree(target_path)
-    os.rename(tmp, target_path)
+def has_bucketed_state(target_path: str) -> bool:
+    """True when a bucketed-merge target holds at least one bucket
+    directory. A target whose keys were all deleted keeps only its
+    ``_SUCCESS`` marker, which parquet schema inference cannot read."""
+    return os.path.isdir(target_path) and any(
+        e.startswith("__bucket=") for e in os.listdir(target_path)
+    )
 
 
 def merge_into_parquet_bucketed(
@@ -124,11 +103,11 @@ def merge_into_parquet_bucketed(
     and a batch only rewrites the buckets its keys hash into.
 
     Cost per batch is O(touched_buckets / n_buckets × state) instead of
-    ``merge_into_parquet``'s O(state) — the same file-pruning idea a
-    MERGE INTO on a transactional format applies, built from plain
-    parquet + dynamic partition overwrite. At 100 TB with n_buckets
-    sized so a bucket ≈ a few GB, a small CDC batch touches a handful
-    of directories and the merge is effectively O(batch).
+    a full rewrite's O(state) — the same file-pruning idea a MERGE INTO
+    on a transactional format applies, built from plain parquet +
+    dynamic partition overwrite. At 100 TB with n_buckets sized so a
+    bucket ≈ a few GB, a small CDC batch touches a handful of
+    directories and the merge is effectively O(batch).
     """
     # Hash a type-STABLE representation of the key: xxhash64(int 2) !=
     # xxhash64(bigint 2), so schema evolution that widens a key type
@@ -139,26 +118,23 @@ def merge_into_parquet_bucketed(
         F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets)
     )
     batch_b = batch_df.withColumn("__bucket", bucket)
-    exists = os.path.exists(target_path)
+    # a target emptied by deletes has no bucket left: merge as if fresh
+    exists = has_bucketed_state(target_path)
+    state = None
     if exists:
         touched = [r["__bucket"] for r in batch_b.select("__bucket").distinct().collect()]
         state = spark.read.parquet(target_path).filter(F.col("__bucket").isin(touched))
-        if op_col not in state.columns:
-            state = state.withColumn(op_col, F.lit("u"))
-        combined = state.unionByName(batch_b, allowMissingColumns=True)
-    else:
-        combined = batch_b
-    merged = apply_changes(combined, key_cols, seq_col, op_col, delete_ops)
+    merged = merge_upsert(state, batch_b, key_cols, seq_col, op_col, delete_ops)
     # Self-overwrite hazard: the merged plan reads the very files being
     # replaced. Write-aside distributed, then swap ONLY the touched
     # bucket directories (driver does metadata renames, never data; on
     # an object store this is the commit protocol's job / a transactional
     # format's snapshot swap).
-    import shutil
-
     tmp = target_path.rstrip("/") + ".__tmp__"
     merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
     if not exists:
+        if os.path.exists(target_path):
+            shutil.rmtree(target_path)
         os.rename(tmp, target_path)
         return
     moved = set()

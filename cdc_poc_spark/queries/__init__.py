@@ -44,722 +44,10 @@ def register(name: str, oracle: Optional[str] = None, tags: tuple = ()):  # deco
     return deco
 
 
-# Rotation bookkeeping (documented in README.md / COVERAGE.md): the external
-# driver hash-checks the FIRST 50 registry entries each round. Rounds 1-4
-# rotated the front list so 155 distinct queries got driver rows.
-# STANDING POLICY: queries ADDED in round N (or whose oracle changed after
-# their last driver row) are fronted in round N's (or N+1's) window; the
-# evicted entries already have driver rows. The local full sweep
-# (tests/test_oracle_parity.py + tools/run_parity_sweep.py ->
-# PARITY_SWEEP.json) always checks every oracled query regardless of this
-# ordering.
-#
-# ROUND-5 WINDOW (this list, first 50 entries): the 17 pending queries
-# (14 added in r4 after the r4 window froze, plus 3 ANN/LSH-CC queries —
-# `dedup_cc_clusters_lsh`, `sim_ann_lsh_topk`, `sim_ann_ivf_topk` — whose
-# only driver appearance was in r1 *before* they gained bound-contract
-# oracles, per VERDICT r4 "What's missing #1"), followed by queries newly
-# added in round 5 so they get driver rows immediately. After r5 the
-# driver-green set is the full registry minus the 2 structurally rows-only
-# seed-specific LSH pair lists (each contract-twinned by a driver-green
-# recall/agreement query).
-_ROUND5_FRONT = [
-    # -- 3 re-oracled ANN/LSH-CC queries (r1 no_oracle -> contract oracles)
-    "dedup_cc_clusters_lsh",
-    "sim_ann_lsh_topk",
-    "sim_ann_ivf_topk",
-    # -- 14 round-4 additions that missed the r4 window
-    "join_interval_overlap",
-    "agg_robust_outliers_mad",
-    "graph_triangle_stats",
-    "dedup_incremental_vs_index",
-    "pipeline_token_budget_fill",
-    "pipeline_mixture_reweight",
-    "sim_semantic_canonical",
-    "pipeline_leakage_safe_split",
-    "text_build_vocab",
-    "pipeline_contains_decontaminate",
-    "text_encode_ids",
-    "graph_pagerank_3iter",
-    "pipeline_curation_near_dup_safe",
-    "pipeline_curriculum_stages",
-    # -- round-5 additions are appended here as they land (see
-    #    _ROUND5_NEW below). With the 33 round-5 additions the window
-    #    is now exactly full (17 + 33 = 50); _ROUND4_FRONT entries
-    #    (all already driver-green in r4) sit at positions 51+.
-]
-
-_ROUND4_FRONT = [
-    "sql_window_top_suppliers",
-    "sql_priority_mix_by_status",
-    "sql_setops_nation_bands",
-    "sql_exists_high_value_customers",
-    "sql_rollup_segment_counts",
-    "sql_string_shaping",
-    "sql_mom_revenue_growth",
-    "sql_order_count_bands",
-    "tw_tumbling_5min_by_type",
-    "tw_sliding_10min_step5",
-    "tw_session_30min_by_user",
-    "tw_interval_join_attribution",
-    "tw_time_rollup_hierarchy",
-    "tw_gap_fill_interpolate",
-    "udf_pandas_normalize_text",
-    "udf_pandas_grouped_agg",
-    "udf_python_udtf_tokenize",
-    "text_bm25_topk",
-    "text_inverted_index_stats",
-    "pipeline_stratified_sample",
-    "text_quality_percentile_filter",
-    "pipeline_corpus_curation",
-    "pipeline_zorder_layout",
-    "join_salted_skew",
-    "pipeline_global_index",
-    "agg_moment_stats",
-    "agg_corr_regression",
-    "join_range_binned",
-    "tw_sessionize_ids",
-    "text_tfidf_cosine_topk",
-    "pipeline_dup_rate_by_source",
-    "scalar_url_parse",
-    "join_asof_tolerance",
-    "agg_histogram_fixed_bins",
-    "pipeline_source_overlap_ngrams",
-    "ml_kmeans_step_assign",
-    "win_funnel_stages",
-    "pipeline_weighted_sample",
-    "text_lang_id_accuracy",
-    "text_doc_fingerprint",
-    "text_regex_token_count",
-    "mm_media_metadata",
-    "mm_fake_features",
-    "pipeline_split_train_val",
-    "text_top_tokens",
-    "text_token_budget_by_source",
-    "text_top_bigrams",
-    "mm_frame_sample",
-    "mm_resize_dims",
-    # New in round 4 — takes the window's one free slot (the other 49
-    # are this round's never-checked backlog; q1, already checked in
-    # r3, drops to position 51).
-    "text_unigram_logprob_junk",
-]
-
-
-# Queries registered for the first time in round 5 — appended to the r5
-# front so they get driver rows in the same round they land.
-_ROUND5_NEW: list = [
-    "graph_pagerank_5iter",
-    "agg_heavy_hitters_tokens",
-    "dedup_url_canonical",
-    "text_passage_dedup",
-    "tw_m4_downsample",
-    "pipeline_bpe_merge_step",
-    "ml_kmeans_step_update",
-    "join_nearest_event",
-    "agg_key_skew_profile",
-    "agg_mode_per_group",
-    "win_distribution_ranks",
-    "scalar_bitwise_functions",
-    "sim_knn_graph",
-    "sim_knn_graph_ivf",
-    "tw_anomaly_zscore",
-    "graph_degree_histogram",
-    "text_keyword_in_context",
-    "text_intradoc_repetition_cleanup",
-    "text_gopher_quality_rules",
-    "setop_bag_semantics",
-    "scalar_interval_arithmetic",
-    "tw_ohlc_bars",
-    "win_event_transitions",
-    "tw_retention_cohorts",
-    "agg_decile_stats",
-    "dedup_token_containment",
-    "dedup_sorted_neighborhood",
-    "text_winnowing_fingerprints",
-    "text_bigram_logprob_junk",
-    "graph_label_propagation",
-    "scalar_struct_functions",
-    "agg_pareto_concentration",
-    "text_winnowing_overlap_pairs",
-]
-
-
-# Queries registered AFTER the round-5 window froze (the 50 slots above
-# are exactly full). Per the standing policy these take round-6 window
-# slots: next round, promote this list ahead of _ROUND5_FRONT. Until
-# then they sit at positions 51+ and are value-checked by the full
-# sweep (PARITY_SWEEP.json) like everything else.
-_ROUND6_NEW: list = [
-    "agg_benford_profile",
-    "cdc_out_of_order_profile",
-    "graph_kcore_profile",
-    "text_zipf_fit",
-    "graph_copurchase_projection",
-    "agg_gini_coefficient",
-    "cdc_watermark_recommendation",
-    "sim_mips_topk",
-    "sim_euclidean_topk",
-    "agg_boolean_aggregates",
-    # -- re-oracled in round 5 (green-on-EMPTY results made their old
-    #    oracles non-discriminating; predicates adjusted so the result
-    #    is non-empty at every fixture SF — see each docstring). Their
-    #    last driver rows hashed the old empty outputs, so they re-enter
-    #    the window in r6 per the standing policy.
-    "setop_except_nations",
-    "join_anti_customers_without_orders",
-    "subq_not_exists_idle_rich",
-    "tw_seasonal_baseline",
-    "dedup_fuzzy_name_pairs",
-    "graph_bfs_distances",
-    "pipeline_interleave_order",
-    "text_vocab_coverage",
-    "sim_centroid_distances",
-    "tw_interarrival_stats",
-    "tw_reorder_latency",
-]
-
-
-# ROUND-7 WINDOW (promoted to the front of all_specs() at the start of
-# round 7 per the standing policy): the 46 queries registered after the
-# round-6 window froze, all sweep-green in PARITY_SWEEP.json but never
-# driver hash-checked. ``sql_recursive_hierarchy`` took r6's 50th slot
-# (driver-green) so it moved OUT of this list to the back. 50 - 46 = 4
-# slots remain for round-7 additions (_ROUND7B_NEW below).
-_ROUND7_NEW: list = [
-    "sql_recursive_subtree_rollup",
-    "scalar_variant_functions",
-    "cdc_snapshot_diff",
-    "pipeline_weighted_reservoir",
-    "scalar_generator_functions",
-    "join_spatial_grid_pairs",
-    "sql_lateral_topn_per_nation",
-    "agg_bloom_filter_semijoin",
-    "agg_countmin_estimate",
-    "agg_mann_whitney_u",
-    "graph_association_rules",
-    "ml_power_iteration_step",
-    "agg_rfm_segmentation",
-    "ml_feature_hashing",
-    "pipeline_schema_profile",
-    "agg_welch_t_test",
-    "agg_poisson_bootstrap",
-    "sim_pq_codebook_stats",
-    "cdc_point_in_time_join",
-    "graph_linkpred_adamic_adar",
-    "dedup_minhash_estimate_accuracy",
-    "text_textrank_keywords",
-    "ml_decision_stump",
-    "sim_ann_ivfpq_topk",
-    "sim_random_projection_jl",
-    "graph_boruvka_round",
-    "sim_hard_negatives",
-    "cdc_sequence_gap_detect",
-    "ml_naive_bayes_apply",
-    "pipeline_negative_sampling",
-    "agg_bayes_ab_posterior",
-    "text_distribution_drift_js",
-    "agg_capture_recapture",
-    "agg_tail_index_hill",
-    "agg_winsorized_mean",
-    "pipeline_temporal_split",
-    "tw_time_to_conversion",
-    "agg_mutual_information",
-    "scalar_base64_functions",
-    "graph_hits_step",
-    "pipeline_dataset_fingerprint",
-    "sql_filtered_aggregates",
-    "ml_classifier_metrics",
-    "agg_simpson_diversity",
-    "win_rolling_slope",
-    "pipeline_temperature_mixture",
-]
-
-
-# Queries registered for the first time DURING round 7 — they fill the
-# remaining 50 - 46 = 4 round-7 window slots. Overflow (and any query whose
-# oracle changes after its last driver row) starts _ROUND8_NEW per the
-# standing policy.
-_ROUND7B_NEW: list = [
-    # oracle changed in r7 (hub cap became part of the operator's
-    # semantics — VERDICT r6 "What's wrong" #2), so it re-enters the
-    # window per the standing policy:
-    "graph_linkpred_common_neighbors",
-    # registered for the first time in round 7:
-    "ml_ols_normal_equation",
-    "ml_nearest_centroid_classifier",
-    "pipeline_proportional_sample",
-]
-
-
-# ROUND-8 WINDOW (promoted to the front of all_specs() at the start of
-# round 8 per the standing policy): the 11 queries registered after the
-# round-7 window filled, all sweep-green in PARITY_SWEEP.json but never
-# driver hash-checked. 50 - 11 = 39 slots remain for round-8 additions
-# (_ROUND8B_NEW below).
-_ROUND8_NEW: list = [
-    "scalar_xml_functions",
-    "sql_pivot_unpivot_roundtrip",
-    "cdc_materialized_join_view",
-    "dedup_threshold_sweep",
-    "sim_ann_ivfpq_probe_sweep",
-    "sql_pipe_syntax_query",
-    "sql_session_variables",
-    "sql_group_by_all",
-    "scalar_try_functions",
-    "tw_session_gap_sweep",
-    "mm_payload_near_dedup",
-]
-
-
-# Queries registered for the first time DURING round 8 — appended after
-# _ROUND8_NEW so they get driver rows in the same round they land.
-# Capacity: 50 - 11 = 39 slots; overflow starts _ROUND9_NEW per the
-# standing policy.
-_ROUND8B_NEW: list = [
-    "sim_ann_ivfpq_rerank_topk",
-    "sim_ann_ivfpq_rerank_full_probe",
-    "cdc_materialized_join_agg",
-    "cdc_ooo_profile_stream_state",
-    "agg_spearman_rho",
-    "agg_kendall_tau",
-    "agg_cramers_v",
-    "agg_anova_f",
-    "ml_covariance_matrix",
-    "sim_ann_ivfpq_residual_topk",
-    "text_hybrid_rrf_fusion",
-    # renamed r9 from ml_knn_classifier_accuracy (VERDICT r8 "what's
-    # wrong #3" — same query/oracle/values; its CORRECTNESS_r08 driver
-    # row is under the old name):
-    "ml_knn_vote_pipeline",
-    "pipeline_bloom_decontaminate",
-    "tw_lateness_histogram",
-    "mm_content_defined_chunks",
-    "agg_wilson_interval",
-    "mm_payload_byte_entropy",
-    "sql_identifier_templating",
-    "agg_bitmap_distinct",
-    "win_gaps_islands",
-    "text_ngram_novelty_rate",
-    "sim_ivf_index_append_recall",
-    "cdc_watermark_rec_stream_state",
-    "pipeline_rendezvous_sharding",
-    "sql_scalar_udf_functions",
-    "agg_approx_percentile_contract",
-    "graph_greedy_matching_round",
-    "tw_max_drawdown",
-    "pipeline_dataset_version_diff",
-    "agg_sampled_mean_hoeffding",
-    "cdc_consumer_log_landing",
-    "cdc_consumer_mirror_state",
-    "sql_collated_distinct",
-    "cdc_consumer_dlq_accounting",
-    "text_token_burstiness",
-]
-
-
-# ROUND-9 WINDOW (started with round 9's FIRST commit per VERDICT r8 task
-# #1 — fronting it before any r9 query lands means the driver window stops
-# re-hashing the already-green r8 entries the moment new queries appear).
-# Queries registered for the first time DURING round 9 are appended here
-# as they land; capacity 50, overflow starts _ROUND10_NEW per the
-# standing policy.
-_ROUND9_NEW: list = [
-    "dedup_common_substring_pairs",
-    "sim_ann_opq_topk",
-    "cdc_consumer_scd2_intervals",
-    "text_mattr_sliding_ttr",
-    "text_rouge2_pairs",
-    "text_edit_distance_pairs",
-    "text_cooccurrence_window",
-    "dedup_substring_containment_docs",
-    "dedup_suffix_prefix_overlap",
-    "ml_roc_auc_exact",
-    "ml_calibration_bins",
-    "graph_katz_centrality_2step",
-    "cdc_log_compaction_report",
-    "cdc_replay_idempotence",
-    "cdc_props_stats_drift",
-    "tw_vwap_daily",
-    "tw_bollinger_bands",
-    "tw_kaplan_meier",
-    "agg_cohens_kappa",
-    "agg_odds_ratio_ci",
-    "agg_herfindahl_index",
-    "agg_jackknife_ratio_variance",
-    "agg_brown_forsythe",
-    "win_rolling_median",
-    "win_rank_shift_leaderboard",
-    "pipeline_dedup_keep_best",
-    "pipeline_shard_size_planner",
-    "mm_magic_bytes_sniff",
-    "scalar_lambda_functions",
-    "sql_named_window_reuse",
-    "sql_star_except_projection",
-    "agg_tukey_fences_outliers",
-    "graph_edge_embeddedness",
-    "text_query_likelihood_dirichlet",
-    "text_phrase_positional_search",
-    "sim_pair_distance_histogram",
-    "mm_chunk_store_savings",
-    "agg_trimmed_mean",
-    "sql_values_inline_lookup",
-    "pipeline_tokenizer_fertility",
-    "pipeline_dataset_card_stats",
-    "win_running_distinct_users",
-    "graph_avg_neighbor_degree_curve",
-    "win_skyline_pareto",
-    "agg_g_test_independence",
-    "agg_morans_i",
-    "tw_autocorrelation_daily",
-    "graph_two_hop_reach",
-    "dedup_family_size_histogram",
-    "sim_triplet_margin_stats",
-]
-
-
-# ROUND-10 WINDOW (started with round 10's FIRST commit per VERDICT r9
-# task #1 — the 8 seeds registered after the r9 window froze get their
-# first driver rows now). Queries registered for the first time DURING
-# round 10 are appended here as they land; capacity 50, overflow starts
-# _ROUND11_NEW per the standing policy.
-_ROUND10_NEW: list = [
-    "agg_wilcoxon_signed_rank",
-    "tw_theil_sen_slope",
-    "graph_rich_club_coefficient",
-    "cdc_markov_entropy_rate",
-    "ml_pr_curve_points",
-    "agg_kruskal_wallis",
-    "graph_modularity_labelprop",
-    "text_burrows_delta",
-    # -- re-oracled r10 (ADVICE r9: lag -> lead so next_lower_cents is
-    #    actually the next lower revenue; the r9 driver row hashed the
-    #    inverted semantics):
-    "sql_named_window_reuse",
-    # -- mergeable-sketch aggregation family (VERDICT r9 task #2):
-    "agg_mergeable_quantile_sketch",
-    "agg_quantile_sketch_hierarchical",
-    "agg_misra_gries_topk",
-    # -- streaming twin of the ExactSubstr tier (VERDICT r9 task #3):
-    "dedup_substring_index_stream",
-    # -- in-flight Bloom decontamination drive (VERDICT r9 task #4):
-    "pipeline_bloom_decontam_stream",
-    # -- the two standing no_oracle rows, re-contracted with FULL
-    #    pipeline oracles via the portable md5-prefix hash (VERDICT r9
-    #    task #5 — 0 no_oracle rows remain):
-    "dedup_minhash_lsh_pairs",
-    "dedup_minhash_tiered_pairs",
-    # -- round-10 statistics wave (stats2.py):
-    "agg_mann_kendall_trend",
-    "agg_friedman_test",
-    "agg_cochran_q",
-    "agg_mcnemar_paired",
-    "agg_cliff_delta",
-    "agg_grubbs_outlier",
-    "agg_hodges_lehmann_shift",
-    # -- round-10 timeseries wave:
-    "tw_ljung_box",
-    "tw_seasonality_strength",
-    "tw_holt_double_smoothing",
-    # -- round-10 eval/graph/text/curation wave (llm_ops3.py):
-    "ml_brier_decomposition",
-    "ml_lift_gains_deciles",
-    "graph_harmonic_2hop",
-    "text_heaps_law_fit",
-    "text_ngram_novelty_curve",
-    "text_source_keyword_tfidf",
-    "pipeline_importance_weights_ess",
-    # -- round-10 wave 3: scale tests, sketch streaming twins, the
-    #    catalog consumer drive, fairness allocator, MCC, HLL algebra:
-    "agg_ansari_bradley",
-    "agg_anderson_darling_2samp",
-    "ml_matthews_mcc",
-    "agg_hll_intersection_bound",
-    "pipeline_quota_water_filling",
-    "pipeline_quantile_sketch_stream",
-    "pipeline_mg_sketch_stream",
-    "cdc_consumer_catalog_landing",
-    # -- round-10 wave 4: EDF trio completion, drift/variance eval,
-    #    recurrent + fractal timeseries, LSH planning, PQ modes:
-    "agg_cramer_von_mises",
-    "ml_psi_population_stability",
-    "ml_auc_delong_variance",
-    "tw_dominant_period_acf",
-    "tw_page_hinkley",
-    "tw_hurst_rescaled_range",
-    "dedup_lsh_param_planner",
-    "sim_pq_sdc_vs_adc",
-    # -- round-10 wave 5 (the 50th and final slot): retrieval-quality
-    #    evaluation opens with graded-relevance nDCG@10:
-    "ml_ndcg_at_k",
-]
-
-
-# ROUND-11 WINDOW SEEDS — queries registered after the round-10 window
-# hit its 50-query capacity. Green in the committed sweep now; they get
-# their first driver rows when round 11 opens with
-# `(11, _ROUND11_NEW)` in WINDOW_HISTORY (the standing policy — same
-# as the r9->r10 seed handoff).
-_ROUND11_NEW: list = [
-    # -- wave 5 overflow: MAP/MRR, binary + Matryoshka ANN, the
-    #    lexical-richness estimators, Durbin-Watson:
-    "ml_map_mrr_retrieval",
-    "sim_hamming_sign_topk",
-    "sim_matryoshka_prefix_recall",
-    "text_yule_k",
-    "text_good_turing_smoothing",
-    "text_chao1_vocab_richness",
-    "tw_durbin_watson",
-    # -- wave 6: market/regression diagnostics, ordered-alternative +
-    #    variance-homogeneity tests, calibration-error rollup, graph
-    #    censuses:
-    "tw_variance_ratio_test",
-    "tw_chow_break_test",
-    "tw_sample_entropy",
-    "agg_jonckheere_terpstra",
-    "agg_bartlett_test",
-    "ml_expected_calibration_error",
-    "graph_diamond_census",
-    "graph_wcc_minlabel_3round",
-    # -- wave 7: normality/effect-size/operating-point eval, turning
-    #    points, centralization, self-BLEU, binary-ANN recall, LATERAL:
-    "agg_jarque_bera",
-    "ml_cohens_d_effect",
-    "ml_best_f1_threshold",
-    "tw_turning_points_test",
-    "graph_degree_centralization",
-    "text_self_bleu2",
-    "sim_hamming_recall_topk",
-    "sql_lateral_topk_per_customer",
-    # -- wave 8: Mood/overdispersion/seasonal-MK, SMA crossovers,
-    #    log-loss + regression eval, power-law MLE, silhouette:
-    "agg_mood_median_test",
-    "agg_poisson_dispersion_test",
-    "tw_seasonal_mann_kendall",
-    "tw_sma_crossover_signals",
-    "ml_log_loss_calibrated",
-    "ml_regression_metrics",
-    "graph_degree_powerlaw_mle",
-    "sim_silhouette_by_label",
-    # -- wave 9: unit root + PACF, Levene-mean, RBO rank agreement,
-    #    hash uniformity, multiclass PRF, token Gini, HLL stream:
-    "tw_adf_t_stat",
-    "tw_pacf_lag2",
-    "agg_levene_mean",
-    "ml_rank_biased_overlap",
-    "pipeline_hash_uniformity_check",
-    "ml_multiclass_confusion_prf",
-    "pipeline_token_gini_by_source",
-    "pipeline_hll_register_stream",
-    # -- wave 10: two shared-text SQL surfaces new to Spark 4:
-    "sql_recursive_cte_reach",
-    "sql_grouping_sets_flags",
-    # -- round-11 additions (the 9 open slots). VERDICT r10 task #2:
-    #    the portable (md5-prefix, fully value-oracled) LSH form gets
-    #    its own name, and the original name returns to the xxhash64
-    #    production plan (rows-only + recall-twinned) so the core-15
-    #    bench tracks the 100 TB plan; the original re-enters the
-    #    window because its oracle contract changed after its r10 row:
-    "dedup_minhash_lsh_pairs_portable",
-    "dedup_minhash_lsh_pairs",
-    # -- the two deep operators VERDICT r10 tasks #5/#6 asked for: the
-    #    real multi-round tokenizer-training loop and SemDeDup-tier
-    #    embedding dedup over the IVF cell structure:
-    "pipeline_bpe_train_k_rounds",
-    "dedup_semdedup_prune",
-    # -- the round's closing wave (window now exactly full at 50):
-    #    the tokenizer ENCODE pass over the trained vocab, the
-    #    mergeable bottom-k sampling sketch, 4-truss peeling, the
-    #    AdaBoost loop over stumps, and the SemDeDup ingest twin:
-    "pipeline_bpe_apply_encode",
-    "agg_bottomk_sample_merge",
-    "graph_ktruss_peel_rounds",
-    "ml_adaboost_stumps_2rounds",
-    "dedup_semdedup_stream",
-]
-
-
-# ROUND-12 WINDOW — opened as the round's first commit per VERDICT r11
-# task #1. Seeded with the two queries registered after the round-11
-# window closed (both sweep-green, awaiting their first driver hash);
-# round-12 additions append below as they land.
-_ROUND12_NEW: list = [
-    # the production dedup pipeline composed end-to-end (exact ->
-    # containment -> LSH) with every survivor handoff id-sum-pinned:
-    "pipeline_dedup_tiers_composed",
-    # packing-order quality: arrival-order greedy vs next-fit-
-    # decreasing through the same Arrow kernel, both walks replayed
-    # by recursive-CTE oracles:
-    "pipeline_pack_nfd_vs_greedy",
-    # the full curation DAG composed end-to-end (VERDICT r11 task #2):
-    # exact -> containment -> LSH -> SemDeDup -> Bloom decontam ->
-    # quality/lang filter -> water-fill quota -> packing, every
-    # handoff id-sum-pinned, the oracle replaying all eight stages:
-    "pipeline_curation_e2e",
-    # the tokenizer-training loop closed against the eval stack
-    # (VERDICT r11 task #6): fertility under the LEARNED merges:
-    "pipeline_bpe_fertility_eval",
-    # SemDeDup x IVF lifecycle (VERDICT r11 task #4): frozen-centroid
-    # ingest vs full re-centroid rebuild on the 90/10 append split,
-    # per-vector cell drift + both drop decisions pinned:
-    "dedup_semdedup_recentroid_maintenance",
-    # the curation gate at INGEST time — the e2e DAG's filter stages
-    # through the checkpointed foreachBatch drive, four gates per
-    # arrival, admits appended to the standing md5 index per epoch:
-    "pipeline_curation_ingest_stream",
-    # the training manifest: packed bins + utilization stats + the
-    # deterministic md5 epoch-shuffle position (two-pass global rank):
-    "pipeline_pack_manifest_shuffle",
-    # packing economics at a tight budget: pack-whole (truncation
-    # overflow) vs split-into-chunks, padding/overflow/bins pinned:
-    "pipeline_pack_split_vs_truncate",
-]
-
-
-# ROUND-13 WINDOW — opened as the round's first commit per VERDICT r12
-# task #1. No queries were registered after the round-12 window closed,
-# so the window opens with the one hygiene re-entry VERDICT r12 "What's
-# wrong #1" called out; round-13 additions append below as they land.
-_ROUND13_NEW: list = [
-    # renamed in r9 from ml_knn_classifier_accuracy (same query, oracle
-    # and values — queries/llm_ops2.py); its only driver row
-    # (CORRECTNESS_r08) is under the old name, so 12 rounds in it has
-    # never been externally hashed under its live name. Re-windowed to
-    # close that loop (VERDICT r12 "What's wrong #1"):
-    "ml_knn_vote_pipeline",
-    # the STREAMING curation DAG end-to-end (VERDICT r12 task #2):
-    # standing-index dedup tiers + the shared set-global tail through
-    # one checkpointed multi-epoch drive, the 8-stage cascade pinned
-    # per epoch EQUAL to the batch DAG on that epoch's corpus prefix
-    # (oracle = three prefix-scoped replays of the batch chain):
-    "pipeline_curation_stream_e2e",
-    # BPE training driven to a TARGET VOCAB SIZE (VERDICT r12 task #4):
-    # the production stopping rule, 20 guarded oracle rounds with the
-    # stop condition part of the value hash:
-    "pipeline_bpe_train_to_vocab",
-    # the mirror-table MERGE parity drill (VERDICT r12 task #5): the
-    # reference's manual c/u/d scenario at fixture scale through the
-    # bucketed MERGE sink under a checkpointed stream, per-epoch mirror
-    # trajectory + apply_changes symmetric-diff pinned at 0:
-    "cdc_mirror_merge_replay",
-]
-
-
-# Queries registered for the first time DURING round 6 — appended to the
-# r6 front (after _ROUND6_NEW's 21) so they get driver rows in the same
-# round they land. Capacity: 50 - 21 = 29 slots.
-_ROUND6B_NEW: list = [
-    "agg_entropy_per_group",
-    "agg_chi_square_cells",
-    "agg_ks_two_sample",
-    "agg_weighted_median",
-    "agg_theil_index",
-    "graph_local_clustering",
-    "graph_linkpred_common_neighbors",
-    "graph_degree_assortativity",
-    "tw_ewma_trailing",
-    "tw_cusum_changepoint",
-    "tw_cross_correlation_lags",
-    "sim_range_search",
-    "sim_topk_per_label",
-    "text_lexical_diversity",
-    "text_char_ngram_profile",
-    "text_collocations_pmi",
-    "text_rake_keywords",
-    "scalar_ip_cidr_functions",
-    "pipeline_epoch_shuffle",
-    "ml_naive_bayes_train",
-    "ml_logreg_grad_step",
-    "mm_payload_dedup",
-    "tw_peak_detection",
-    "tw_runs_profile",
-    "win_streak_lengths",
-    "pipeline_kfold_assignment",
-    "scalar_haversine_distance",
-    "agg_geometric_mean",
-]
-
-
-# ---------------------------------------------------------------------------
-# WINDOW_HISTORY — the full driver-window rotation record (VERDICT r7
-# "What's wrong #3": the promote-on-round-N policy used to be a hand-edited
-# concatenation inside all_specs(); one typo away from wasting a 50-query
-# window). Newest round FIRST: all_specs() orders the registry by walking
-# this table top-down, so the current round's pending queries occupy the
-# driver's 50-slot window and every prior round's (already driver-green)
-# window rotates behind in reverse-chronological order. Rounds 1-3 rotated
-# ad-hoc lists that predate this file's bookkeeping; their queries simply
-# fall through to registration order at the back.
-WINDOW_HISTORY: list[tuple[int, list]] = [
-    (13, _ROUND13_NEW),
-    (12, _ROUND12_NEW),
-    (11, _ROUND11_NEW),
-    (10, _ROUND10_NEW),
-    (9, _ROUND9_NEW),
-    (8, _ROUND8_NEW + _ROUND8B_NEW),
-    (7, _ROUND7_NEW + _ROUND7B_NEW),
-    (6, _ROUND6_NEW + _ROUND6B_NEW),
-    (5, _ROUND5_FRONT + _ROUND5_NEW),
-    (4, _ROUND4_FRONT),
-]
-
-# Intentional window re-entries: a query whose ORACLE changed after its
-# last driver row re-enters the next round's window per the standing
-# policy (its old driver row hashed semantics that no longer exist).
-# Everything else must appear in exactly ONE window — enforced below.
-_REWINDOWED: dict[str, str] = {
-    # r6 window (first registration) AND r7 window (the hub cap became
-    # part of the operator's semantics in r7 — VERDICT r6 weak item):
-    "graph_linkpred_common_neighbors": "re-oracled r7 (hub cap)",
-    # r9 window (first registration) AND r10 window (ADVICE r9: the
-    # lag/lead inversion fix changed the hashed values):
-    "sql_named_window_reuse": "re-oracled r10 (lag -> lead fix)",
-    # r10 window (full portable-md5 value oracle) AND r11 window (the
-    # value oracle moved to dedup_minhash_lsh_pairs_portable; this name
-    # reverted to the xxhash64 production plan, rows-only + recall-
-    # twinned — VERDICT r10 "What's wrong #2"):
-    "dedup_minhash_lsh_pairs": "re-contracted r11 (bench re-point to xxhash64)",
-    # r8 window (as ml_knn_classifier_accuracy, hashed r8 under the OLD
-    # name) AND r13 window (first external hash under the live name —
-    # VERDICT r12 "What's wrong #1"; query/oracle/values unchanged):
-    "ml_knn_vote_pipeline": "re-windowed r13 (first hash under post-rename name)",
-}
-
-
-def _window_order() -> list[str]:
-    """Flatten WINDOW_HISTORY (newest round first) into the registry
-    ordering, asserting the windows are pairwise disjoint except for
-    explicitly whitelisted re-oracled entries."""
-    order: list[str] = []
-    seen: dict[str, int] = {}
-    for rnd, names in WINDOW_HISTORY:
-        assert len(names) <= 50, (
-            f"round-{rnd} window lists {len(names)} queries but the driver "
-            f"checks only the first 50 — the overflow would silently never "
-            f"get a driver row; start _ROUND{rnd + 1}_NEW instead"
-        )
-        assert len(set(names)) == len(names), (
-            f"round-{rnd} window has internal duplicates: "
-            f"{[n for n in names if names.count(n) > 1]}"
-        )
-        for n in names:
-            if n in seen:
-                assert n in _REWINDOWED, (
-                    f"{n!r} appears in both the round-{seen[n]} and "
-                    f"round-{rnd} windows without a _REWINDOWED entry — "
-                    f"either a paste error (wasting a window slot) or an "
-                    f"undocumented re-oracle"
-                )
-                continue  # ordering keeps the newest round's position
-            seen[n] = rnd
-            order.append(n)
-    return order
-
-
 def all_specs() -> dict[str, QuerySpec]:
     """Import all query modules (side effect: registration) and return the
-    full registry, ordered by ``WINDOW_HISTORY`` (current round's pending
-    queries first — the driver hash-checks the first 50 entries)."""
+    full registry in registration order. Nothing may depend on that
+    order: look queries up by name."""
     from . import (  # noqa: F401
         tpch,
         tpch2,
@@ -793,12 +81,4 @@ def all_specs() -> dict[str, QuerySpec]:
         curation_e2e,
     )
 
-    order = _window_order()
-    missing = [n for n in order if n not in _REGISTRY]
-    assert not missing, (
-        f"WINDOW_HISTORY names queries that are not registered: {missing} "
-        f"— a typo here would waste driver-window slots"
-    )
-    front = {n: _REGISTRY[n] for n in order}
-    rest = {n: s for n, s in _REGISTRY.items() if n not in front}
-    return {**front, **rest}
+    return dict(_REGISTRY)

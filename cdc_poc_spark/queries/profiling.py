@@ -5,11 +5,6 @@ operator runs BEFORE trusting data or launching heavy algorithms.
 
 Reference parity: the reference (thanminh24/CDC_POC) ships no analytics
 (SURVEY.md §2); these extend the engine per the north-star brief.
-
-Added after the round-5 driver window froze (the 50 slots were full) —
-fronted for the ROUND-6 window via `_ROUND6_NEW` in queries/__init__.py
-per the standing rotation policy; value-checked continuously by the
-full-registry sweep regardless.
 """
 
 from __future__ import annotations

@@ -579,10 +579,8 @@ WINDOW w AS (PARTITION BY o_year ORDER BY revenue_cents DESC, n_name)
 # ^ the WINDOW clause (named-window reuse across multiple functions —
 # one sort/shuffle declared once) is the same ANSI text in BOTH
 # engines; the rank and the lead provably share one window definition.
-# ADVICE r9: the window orders revenue_cents DESC, so lead() — not
-# lag() — is the NEXT LOWER revenue the column name promises (the r9
-# driver row hashed the inverted lag semantics; re-windowed in r10 per
-# the _REWINDOWED policy).
+# The window orders revenue_cents DESC, so lead() — not lag() — is the
+# NEXT LOWER revenue the column name promises.
 
 
 @register(

@@ -17,8 +17,8 @@ Reference anti-patterns fixed (SURVEY §4 last row):
   distinct().collect() of the routing column (tiny cardinality), and
   only in mirror mode
 - the `TODO: Switch to MERGE INTO` (consumer.py:76) -> mirror mode
-  actually merges (cdc.apply.merge_into_parquet; a transactional
-  catalog swaps in SQL MERGE with the same batch contract)
+  actually merges (cdc.apply.merge_into_parquet_bucketed; a
+  transactional catalog swaps in SQL MERGE with the same batch contract)
 """
 
 from __future__ import annotations
@@ -51,12 +51,10 @@ class CDCConsumer:
     checkpoint_dir: str
     #: mirror mode needs per-table specs; log mode needs none
     tables: dict[str, TableSpec] = field(default_factory=dict)
-    #: >0 switches the mirror merge to the bucketed partition-pruned
-    #: path (cdc_apply.merge_into_parquet_bucketed): per-batch cost
-    #: O(touched buckets), not O(state) — the setting for large mirrors.
-    #: Default 64: a small CDC batch rewrites only its touched buckets
-    #: (O(batch)), never the whole mirror — the production setting;
-    #: 0 opts into the single-directory full-rewrite path for tiny state.
+    #: key buckets of each mirror's partition-pruned merge
+    #: (cdc_apply.merge_into_parquet_bucketed): a small CDC batch
+    #: rewrites only the buckets its keys hash into, never the whole
+    #: mirror — per-batch cost O(touched buckets), not O(state)
     mirror_buckets: int = 64
     #: when set, unparseable records (null/malformed/op-less envelopes)
     #: are quarantined to this parquet dir instead of poisoning the
@@ -68,6 +66,10 @@ class CDCConsumer:
     #: dynamic-table branch (consumer.py:75-78) against spark_catalog
     #: instead of an Iceberg catalog
     catalog_db: str | None = None
+
+    def __post_init__(self) -> None:
+        if self.mirror_buckets < 1:
+            raise ValueError(f"mirror_buckets must be >= 1, got {self.mirror_buckets}")
 
     def _quarantine(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         """Split off dead letters (if a DLQ is configured) and return the
@@ -152,18 +154,11 @@ class CDCConsumer:
                     F.col("_cdc.offset").alias("seq"),
                 ).drop("_cdc")
                 target = os.path.join(self.warehouse_dir, "mirror", tbl)
-                if self.mirror_buckets > 0:
-                    cdc_apply.merge_into_parquet_bucketed(
-                        self._spark(batch_df), target, typed,
-                        list(spec.key_cols), seq_col="seq", op_col="op",
-                        delete_ops=("D",), n_buckets=self.mirror_buckets,
-                    )
-                else:
-                    cdc_apply.merge_into_parquet(
-                        self._spark(batch_df), target, typed,
-                        list(spec.key_cols), seq_col="seq", op_col="op",
-                        delete_ops=("D",),
-                    )
+                cdc_apply.merge_into_parquet_bucketed(
+                    self._spark(batch_df), target, typed,
+                    list(spec.key_cols), seq_col="seq", op_col="op",
+                    delete_ops=("D",), n_buckets=self.mirror_buckets,
+                )
         finally:
             batch_df.unpersist()
 
@@ -311,8 +306,17 @@ class CDCConsumer:
         )
 
     def read_mirror(self, spark, table_name: str) -> DataFrame:
-        if self.mirror_buckets > 0:
-            return cdc_apply.read_bucketed_state(
-                spark, os.path.join(self.warehouse_dir, "mirror", table_name)
-            )
-        return spark.read.parquet(os.path.join(self.warehouse_dir, "mirror", table_name))
+        """Current state of one mirrored table: its row columns plus the
+        ``op``/``seq`` of each key's last change. A mirror whose keys were
+        all deleted holds no bucket, so it reads as zero rows."""
+        target = os.path.join(self.warehouse_dir, "mirror", table_name)
+        if cdc_apply.has_bucketed_state(target):
+            return cdc_apply.read_bucketed_state(spark, target)
+        schema = T.StructType(
+            [
+                *self.tables[table_name].schema.fields,
+                T.StructField("op", T.StringType()),
+                T.StructField("seq", T.LongType()),
+            ]
+        )
+        return spark.createDataFrame([], schema)

@@ -5,7 +5,8 @@ engine drops below built-in aggregations into explicit state).
 ``stateful_current_state`` maintains CDC current-state per primary key
 *incrementally in the stream* — the third resolution of the reference's
 `TODO: Switch to MERGE INTO` (consumer.py:76) next to window-dedup
-(cdc/apply.py:apply_changes) and idempotent MERGE (merge_into_parquet):
+(cdc/apply.py:apply_changes) and idempotent MERGE
+(merge_into_parquet_bucketed):
 
 - state per key     = (seq, alive, after-image)  — O(keys), not O(events)
 - per batch         = last-writer-wins by monotonic seq (Kafka offset /

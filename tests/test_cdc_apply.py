@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from cdc_poc_spark.cdc import apply as cdc_apply
 from cdc_poc_spark.cdc import envelope as env
+from cdc_poc_spark.streaming.consumer import CDCConsumer, TableSpec
 
 ACCOUNT_SCHEMA = T.StructType(
     [
@@ -180,11 +181,13 @@ def test_merge_is_idempotent_under_redelivery(spark, typed_log):
 
 def test_merge_into_parquet_roundtrip(spark, typed_log, tmp_path):
     target = str(tmp_path / "mirror")
-    cdc_apply.merge_into_parquet(spark, target, typed_log.filter("seq <= 2"), ["user_id"])
-    cdc_apply.merge_into_parquet(
-        spark, target, typed_log.filter("seq BETWEEN 3 AND 5"), ["user_id"]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, typed_log.filter("seq <= 2"), ["user_id"], n_buckets=4
     )
-    state = spark.read.parquet(target)
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, typed_log.filter("seq BETWEEN 3 AND 5"), ["user_id"], n_buckets=4
+    )
+    state = cdc_apply.read_bucketed_state(spark, target)
     assert {(r.user_id, r.email) for r in state.collect()} == {
         (1, "alice@example.com"),
         (2, "bob@example.com"),
@@ -192,8 +195,41 @@ def test_merge_into_parquet_roundtrip(spark, typed_log, tmp_path):
         (4, "derek@example.com"),
         (5, "emma@example.com"),
     }
-    cdc_apply.merge_into_parquet(spark, target, typed_log.filter("seq >= 6"), ["user_id"])
-    assert spark.read.parquet(target).count() == 0
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, typed_log.filter("seq >= 6"), ["user_id"], n_buckets=4
+    )
+    assert not cdc_apply.has_bucketed_state(target)
+
+
+def test_mirror_survives_delete_all(spark, scenario, tmp_path):
+    """Reference manual/003: an unqualified DELETE FROM empties
+    commerce.account, and later inserts must still merge. The emptied
+    mirror keeps no bucket directory and reads as zero rows with the
+    table's columns."""
+    c = CDCConsumer(
+        str(tmp_path / "wh"),
+        str(tmp_path / "ck"),
+        tables={"commerce_account": TableSpec(ACCOUNT_SCHEMA, ("user_id",))},
+        mirror_buckets=4,
+    )
+    c.merge_mirror_batch(scenario.filter("offset <= 5"), 0)
+    assert c.read_mirror(spark, "commerce_account").count() == 5
+    c.merge_mirror_batch(scenario.filter("offset >= 6"), 1)
+    empty = c.read_mirror(spark, "commerce_account")
+    assert empty.count() == 0
+    reinsert = spark.createDataFrame(
+        [_env("c", None, _row(6, "frank@example.com"), 5000, 11)],
+        "value string, topic string, offset long",
+    )
+    c.merge_mirror_batch(reinsert, 2)
+    state = c.read_mirror(spark, "commerce_account")
+    assert [(r.user_id, r.email) for r in state.collect()] == [(6, "frank@example.com")]
+    assert empty.dtypes == state.dtypes
+
+
+def test_mirror_buckets_must_be_positive(tmp_path):
+    with pytest.raises(ValueError, match="mirror_buckets"):
+        CDCConsumer(str(tmp_path / "wh"), str(tmp_path / "ck"), mirror_buckets=0)
 
 
 def test_schema_evolution_merge(spark, typed_log):

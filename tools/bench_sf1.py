@@ -23,7 +23,6 @@ import json
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -55,16 +54,9 @@ def main() -> None:
             walls, exts = [], []
             for _ in range(n):
                 jvm_gc()
-                busy0, tree0 = bench._cpu_jiffies()
-                t0 = time.perf_counter()
-                bench._force(specs[name].fn(spark, sf_dir))
-                wall = time.perf_counter() - t0
-                busy1, tree1 = bench._cpu_jiffies()
-                d_busy = max(busy1 - busy0, 1)
-                d_tree = max(tree1 - tree0, 0)
-                exts.append(round(min(max(d_busy - d_tree, 0) / d_busy, 1.0), 3))
+                wall, ext = bench._timed_sample(spark, specs[name].fn, sf_dir)
                 walls.append(wall)
-                spark.catalog.clearCache()
+                exts.append(ext)
             row[key] = {
                 "min_sec": round(min(walls), 3),
                 "samples": [round(w, 3) for w in walls],

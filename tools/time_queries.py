@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -44,16 +43,9 @@ def main() -> None:
         for _ in range(n):
             jvm_gc()
             spark.sparkContext.setJobDescription(f"timed: {name}")
-            busy0, tree0 = bench._cpu_jiffies()
-            t0 = time.perf_counter()
-            bench._force(fn(spark, sf_dir))
-            wall = time.perf_counter() - t0
-            busy1, tree1 = bench._cpu_jiffies()
-            d_busy = max(busy1 - busy0, 1)
-            d_tree = max(tree1 - tree0, 0)
-            exts.append(round(min(max(d_busy - d_tree, 0) / d_busy, 1.0), 3))
+            wall, ext = bench._timed_sample(spark, fn, sf_dir)
             ts.append(wall)
-            spark.catalog.clearCache()
+            exts.append(ext)
         spark.sparkContext.setJobDescription(None)
         results[name] = (min(ts), ts, max(exts))
         print(
