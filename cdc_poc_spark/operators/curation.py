@@ -55,6 +55,81 @@ def word_ngrams(toks: str, n: int) -> F.Column:
     ).otherwise(F.expr("array()"))
 
 
+# Bloom decontamination contract, shared by the batch query, the curation
+# DAG's stage 5, the streaming screen and their DuckDB oracles.
+BDC_M = 1 << 18  # bloom bits
+BDC_K = 4        # hash functions
+BDC_N = 8        # word n-gram width
+
+
+def _bloom_pos(m: int) -> F.Column:
+    """Engine-portable Bloom position of (j, gram): the first 8 hex
+    digits of md5('bdc' || j || ':' || gram) mod m, so DuckDB can
+    rebuild the identical bit-set."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.lit("bdc"),
+                        F.col("j").cast("string"),
+                        F.lit(":"),
+                        F.col("gram"),
+                    )
+                ),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % m
+    )
+
+
+def _bloom_js(k: int) -> F.Column:
+    return F.explode(F.array(*[F.lit(j) for j in range(k)])).alias("j")
+
+
+def tagged_grams(docs: DataFrame, n: int = BDC_N) -> DataFrame:
+    """Distinct (doc_id, __is_bench, gram) word n-grams of a corpus whose
+    src0 slice is the benchmark."""
+    return (
+        spread(docs)
+        .withColumn("toks", F.split(F.col("text"), " "))
+        .select(
+            "doc_id",
+            (F.col("source") == "src0").alias("__is_bench"),
+            F.explode(word_ngrams("toks", n)).alias("gram"),
+        )
+        .distinct()
+    )
+
+
+def bloom_bits(bench: DataFrame, k: int = BDC_K, m: int = BDC_M) -> DataFrame:
+    """The distinct Bloom bit positions (pos) of a gram relation: at
+    most m rows, small enough to broadcast to every corpus scan."""
+    return (
+        bench.select("gram", _bloom_js(k)).select(_bloom_pos(m).alias("pos")).distinct()
+    )
+
+
+def bloom_suspects(
+    cand: DataFrame, bits: DataFrame, k: int = BDC_K, m: int = BDC_M
+) -> DataFrame:
+    """(doc_id, gram, hits) rows of a (doc_id, gram) relation whose k
+    probes all hit ``bits`` — a superset of the grams truly in the
+    benchmark (Bloom soundness), which alone pay the exact check."""
+    return (
+        cand.select("doc_id", "gram", _bloom_js(k))
+        .select("doc_id", "gram", _bloom_pos(m).alias("pos"))
+        .join(F.broadcast(bits), "pos")
+        .groupBy("doc_id", "gram")
+        .agg(F.count(F.lit(1)).alias("hits"))
+        .filter(F.col("hits") == k)
+    )
+
+
 def ngram_contamination(
     df: DataFrame,
     bench_pred: F.Column,

@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .curation import pack_greedy, word_ngrams
-from .scale import global_cumsum, global_index, spread
+from .curation import bloom_bits, bloom_suspects, pack_greedy, tagged_grams
+from .scale import global_cumsum, global_index, pin, spilled
 
 
 def stage4_semdedup(
@@ -47,9 +47,9 @@ def stage4_semdedup(
     emb_s3 = emb.join(
         s3.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left_semi"
     )
-    pruned = semdedup_prune_pairs(emb_s3).localCheckpoint(eager=True)
+    pruned = pin(semdedup_prune_pairs(emb_s3))
     dom4 = pruned.select(F.col("dropped_id").alias("doc_id")).distinct()
-    s4 = s3.join(dom4, "doc_id", "left_anti").localCheckpoint(eager=True)
+    s4 = pin(s3.join(dom4, "doc_id", "left_anti"))
     aux4 = (
         pruned.select("cell_id")
         .distinct()
@@ -67,78 +67,32 @@ def stage5_decontam(
 ) -> tuple[DataFrame, DataFrame]:
     """Two-tier Bloom decontamination of the non-src0 survivors
     against the src0 benchmark's word n-grams (n/k/m are the
-    _BDC_* contract constants). Returns (s5, aux5) where aux5 =
-    Bloom-FLAGGED docs (pins false-positive behavior)."""
-    from pyspark import StorageLevel
-
+    operators.curation BDC_* contract constants). Returns (s5, aux5)
+    where aux5 = Bloom-FLAGGED docs (pins false-positive behavior)."""
     # The distinct-gram relation feeds three job branches (the bloom
     # bits' bench side, the candidate side, and the exact-verify bench
-    # side inside the s5 pin) — unpersisted, the corpus explode ran
-    # once per branch. Cache it spillable + recomputable (it is
-    # corpus-sized — same rule as pipeline_bloom_decontaminate), with
-    # an eager materializing count so concurrent branches cannot race
-    # an empty cache; released after the pins below, so the streaming
-    # e2e twin (which replays this stage per epoch) cannot leak caches
-    # across batches.
-    grams = (
-        spread(docs)
-        .withColumn("toks", F.split(F.col("text"), " "))
-        .select(
-            "doc_id",
-            (F.col("source") == "src0").alias("__is_bench"),
-            F.explode(word_ngrams("toks", n)).alias("gram"),
+    # side inside the s5 pin) — uncached, the corpus explode ran
+    # once per branch. It is corpus-sized, so it is spilled, not pinned
+    # (same rule as pipeline_bloom_decontaminate), with an eager
+    # materializing count so concurrent branches cannot race an empty
+    # cache; released after the pins below, so the streaming e2e twin
+    # (which replays this stage per epoch) cannot leak caches across
+    # batches.
+    grams = tagged_grams(docs, n)
+    with spilled(grams):
+        grams.count()
+        bench = grams.filter(F.col("__is_bench")).select("gram").distinct()
+        cand = (
+            grams.filter(~F.col("__is_bench"))
+            .join(s4, "doc_id", "left_semi")
+            .select("doc_id", "gram")
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    grams.count()
-    bench = grams.filter(F.col("__is_bench")).select("gram").distinct()
-    cand = (
-        grams.filter(~F.col("__is_bench"))
-        .join(s4, "doc_id", "left_semi")
-        .select("doc_id", "gram")
-    )
-
-    def _pos():
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("bdc"),
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            F.col("gram"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % m
+        susp = pin(bloom_suspects(cand, bloom_bits(bench, k, m), k, m))
+        # only Bloom-positive grams pay the exact verification join
+        dom5 = (
+            susp.join(bench, "gram", "left_semi").select("doc_id").distinct()
         )
-
-    js = F.explode(F.array(*[F.lit(j) for j in range(k)])).alias("j")
-    bits = bench.select("gram", js).select(_pos().alias("pos")).distinct()
-    gp = cand.select("doc_id", "gram", js).select(
-        "doc_id", "gram", _pos().alias("pos")
-    )
-    susp = (
-        gp.join(F.broadcast(bits), "pos")
-        .groupBy("doc_id", "gram")
-        .agg(F.count(F.lit(1)).alias("hits"))
-        .filter(F.col("hits") == k)
-        .localCheckpoint(eager=True)
-    )
-    # only Bloom-positive grams pay the exact verification join
-    dom5 = (
-        susp.join(bench, "gram", "left_semi").select("doc_id").distinct()
-    )
-    s5 = s4.join(dom5, "doc_id", "left_anti").localCheckpoint(eager=True)
-    # every gram consumer has materialized through the pins above
-    grams.unpersist()
+        s5 = pin(s4.join(dom5, "doc_id", "left_anti"))
     aux5 = (
         susp.select("doc_id")
         .distinct()
@@ -158,18 +112,16 @@ def stage6_quality(
     docs_s5 = docs.join(s5, "doc_id", "left_semi")
     qual = text.quality_score(docs_s5).select("doc_id", "quality_score")
     lang = text.lang_id(docs_s5).select("doc_id", "pred_lang")
-    qf = (
+    qf = pin(
         qual.join(lang, "doc_id")
         .join(docs.select("doc_id", "lang"), "doc_id")
-        .localCheckpoint(eager=True)
     )
-    s6 = (
+    s6 = pin(
         qf.filter(
             (F.col("quality_score") >= quality_min)
             & (F.col("pred_lang") == F.col("lang"))
         )
         .select("doc_id")
-        .localCheckpoint(eager=True)
     )
     aux6 = qf.filter(F.col("quality_score") < quality_min).agg(
         F.count(F.lit(1)).cast("long").alias("aux")
@@ -187,14 +139,13 @@ def stage7_waterfill(
     Window.partitionBy(source) — one global two-pass cumsum in
     (source, doc_id) order minus each source's prefix offset (the r12
     scale fix, operators/scale.py:global_cumsum)."""
-    wf_tok = (
+    wf_tok = pin(
         docs.join(s6, "doc_id", "left_semi")
         .select(
             "doc_id",
             "source",
             F.size(F.split("text", " ")).cast("long").alias("n_tok"),
         )
-        .localCheckpoint(eager=True)
     )
     caps = wf_tok.groupBy("source").agg(
         F.sum("n_tok").cast("long").alias("cap")
@@ -226,7 +177,7 @@ def stage7_waterfill(
         .cast("long")
         .alias("p_star")
     )
-    sol = (
+    sol = pin(
         t.crossJoin(F.broadcast(lvl))
         .crossJoin(F.broadcast(p_star))
         .select(
@@ -234,7 +185,6 @@ def stage7_waterfill(
                 "CAST((budget - p_star) DIV (k - i_star) AS BIGINT)"
             ).alias("level")
         )
-        .localCheckpoint(eager=True)
     )
     alloc = caps.crossJoin(F.broadcast(sol)).select(
         "source", F.least(F.col("cap"), F.col("level")).alias("allocation")
@@ -243,12 +193,11 @@ def stage7_waterfill(
     src_off = global_cumsum(caps, "cap", ["source"], "ccum").select(
         "source", (F.col("ccum") - F.col("cap")).alias("src_off")
     )
-    s7 = (
+    s7 = pin(
         gcum.join(F.broadcast(src_off), "source")
         .join(F.broadcast(alloc), "source")
         .filter(F.col("gcum") - F.col("src_off") <= F.col("allocation"))
         .select("doc_id")
-        .localCheckpoint(eager=True)
     )
     aux7 = sol.select(F.col("level").cast("long").alias("aux"))
     return s7, aux7

@@ -23,6 +23,8 @@ import random
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .scale import pin, spilled
+
 #: Max members expanded per LSH/SimHash bucket. A bucket of m docs costs
 #: m(m-1)/2 pairs and an m-element collect_set in ONE task's agg buffer;
 #: an adversarial mega-bucket (boilerplate shingle sets, near-identical
@@ -247,6 +249,13 @@ def lsh_candidate_pairs(
 #: the verify).
 PPJOIN_PREFIX_C = 4
 
+#: Layout version of a persisted Jaccard index (build_jaccard_index),
+#: stored in its ``{name}_meta`` row and checked by every reader. Bump
+#: it whenever the stored prefix cut or token order changes. Version 2:
+#: the multi-prefix cut at sz − ceil(t·sz) + PPJOIN_PREFIX_C; indexes
+#: written before the version column existed carry none.
+JACCARD_INDEX_VERSION = 2
+
 
 def _token_order(common: list[int]):
     """Row-level expression builder for the fixed global token order
@@ -470,8 +479,6 @@ def exact_jaccard_pairs(
     spillable) rather than recomputed 3x — measured 3x wall on the
     fixture; the materialize-once step every published similarity-join
     pipeline has."""
-    from pyspark import StorageLevel
-
     eps = 1e-9
     sh = (
         with_shingles(df, text_col, n)
@@ -481,119 +488,116 @@ def exact_jaccard_pairs(
                 F.transform("shingles", lambda s: F.xxhash64(s))
             ).alias("hset"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # The cache must be materialized BEFORE the self-join below: its
-    # three consumers sit in independent stage branches of one job and
-    # would otherwise race the (empty) cache and recompute the shingle
-    # pipeline concurrently. The sampled-commons collect below is itself
-    # one full sequential scan of `sh`, so it doubles as the
-    # materializer — no separate count() job (one job saved per call).
-    # Prefix ORDER: any FIXED total order of tokens is correct; the
-    # selective choice demotes frequent tokens out of prefixes. The
-    # exact-frequency formulation (token-freq groupBy + tok join +
-    # per-doc row_number window) costs three shuffles of the full token
-    # stream; instead the common-token set is ESTIMATED once from a
-    # deterministic ~1/8 doc sample (top-K by sampled df, K=256 — far
-    # more than any real boilerplate vocabulary), broadcast as a
-    # literal, and each doc computes its own prefix PER ROW:
-    # sort hset by (is_common, tok) and slice the first
-    # sz - ceil(t*sz) + 1. Zero shuffles, no window, no persisted
-    # prefix relation (recomputing the per-row sort for the self-join's
-    # two sides is cheaper than a cache materialization job).
-    # Correctness does not depend on the sample: a missed common token
-    # only makes prefixes less selective (more candidates, still exact
-    # after verification) — asserted output-identical to the quadratic
-    # twin in tests regardless of sampling.
-    k_common = 256
-    sampled = sh.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(8)) == 0)
-    common = [
-        r.tok
-        for r in sampled.select(F.explode("hset").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "tok")
-        .limit(k_common)
-        .collect()
-    ]
-    # Prefix relation under the shared construction (_index_prefix_rel:
-    # _token_order + multi-prefix cut at sz − ceil(t·sz) + C). The
-    # common list rides as a typed array literal inside it, not SQL
-    # text (ADVICE r3: a token equal to Long.MIN_VALUE would render as
-    # an unparseable unary-minus bigint literal in SQL; the empty cast
-    # covers tiny inputs sampling 0 docs).
-    prefix = _index_prefix_rel(
-        sh.select(F.col(id_col).alias("id"), "hset"), common, threshold
-    )
-    # Length filter (exact, eps-slack): J(A,B) >= t forces
-    # t|A| <= |B| <= |A|/t. Positional filter: overlap needed is
-    # alpha = t/(1+t)*(|A|+|B|); best-case overlap through this match
-    # is 1 + min(szA-rkA, szB-rkB); keep the pair iff its BEST matching
-    # occurrence clears alpha (max over matches = earliest match).
-    # Multi-prefix filter: a true pair shares >= min(C, ceil(alpha))
-    # prefix tokens (see PPJOIN_PREFIX_C), so `cnt` below prunes the
-    # 1-token coincidences BEFORE the verification joins.
-    need = F.lit(threshold / (1.0 + threshold)) * (
-        F.col("a.sz") + F.col("b.sz")
-    ) - eps
-    ub = 1 + F.least(
-        F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
-    )
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "tok")
-        .filter(
-            (F.col("a.id") < F.col("b.id"))
-            & (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
-            & (F.col("b.sz") <= F.col("a.sz") / F.lit(threshold) + eps)
+    with spilled(sh):
+        # The cache must be materialized BEFORE the self-join below: its
+        # three consumers sit in independent stage branches of one job and
+        # would otherwise race the (empty) cache and recompute the shingle
+        # pipeline concurrently. The sampled-commons collect below is itself
+        # one full sequential scan of `sh`, so it doubles as the
+        # materializer — no separate count() job (one job saved per call).
+        # Prefix ORDER: any FIXED total order of tokens is correct; the
+        # selective choice demotes frequent tokens out of prefixes. The
+        # exact-frequency formulation (token-freq groupBy + tok join +
+        # per-doc row_number window) costs three shuffles of the full token
+        # stream; instead the common-token set is ESTIMATED once from a
+        # deterministic ~1/8 doc sample (top-K by sampled df, K=256 — far
+        # more than any real boilerplate vocabulary), broadcast as a
+        # literal, and each doc computes its own prefix PER ROW:
+        # sort hset by (is_common, tok) and slice the first
+        # sz - ceil(t*sz) + 1. Zero shuffles, no window, no persisted
+        # prefix relation (recomputing the per-row sort for the self-join's
+        # two sides is cheaper than a cache materialization job).
+        # Correctness does not depend on the sample: a missed common token
+        # only makes prefixes less selective (more candidates, still exact
+        # after verification) — asserted output-identical to the quadratic
+        # twin in tests regardless of sampling.
+        k_common = 256
+        sampled = sh.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(8)) == 0)
+        common = [
+            r.tok
+            for r in sampled.select(F.explode("hset").alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .orderBy(F.desc("c"), "tok")
+            .limit(k_common)
+            .collect()
+        ]
+        # Prefix relation under the shared construction (_index_prefix_rel:
+        # _token_order + multi-prefix cut at sz − ceil(t·sz) + C). The
+        # common list rides as a typed array literal inside it, not SQL
+        # text (ADVICE r3: a token equal to Long.MIN_VALUE would render as
+        # an unparseable unary-minus bigint literal in SQL; the empty cast
+        # covers tiny inputs sampling 0 docs).
+        prefix = _index_prefix_rel(
+            sh.select(F.col(id_col).alias("id"), "hset"), common, threshold
         )
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+        # Length filter (exact, eps-slack): J(A,B) >= t forces
+        # t|A| <= |B| <= |A|/t. Positional filter: overlap needed is
+        # alpha = t/(1+t)*(|A|+|B|); best-case overlap through this match
+        # is 1 + min(szA-rkA, szB-rkB); keep the pair iff its BEST matching
+        # occurrence clears alpha (max over matches = earliest match).
+        # Multi-prefix filter: a true pair shares >= min(C, ceil(alpha))
+        # prefix tokens (see PPJOIN_PREFIX_C), so `cnt` below prunes the
+        # 1-token coincidences BEFORE the verification joins.
+        need = F.lit(threshold / (1.0 + threshold)) * (
+            F.col("a.sz") + F.col("b.sz")
+        ) - eps
+        ub = 1 + F.least(
+            F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
         )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(ub).alias("ub"),
-            F.max(need).alias("need"),
+        cand = (
+            prefix.alias("a")
+            .join(prefix.alias("b"), "tok")
+            .filter(
+                (F.col("a.id") < F.col("b.id"))
+                & (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
+                & (F.col("b.sz") <= F.col("a.sz") / F.lit(threshold) + eps)
+            )
+            .groupBy(
+                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.max(ub).alias("ub"),
+                F.max(need).alias("need"),
+            )
+            .filter(
+                (F.col("cnt") >= F.least(
+                    F.lit(PPJOIN_PREFIX_C).cast("long"), F.ceil(F.col("need"))
+                ))
+                & (F.col("ub") >= F.col("need"))
+            )
+            .select("id_a", "id_b")
         )
-        .filter(
-            (F.col("cnt") >= F.least(
-                F.lit(PPJOIN_PREFIX_C).cast("long"), F.ceil(F.col("need"))
-            ))
-            & (F.col("ub") >= F.col("need"))
+        # Verification is CPU-bound per candidate (array intersect/union),
+        # not byte-bound: AQE's byte-sized coalesce would serialize it on
+        # small-byte inputs, so spread candidates across the cluster
+        # explicitly (row count is tiny; the hash join below broadcasts or
+        # re-shuffles as usual).
+        cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism, "id_a")
+        a = sh.select(F.col(id_col).alias("id_a"), F.col("hset").alias("sh_a"))
+        b = sh.select(F.col(id_col).alias("id_b"), F.col("hset").alias("sh_b"))
+        out = (
+            cand.join(a, "id_a")
+            .join(b, "id_b")
+            .withColumn("jaccard", jaccard("sh_a", "sh_b"))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
         )
-        .select("id_a", "id_b")
-    )
-    # Verification is CPU-bound per candidate (array intersect/union),
-    # not byte-bound: AQE's byte-sized coalesce would serialize it on
-    # small-byte inputs, so spread candidates across the cluster
-    # explicitly (row count is tiny; the hash join below broadcasts or
-    # re-shuffles as usual).
-    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism, "id_a")
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("hset").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("hset").alias("sh_b"))
-    out = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    # Materialize the (tiny) verified pair list NOW and release the two
-    # working caches. Every multi-consumer caller (connected components:
-    # count + collect + joins; recall contracts: several aggregates)
-    # would otherwise re-run the verification join per consumer, and the
-    # sh/prefix caches would leak into the session (no unpersist point
-    # once a lazy result escapes). Pairs are O(near-dup count) rows —
-    # the cheapest possible thing to pin. With ``checkpoint_dir`` the
-    # pin is a RELIABLE checkpoint (survives executor loss — a cluster
-    # deployment should pass one, or a lost executor after unpersist
-    # silently re-runs the whole verification join); without it, a
-    # localCheckpoint. See scale.reliable_checkpoint for the
-    # session-global setCheckpointDir guard.
-    from .scale import reliable_checkpoint
-
-    out = reliable_checkpoint(out, checkpoint_dir)
-    sh.unpersist()
+        # Materialize the (tiny) verified pair list NOW and release the two
+        # working caches. Every multi-consumer caller (connected components:
+        # count + collect + joins; recall contracts: several aggregates)
+        # would otherwise re-run the verification join per consumer, and the
+        # sh/prefix caches would leak into the session (no unpersist point
+        # once a lazy result escapes). Pairs are O(near-dup count) rows —
+        # the cheapest possible thing to pin. With ``checkpoint_dir`` the
+        # pin is a RELIABLE checkpoint (survives executor loss — a cluster
+        # deployment should pass one, or a lost executor after unpersist
+        # silently re-runs the whole verification join); without it, a
+        # localCheckpoint. See scale.pin for the session-global
+        # setCheckpointDir guard.
+        out = pin(out, checkpoint_dir)
     return out
 
 
@@ -669,10 +673,6 @@ def exact_jaccard_pairs_incremental(
     materializer. Output is exact — identical to the quadratic
     new x index cross join (asserted in tests) — so the driver
     hash-checks it directly, no recall contract needed."""
-    from pyspark import StorageLevel
-
-    from .scale import reliable_checkpoint
-
     if collapse_clones:
         def fams(df: DataFrame) -> DataFrame:
             # Eligibility (>= n tokens) decided once per family on the
@@ -680,7 +680,7 @@ def exact_jaccard_pairs_incremental(
             # relation feeds the canonical join side AND the expansion
             # (reliable when checkpoint_dir is given — a localCheckpoint
             # here would defeat the caller's executor-loss contract).
-            return reliable_checkpoint(
+            return pin(
                 df.select(
                     F.col(id_col).alias("__id"),
                     F.col(text_col).alias("__text"),
@@ -727,80 +727,79 @@ def exact_jaccard_pairs_incremental(
             ).alias("hset"),
         )
 
-    sh_new = hset(new_df).persist(StorageLevel.MEMORY_AND_DISK)
-    sh_idx = hset(index_df).persist(StorageLevel.MEMORY_AND_DISK)
-    # Materialize both caches before the multi-consumer join jobs (the
-    # prefix and verification branches would otherwise race an empty
-    # cache and re-run the shingle pipeline per branch). The commons
-    # sample below is a full scan of sh_idx; the small batch side pays
-    # one explicit count job.
-    sh_new.count()
-    k_common = 256
-    sampled = sh_idx.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(8)) == 0)
-    common = [
-        r.tok
-        for r in sampled.select(F.explode("hset").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "tok")
-        .limit(k_common)
-        .collect()
-    ]
-    def prefix(sh: DataFrame) -> DataFrame:
-        # shared prefix-cut construction — the ONE implementation the
-        # persisted index also uses, so inline and index paths cannot
-        # drift (r4 review)
-        return _index_prefix_rel(
-            sh.select(F.col(id_col).alias("id"), "hset"), common, threshold
-        )
+    sh_new = hset(new_df)
+    sh_idx = hset(index_df)
+    with spilled(sh_new), spilled(sh_idx):
+        # Materialize both caches before the multi-consumer join jobs (the
+        # prefix and verification branches would otherwise race an empty
+        # cache and re-run the shingle pipeline per branch). The commons
+        # sample below is a full scan of sh_idx; the small batch side pays
+        # one explicit count job.
+        sh_new.count()
+        k_common = 256
+        sampled = sh_idx.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(8)) == 0)
+        common = [
+            r.tok
+            for r in sampled.select(F.explode("hset").alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .orderBy(F.desc("c"), "tok")
+            .limit(k_common)
+            .collect()
+        ]
+        def prefix(sh: DataFrame) -> DataFrame:
+            # shared prefix-cut construction — the ONE implementation the
+            # persisted index also uses, so inline and index paths cannot
+            # drift (r4 review)
+            return _index_prefix_rel(
+                sh.select(F.col(id_col).alias("id"), "hset"), common, threshold
+            )
 
-    # R-S filters: J(A,B) >= t forces t|A| <= |B| <= |A|/t (no id
-    # inequality — the sides are distinct relations). Positional bound
-    # identical to the self-join.
-    need = F.lit(threshold / (1.0 + threshold)) * (
-        F.col("a.sz") + F.col("b.sz")
-    ) - eps
-    ub = 1 + F.least(
-        F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
-    )
-    cand = (
-        prefix(sh_new).alias("a")
-        .join(prefix(sh_idx).alias("b"), "tok")
-        .filter(
-            (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
-            & (F.col("b.sz") <= F.col("a.sz") / F.lit(threshold) + eps)
+        # R-S filters: J(A,B) >= t forces t|A| <= |B| <= |A|/t (no id
+        # inequality — the sides are distinct relations). Positional bound
+        # identical to the self-join.
+        need = F.lit(threshold / (1.0 + threshold)) * (
+            F.col("a.sz") + F.col("b.sz")
+        ) - eps
+        ub = 1 + F.least(
+            F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
         )
-        .groupBy(F.col("a.id").alias("new_id"), F.col("b.id").alias("index_id"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(ub).alias("ub"),
-            F.max(need).alias("need"),
+        cand = (
+            prefix(sh_new).alias("a")
+            .join(prefix(sh_idx).alias("b"), "tok")
+            .filter(
+                (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
+                & (F.col("b.sz") <= F.col("a.sz") / F.lit(threshold) + eps)
+            )
+            .groupBy(F.col("a.id").alias("new_id"), F.col("b.id").alias("index_id"))
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.max(ub).alias("ub"),
+                F.max(need).alias("need"),
+            )
+            .filter(
+                (F.col("cnt") >= F.least(
+                    F.lit(PPJOIN_PREFIX_C).cast("long"), F.ceil(F.col("need"))
+                ))
+                & (F.col("ub") >= F.col("need"))
+            )
+            .select("new_id", "index_id")
         )
-        .filter(
-            (F.col("cnt") >= F.least(
-                F.lit(PPJOIN_PREFIX_C).cast("long"), F.ceil(F.col("need"))
-            ))
-            & (F.col("ub") >= F.col("need"))
+        # Verification is CPU-bound per candidate — spread explicitly (see
+        # exact_jaccard_pairs).
+        cand = cand.repartition(
+            new_df.sparkSession.sparkContext.defaultParallelism, "new_id"
         )
-        .select("new_id", "index_id")
-    )
-    # Verification is CPU-bound per candidate — spread explicitly (see
-    # exact_jaccard_pairs).
-    cand = cand.repartition(
-        new_df.sparkSession.sparkContext.defaultParallelism, "new_id"
-    )
-    a = sh_new.select(F.col(id_col).alias("new_id"), F.col("hset").alias("sh_a"))
-    b = sh_idx.select(F.col(id_col).alias("index_id"), F.col("hset").alias("sh_b"))
-    out = (
-        cand.join(a, "new_id")
-        .join(b, "index_id")
-        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "index_id", "jaccard")
-    )
-    out = reliable_checkpoint(out, checkpoint_dir)
-    sh_new.unpersist()
-    sh_idx.unpersist()
+        a = sh_new.select(F.col(id_col).alias("new_id"), F.col("hset").alias("sh_a"))
+        b = sh_idx.select(F.col(id_col).alias("index_id"), F.col("hset").alias("sh_b"))
+        out = (
+            cand.join(a, "new_id")
+            .join(b, "index_id")
+            .withColumn("jaccard", jaccard("sh_a", "sh_b"))
+            .filter(F.col("jaccard") >= threshold)
+            .select("new_id", "index_id", "jaccard")
+        )
+        out = pin(out, checkpoint_dir)
     return out
 
 
@@ -820,7 +819,7 @@ def build_jaccard_index(
       {name}_hsets   (id, hset)          bucketed by id   [verification]
       {name}_prefix  (tok, id, sz, rk)   bucketed by tok  [candidate join]
       {name}_commons (tok, rank)                          [shared token order]
-      {name}_meta    (built_t, n_buckets)                 [one row]
+      {name}_meta    (built_t, n_buckets, format_version) [one row]
 
     Every future ingest batch then pays ONLY its own shingling: the
     candidate equi-join reads the prefix table bucket-local (no index
@@ -864,7 +863,8 @@ def build_jaccard_index(
         [(t, i) for i, t in enumerate(common)], "tok long, rank int"
     ).write.mode("overwrite").format("parquet").saveAsTable(f"{name}_commons")
     spark.createDataFrame(
-        [(float(threshold), n_buckets)], "built_t double, n_buckets int"
+        [(float(threshold), n_buckets, JACCARD_INDEX_VERSION)],
+        "built_t double, n_buckets int, format_version int",
     ).write.mode("overwrite").format("parquet").saveAsTable(f"{name}_meta")
     # A REBUILD resets the streaming ingest ledger: batch ids restart
     # with a fresh stream checkpoint, and a stale ledger would mark the
@@ -873,6 +873,21 @@ def build_jaccard_index(
     spark.sql(f"DROP TABLE IF EXISTS {name}_applied")
     prefix = _index_prefix_rel(sh_t, common, threshold)
     write_bucketed(prefix, f"{name}_prefix", ["tok"], n_buckets=n_buckets)
+
+
+def _jaccard_index_meta(spark, name: str):
+    """The ``{name}_meta`` row of a persisted Jaccard index, refusing an
+    index written under another layout: its prefix rows would be cut
+    differently from this code's probe side and silently lose pairs."""
+    meta = spark.table(f"{name}_meta").collect()[0]
+    version = meta.asDict().get("format_version")
+    if version != JACCARD_INDEX_VERSION:
+        raise ValueError(
+            f"Jaccard index {name!r} has format version {version}; this code"
+            f" reads version {JACCARD_INDEX_VERSION} — rebuild it with"
+            " build_jaccard_index"
+        )
+    return meta
 
 
 def _index_prefix_rel(
@@ -921,7 +936,7 @@ def append_to_jaccard_index(
     correctness. This is the maintenance half of the daily loop:
     dedup the batch against the index, then index what was kept."""
     spark = df.sparkSession
-    meta = spark.table(f"{name}_meta").collect()[0]
+    meta = _jaccard_index_meta(spark, name)
     common = [
         r.tok for r in spark.table(f"{name}_commons").orderBy("rank").collect()
     ]
@@ -967,11 +982,9 @@ def incremental_vs_jaccard_index(
     and the batch-side cache released — the same multi-consumer
     contract as exact_jaccard_pairs. Pass False to inspect the
     un-pinned plan (a pinned DataFrame explains as an RDD scan)."""
-    from pyspark import StorageLevel
-
     eps = 1e-9
     spark = new_df.sparkSession
-    built_t = spark.table(f"{name}_meta").collect()[0].built_t
+    built_t = _jaccard_index_meta(spark, name).built_t
     if threshold < built_t - 1e-12:
         raise ValueError(
             f"index {name!r} built at threshold {built_t}; cannot query at"
@@ -993,65 +1006,59 @@ def incremental_vs_jaccard_index(
                 F.transform("shingles", lambda s: F.xxhash64(s))
             ).alias("hset"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sh_new.count()  # materialize before the multi-consumer fan-out
-    # batch-side prefixes cut at the QUERY threshold via the same
-    # construction the index build used (shared _index_prefix_rel)
-    prefix_new = _index_prefix_rel(
-        sh_new.select(F.col(id_col).alias("id"), "hset"), common, threshold
-    )
-    # Re-cut the stored prefixes to THIS query's (>= built) threshold.
-    prefix_idx = spark.table(f"{name}_prefix").filter(F.col("rk") <= plen)
-    need = F.lit(threshold / (1.0 + threshold)) * (
-        F.col("a.sz") + F.col("b.sz")
-    ) - eps
-    ub = 1 + F.least(
-        F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
-    )
-    cand = (
-        prefix_new.alias("a")
-        .join(prefix_idx.alias("b"), "tok")
-        .filter(
-            (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
-            & (F.col("b.sz") <= F.col("a.sz") / F.lit(threshold) + eps)
+    with spilled(sh_new):
+        sh_new.count()  # materialize before the multi-consumer fan-out
+        # batch-side prefixes cut at the QUERY threshold via the same
+        # construction the index build used (shared _index_prefix_rel)
+        prefix_new = _index_prefix_rel(
+            sh_new.select(F.col(id_col).alias("id"), "hset"), common, threshold
         )
-        .groupBy(F.col("a.id").alias("new_id"), F.col("b.id").alias("index_id"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(ub).alias("ub"),
-            F.max(need).alias("need"),
+        # Re-cut the stored prefixes to THIS query's (>= built) threshold.
+        prefix_idx = spark.table(f"{name}_prefix").filter(F.col("rk") <= plen)
+        need = F.lit(threshold / (1.0 + threshold)) * (
+            F.col("a.sz") + F.col("b.sz")
+        ) - eps
+        ub = 1 + F.least(
+            F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
         )
-        .filter(
-            (F.col("cnt") >= F.least(
-                F.lit(PPJOIN_PREFIX_C).cast("long"), F.ceil(F.col("need"))
-            ))
-            & (F.col("ub") >= F.col("need"))
+        cand = (
+            prefix_new.alias("a")
+            .join(prefix_idx.alias("b"), "tok")
+            .filter(
+                (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
+                & (F.col("b.sz") <= F.col("a.sz") / F.lit(threshold) + eps)
+            )
+            .groupBy(F.col("a.id").alias("new_id"), F.col("b.id").alias("index_id"))
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.max(ub).alias("ub"),
+                F.max(need).alias("need"),
+            )
+            .filter(
+                (F.col("cnt") >= F.least(
+                    F.lit(PPJOIN_PREFIX_C).cast("long"), F.ceil(F.col("need"))
+                ))
+                & (F.col("ub") >= F.col("need"))
+            )
+            .select("new_id", "index_id")
         )
-        .select("new_id", "index_id")
-    )
-    a = sh_new.select(F.col(id_col).alias("new_id"), F.col("hset").alias("sh_a"))
-    b = spark.table(f"{name}_hsets").select(
-        F.col("id").alias("index_id"), F.col("hset").alias("sh_b")
-    )
-    out = (
-        cand.join(a, "new_id")
-        .join(b, "index_id")
-        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "index_id", "jaccard")
-    )
-    if pin_result:
-        from .scale import reliable_checkpoint
-
-        out = reliable_checkpoint(out, checkpoint_dir)
-        sh_new.unpersist()
-    else:
-        # plan-inspection path: release the cache now (an action on the
-        # returned frame recomputes the batch shingles — acceptable for
-        # the documented explain() use; leaking the materialized cache
-        # across repeated calls is not — r4 review)
-        sh_new.unpersist()
+        a = sh_new.select(F.col(id_col).alias("new_id"), F.col("hset").alias("sh_a"))
+        b = spark.table(f"{name}_hsets").select(
+            F.col("id").alias("index_id"), F.col("hset").alias("sh_b")
+        )
+        out = (
+            cand.join(a, "new_id")
+            .join(b, "index_id")
+            .withColumn("jaccard", jaccard("sh_a", "sh_b"))
+            .filter(F.col("jaccard") >= threshold)
+            .select("new_id", "index_id", "jaccard")
+        )
+        if pin_result:
+            out = pin(out, checkpoint_dir)
+    # unpinned (plan inspection), an action on the returned frame
+    # recomputes the batch shingles — acceptable for the documented
+    # explain() use; leaking the cache across repeated calls is not
     return out
 
 
@@ -1253,13 +1260,12 @@ def minhash_lsh_pairs_collapsed(
         )
         .filter(F.size(tokens_col("__text")) >= n)
     )
-    from .scale import reliable_checkpoint
 
     # fams feeds FOUR consumers (the LSH pipeline + both member-
     # expansion sides + the cliques); pin it once instead of
     # recomputing the collapse groupBy per branch — reliably when the
     # caller passed a checkpoint_dir (cluster deployments).
-    fams = reliable_checkpoint(fams, checkpoint_dir)
+    fams = pin(fams, checkpoint_dir)
     canon_docs = fams.select(
         F.col("canon").alias(id_col), F.col("__text").alias(text_col)
     )
@@ -1388,8 +1394,6 @@ def exact_containment_pairs(
     equi-join, pair groupBy, two id-keyed verification joins — no
     cartesian, no window. Verification is exact, so (as with the
     Jaccard twin) correctness never depends on the sample."""
-    from pyspark import StorageLevel
-
     eps = 1e-9
     # ``pre_shingled``: the caller hands a relation that already carries
     # the distinct string shingles (a pinned handoff a multi-stage DAG
@@ -1407,89 +1411,87 @@ def exact_containment_pairs(
         F.array_distinct(
             F.transform("shingles", lambda s: F.xxhash64(s))
         ).alias("hset"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    k_common = 256
-    sampled = sh.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(8)) == 0)
-    common = [
-        r.tok
-        for r in sampled.select(F.explode("hset").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "tok")
-        .limit(k_common)
-        .collect()
-    ]
-    order = _token_order(common)
-    # Probe side: rarest-first MULTI-prefix of length
-    # |A| - ceil(t|A|) + C, capped at |A| (see PPJOIN_PREFIX_C — the
-    # asymmetric form: alpha = ceil(t·|A|) depends only on A, so the
-    # same min(C, alpha)-shared-tokens guarantee holds against the
-    # index side's full list).
-    alpha = F.ceil(F.lit(threshold) * F.col("sz") - eps)
-    plen = F.col("sz") - alpha + PPJOIN_PREFIX_C
-    probe = (
-        sh.select(
-            F.col(id_col).alias("id"),
-            F.size("hset").alias("sz"),
-            F.slice(
-                order("hset"),
-                F.lit(1),
-                F.least(plen, F.col("sz")).cast("int"),
-            ).alias("pfx"),
-        )
-        .select("id", "sz", F.posexplode("pfx").alias("rk0", "tok"))
-        .select("tok", "id", "sz", (F.col("rk0") + 1).alias("rk"))
     )
-    # Index side: FULL ordered token list (alpha is probe-dependent).
-    index = (
-        sh.select(
-            F.col(id_col).alias("id"),
-            F.size("hset").alias("sz"),
-            F.posexplode(order("hset")).alias("rk0", "tok"),
+    with spilled(sh):
+        k_common = 256
+        sampled = sh.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(8)) == 0)
+        common = [
+            r.tok
+            for r in sampled.select(F.explode("hset").alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .orderBy(F.desc("c"), "tok")
+            .limit(k_common)
+            .collect()
+        ]
+        order = _token_order(common)
+        # Probe side: rarest-first MULTI-prefix of length
+        # |A| - ceil(t|A|) + C, capped at |A| (see PPJOIN_PREFIX_C — the
+        # asymmetric form: alpha = ceil(t·|A|) depends only on A, so the
+        # same min(C, alpha)-shared-tokens guarantee holds against the
+        # index side's full list).
+        alpha = F.ceil(F.lit(threshold) * F.col("sz") - eps)
+        plen = F.col("sz") - alpha + PPJOIN_PREFIX_C
+        probe = (
+            sh.select(
+                F.col(id_col).alias("id"),
+                F.size("hset").alias("sz"),
+                F.slice(
+                    order("hset"),
+                    F.lit(1),
+                    F.least(plen, F.col("sz")).cast("int"),
+                ).alias("pfx"),
+            )
+            .select("id", "sz", F.posexplode("pfx").alias("rk0", "tok"))
+            .select("tok", "id", "sz", (F.col("rk0") + 1).alias("rk"))
         )
-        .select("tok", "id", "sz", (F.col("rk0") + 1).alias("rk"))
-    )
-    need = F.ceil(F.lit(threshold) * F.col("a.sz") - eps)
-    ub = 1 + F.least(F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk"))
-    cand = (
-        probe.alias("a")
-        .join(index.alias("b"), "tok")
-        .filter(
-            (F.col("a.id") != F.col("b.id"))
-            & (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
+        # Index side: FULL ordered token list (alpha is probe-dependent).
+        index = (
+            sh.select(
+                F.col(id_col).alias("id"),
+                F.size("hset").alias("sz"),
+                F.posexplode(order("hset")).alias("rk0", "tok"),
+            )
+            .select("tok", "id", "sz", (F.col("rk0") + 1).alias("rk"))
         )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(ub).alias("ub"),
-            F.max(need).alias("need"),
+        need = F.ceil(F.lit(threshold) * F.col("a.sz") - eps)
+        ub = 1 + F.least(F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk"))
+        cand = (
+            probe.alias("a")
+            .join(index.alias("b"), "tok")
+            .filter(
+                (F.col("a.id") != F.col("b.id"))
+                & (F.col("b.sz") >= F.lit(threshold) * F.col("a.sz") - eps)
+            )
+            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.max(ub).alias("ub"),
+                F.max(need).alias("need"),
+            )
+            .filter(
+                (F.col("cnt") >= F.least(
+                    F.lit(PPJOIN_PREFIX_C).cast("long"), F.col("need")
+                ))
+                & (F.col("ub") >= F.col("need"))
+            )
+            .select("id_a", "id_b")
         )
-        .filter(
-            (F.col("cnt") >= F.least(
-                F.lit(PPJOIN_PREFIX_C).cast("long"), F.col("need")
-            ))
-            & (F.col("ub") >= F.col("need"))
+        cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism, "id_a")
+        a = sh.select(F.col(id_col).alias("id_a"), F.col("hset").alias("sh_a"))
+        b = sh.select(F.col(id_col).alias("id_b"), F.col("hset").alias("sh_b"))
+        out = (
+            cand.join(a, "id_a")
+            .join(b, "id_b")
+            .withColumn(
+                "containment",
+                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+                / F.size("sh_a").cast("double"),
+            )
+            .filter(F.col("containment") >= F.lit(threshold) - eps)
+            .select("id_a", "id_b", "containment")
         )
-        .select("id_a", "id_b")
-    )
-    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism, "id_a")
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("hset").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("hset").alias("sh_b"))
-    out = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "containment",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size("sh_a").cast("double"),
-        )
-        .filter(F.col("containment") >= F.lit(threshold) - eps)
-        .select("id_a", "id_b", "containment")
-    )
-    from .scale import reliable_checkpoint
-
-    out = reliable_checkpoint(out, checkpoint_dir)
-    sh.unpersist()
+        out = pin(out, checkpoint_dir)
     return out
 
 
@@ -1589,9 +1591,8 @@ def exact_containment_pairs_collapsed(
         )
         .filter(F.size(tokens_col("__text")) >= n)
     )
-    from .scale import reliable_checkpoint
 
-    fams = reliable_checkpoint(fams, checkpoint_dir)
+    fams = pin(fams, checkpoint_dir)
     canon_docs = fams.select(
         F.col("canon").alias(id_col), F.col("__text").alias(text_col)
     )

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .scale import pin
+
 __all__ = [
     "connected_components",
     "dedup_clusters",
@@ -150,10 +152,8 @@ def connected_components(
     RELIABLE checkpoints instead of localCheckpoint — on a cluster, a
     lost executor otherwise silently recomputes prior star rounds (the
     same option the PPJoin's pair pin has; see
-    scale.reliable_checkpoint for the setCheckpointDir guard).
+    scale.pin for the setCheckpointDir guard).
     """
-    from .scale import reliable_checkpoint
-
     raw_cap = driver_threshold // 2  # raw edges expand <= 2x symmetric
     two = edges.select(edges.columns[0], edges.columns[1])
     # take(cap+1) short-circuits the scan; getting <= cap rows back means
@@ -162,10 +162,10 @@ def connected_components(
     if len(head) <= raw_cap:
         node_t = edges.schema[edges.columns[0]].dataType
         return _driver_components(edges.sparkSession, head, node_t)
-    nb = reliable_checkpoint(_symmetric(edges), checkpoint_dir)
+    nb = pin(_symmetric(edges), checkpoint_dir)
     for _ in range(max_iter):
         after_large = _symmetric(_large_star(nb))
-        nxt = reliable_checkpoint(_symmetric(_small_star(after_large)), checkpoint_dir)
+        nxt = pin(_symmetric(_small_star(after_large)), checkpoint_dir)
         # Converged iff the symmetric edge sets are identical. Both sides
         # are distinct()-ed, so the union of the two anti-joins decides
         # it exactly — ONE job per round, short-circuited by limit(1).
@@ -242,14 +242,12 @@ def triangle_stats(
     ``checkpoint_dir``: when given, the multi-consumer pins are RELIABLE
     checkpoints instead of localCheckpoint — same executor-loss contract
     as connected_components / the PPJoin pair pin (VERDICT r4 #3)."""
-    from .scale import reliable_checkpoint
-
     # Pinned: e feeds deg + the orientation join, deg feeds four
     # consumers, oriented feeds both wedge sides + the closing relation
     # + its own count — without the pins the whole upstream (including
     # a possibly-unpinned pair join) re-evaluates ~5x (r4 review).
-    e = reliable_checkpoint(_symmetric(edges), checkpoint_dir)
-    deg = reliable_checkpoint(
+    e = pin(_symmetric(edges), checkpoint_dir)
+    deg = pin(
         e.groupBy("u").agg(F.count(F.lit(1)).alias("deg")), checkpoint_dir
     )
     n_nodes = deg.count()
@@ -263,7 +261,7 @@ def triangle_stats(
     ranked = e.join(deg, "u").join(
         deg.select(F.col("u").alias("v"), F.col("deg").alias("deg_v")), "v"
     )
-    oriented = reliable_checkpoint(
+    oriented = pin(
         ranked.filter(
             (F.col("deg") < F.col("deg_v"))
             | ((F.col("deg") == F.col("deg_v")) & (F.col("u") < F.col("v")))
@@ -321,7 +319,7 @@ def pagerank(
     formerly-unrolled 3-iteration query):
 
     - **Per-round pin.** The rank relation is re-pinned every round
-      (reliable_checkpoint — localCheckpoint without ``checkpoint_dir``,
+      (pin — localCheckpoint without ``checkpoint_dir``,
       reliable checkpoint with), so round k's plan is one join + one agg
       deep regardless of k — no lineage nesting of all prior rounds
       (the connected_components-style blowup this avoids).
@@ -342,7 +340,7 @@ def pagerank(
       (map-side combinable) — the same log-bounded round structure
       connected_components uses.
     """
-    from .scale import reliable_checkpoint, write_bucketed
+    from .scale import write_bucketed
 
     two = edges.select(
         F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v")
@@ -356,8 +354,8 @@ def pagerank(
         write_bucketed(sym, edge_table, ["v"], n_buckets=n_buckets)
         sym = edges.sparkSession.table(edge_table)
     else:
-        sym = reliable_checkpoint(sym, checkpoint_dir)
-    deg = reliable_checkpoint(
+        sym = pin(sym, checkpoint_dir)
+    deg = pin(
         sym.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg")),
         checkpoint_dir,
     )
@@ -374,7 +372,7 @@ def pagerank(
             "u", F.expr("r DIV deg").alias("c")
         )
         rsum = contrib.groupBy(F.col("u").alias("node")).agg(F.sum("c").alias("sc"))
-        r = reliable_checkpoint(
+        r = pin(
             rsum.join(deg, "node").select(
                 "node",
                 "deg",
@@ -404,18 +402,16 @@ def min_label_propagation(
     symmetrized once and pinned; each round is ONE neighbor equi-join +
     ONE map-side-combinable keyed MIN + a node-keyed join with the
     previous labels, and the label relation is re-pinned per round
-    (reliable_checkpoint — with ``checkpoint_dir`` it survives executor
+    (pin — with ``checkpoint_dir`` it survives executor
     loss), so round k's plan stays one-join deep with no lineage
     nesting. Labels are BIGINT mins — bit-exact under any shuffle
     order, and ROBUST to duplicate or both-orientation input edges
     (MIN over a multiset equals MIN over its support — unlike
     kcore_peel's degree counts, no dedup is needed; ADVICE r5)."""
-    from .scale import reliable_checkpoint
-
     two = edges.select(
         F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v")
     )
-    sym = reliable_checkpoint(
+    sym = pin(
         two.unionByName(two.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         checkpoint_dir,
     )
@@ -428,7 +424,7 @@ def min_label_propagation(
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("lbl").alias("nb_min"))
         )
-        lbl = reliable_checkpoint(
+        lbl = pin(
             lbl.join(nb, "node").select(
                 "node", F.least(F.col("lbl"), F.col("nb_min")).alias("lbl")
             ),
@@ -461,12 +457,10 @@ def kcore_peel(
     the edge list against surviving nodes per endpoint (two keyed
     shuffles, no cartesian), with the edge relation re-pinned per round
     — plan depth stays constant in n_rounds."""
-    from .scale import reliable_checkpoint
-
     two = edges.select(
         F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v")
     )
-    sym = reliable_checkpoint(
+    sym = pin(
         two.unionByName(
             two.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).distinct(),
@@ -480,7 +474,7 @@ def kcore_peel(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
-        cur = reliable_checkpoint(
+        cur = pin(
             cur.join(keep.withColumnRenamed("node", "u"), "u")
             .join(keep.withColumnRenamed("node", "v"), "v")
             .select("u", "v"),
@@ -518,12 +512,10 @@ def bfs_distances(
     equals MIN over its support — no dedup needed; ADVICE r5).
 
     ``seeds``: one-column DataFrame of seed node ids."""
-    from .scale import reliable_checkpoint
-
     two = edges.select(
         F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v")
     )
-    sym = reliable_checkpoint(
+    sym = pin(
         two.unionByName(two.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         checkpoint_dir,
     )
@@ -536,7 +528,7 @@ def bfs_distances(
             .groupBy(F.col("u").alias("node"))
             .agg((F.min("dist") + 1).alias("nb_dist"))
         )
-        dist = reliable_checkpoint(
+        dist = pin(
             dist.join(nb, "node", "full_outer").select(
                 "node",
                 F.least(
@@ -564,16 +556,14 @@ def local_clustering(
     the closing join here is an INNER join (not semi) because every
     triangle must be ENUMERATED once to credit its three vertices —
     one extra explode(3) per triangle, still keyed shuffles only."""
-    from .scale import reliable_checkpoint
-
-    e = reliable_checkpoint(_symmetric(edges), checkpoint_dir)
-    deg = reliable_checkpoint(
+    e = pin(_symmetric(edges), checkpoint_dir)
+    deg = pin(
         e.groupBy("u").agg(F.count(F.lit(1)).alias("deg")), checkpoint_dir
     )
     ranked = e.join(deg, "u").join(
         deg.select(F.col("u").alias("v"), F.col("deg").alias("deg_v")), "v"
     )
-    oriented = reliable_checkpoint(
+    oriented = pin(
         ranked.filter(
             (F.col("deg") < F.col("deg_v"))
             | ((F.col("deg") == F.col("deg_v")) & (F.col("u") < F.col("v")))
@@ -612,9 +602,7 @@ def local_clustering(
     )
 
 
-def common_neighbor_linkpred(
-    edges: DataFrame, hub_cap: int, pin: bool = False
-) -> DataFrame:
+def common_neighbor_linkpred(edges: DataFrame, hub_cap: int) -> DataFrame:
     """Common-neighbor link prediction over an undirected u<v edge list:
     NON-adjacent pairs (a, b) with >= 2 shared neighbors, scored by
     neighborhood Jaccard. Returns (a, b, n_common, neighbor_jaccard)
@@ -646,21 +634,17 @@ def common_neighbor_linkpred(
     e = raw.select(
         F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
     ).filter("u <> v").distinct()
-    # ``pin`` (optimization r14, guide §5 plan truncation): `e` feeds
+    # Pinned (optimization r14, guide §5 plan truncation): `e` feeds
     # the symmetrization AND the adjacency anti-join, and the
     # hub-filtered `symf` feeds THREE consumers (degn + both wedge
     # sides) — unpinned, each reference re-derives the normalize/
     # symmetrize/anti-join subtree (the query's plan carried 120
-    # Exchange nodes). Both relations are O(|edges|); callers with a
-    # small, already-pinned edge input opt in.
-    if pin:
-        e = e.localCheckpoint(eager=True)
+    # Exchange nodes). Both relations are O(|edges|).
+    e = pin(e)
     sym = _symmetric(e)
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     hubs = deg.filter(F.col("deg") > hub_cap).select(F.col("node").alias("v"))
-    symf = sym.join(F.broadcast(hubs), "v", "left_anti")
-    if pin:
-        symf = symf.localCheckpoint(eager=True)
+    symf = pin(sym.join(F.broadcast(hubs), "v", "left_anti"))
     degn = symf.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     s1 = symf.select(F.col("u").alias("a"), F.col("v").alias("n"))
     s2 = symf.select(F.col("u").alias("b"), F.col("v").alias("n"))

@@ -25,6 +25,11 @@ joined on the same key by many queries.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from typing import Callable, Iterator, TypeVar
+
+from pyspark import StorageLevel
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -52,8 +57,18 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def reliable_checkpoint(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Eagerly pin a DataFrame, truncating lineage.
+def pin(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+    """Eagerly pin a DataFrame, truncating lineage: the one way this
+    package materializes a relation for reuse by several consumers.
+
+    Pin policy: a relation is admissible here only when it is
+    (a) bounded by construction — an id set, an aggregate over bounded
+    keys (labels², cells×dims, families), a verified pair list — or
+    (b) rebuilt from scratch inside the query on every invocation. The
+    executor-local, non-replicated recovery tradeoff below is acceptable
+    exactly because such relations are small. A corpus-sized relation
+    with several consumers goes through ``spilled`` instead, which is
+    recomputable from lineage and spills to disk.
 
     With ``checkpoint_dir``: a RELIABLE checkpoint (survives executor
     loss — what a cluster deployment wants under an iterative or
@@ -104,6 +119,35 @@ def reliable_checkpoint(df: DataFrame, checkpoint_dir: str | None = None) -> Dat
         )
         sc.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=True)
+
+
+_R = TypeVar("_R")
+
+
+def overlap(*fns: Callable[[], _R]) -> list[_R]:
+    """Run independent zero-argument callables — typically ``pin``s whose
+    inputs are already pinned — on up to 3 driver threads, so their jobs
+    fill each other's stage tails instead of running back to back (3 in
+    flight is enough without starving any one job of executors).
+    Returns the results in argument order; the first exception raised
+    (in argument order) propagates once every callable has finished."""
+    with ThreadPoolExecutor(max_workers=min(len(fns), 3)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+    return [f.result() for f in futures]
+
+
+@contextmanager
+def spilled(df: DataFrame) -> Iterator[DataFrame]:
+    """Cache a corpus-sized relation that feeds several consumers at
+    MEMORY_AND_DISK (spillable, and recomputable from lineage on
+    executor loss — unlike ``pin``) for the body of the ``with``, and
+    release it on exit, exception or not. Caching is lazy: the first
+    job inside the body that reads ``df`` fills the cache."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def salted_join(
@@ -181,7 +225,7 @@ def global_index(
     """
     if order_cols:
         df = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    sdf = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint(eager=True)
+    sdf = pin(df.withColumn("__pid", F.spark_partition_id()))
     counts = {
         r["__pid"]: r["n"]
         for r in sdf.groupBy("__pid").count().withColumnRenamed("count", "n").collect()
@@ -371,7 +415,7 @@ def global_cumsum(
     collect is O(#partitions).
     """
     df = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    sdf = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint(eager=True)
+    sdf = pin(df.withColumn("__pid", F.spark_partition_id()))
     sums = {
         r["__pid"]: r["s"]
         for r in sdf.groupBy("__pid").agg(F.sum(val_col).alias("s")).collect()

@@ -16,10 +16,13 @@ ties after rounding break by vec_id.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .scale import spread
+from . import scale
+from .scale import overlap, pin, spread
 
 #: embedding as double array (float32 arithmetic is not portable)
 _DBL = "transform({c}, x -> CAST(x AS DOUBLE))"
@@ -240,7 +243,6 @@ def embedding_cosine_pairs(
     vec_col: str = "embedding",
     block_col: str = "label",
     threshold: float = 0.35,
-    materialize: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup tier 5): all pairs
     within a blocking key whose cosine >= threshold. Output-identical to
@@ -269,10 +271,7 @@ def embedding_cosine_pairs(
     in-family cliques). Recomputing it per branch (at most 3x one
     map-side-combinable shuffle; the small side collapses to a
     broadcast under AQE) measured FASTER than an eager localCheckpoint
-    pin at both sf0.1 and the 10x probe, so the default does not pin;
-    pass ``materialize=True`` on a cluster where recomputing the
-    collapse shuffle three times costs more than one checkpoint write
-    (large corpora with low clone rates).
+    pin at both sf0.1 and the 10x probe, so it is not pinned.
 
     NULL blocks are excluded (equi-join semantics, matching the oracle's
     `a.label = b.label`). Cosine is rounded to 5 decimals before the
@@ -301,8 +300,6 @@ def embedding_cosine_pairs(
         .withColumn("vnorm", norm("vec"))
         .select("__blk", "rep", "members", "vec", "vnorm")
     )
-    if materialize:
-        fams = fams.localCheckpoint(eager=True)
     a = fams.select(
         "__blk",
         F.col("rep").alias("rep_a"),
@@ -512,7 +509,7 @@ def build_ivf_index(
     e = spread(emb).select(F.col(id_col), as_double(vec_col).alias("vec")).withColumn(
         "vnorm", norm("vec")
     )
-    seeds = _ivf_seeds(e, id_col, n_cells).localCheckpoint(eager=True)
+    seeds = pin(_ivf_seeds(e, id_col, n_cells))
     if seeds.count() == 0:
         raise ValueError(
             f"build_ivf_index({name!r}): corpus has no vectors to seed "
@@ -532,7 +529,8 @@ def build_ivf_index(
             .alias("cell_id")
         )
 
-    refined = (
+    # two consumers: table write + assignment
+    refined = pin(
         assign(e, seeds)
         .select("cell_id", F.posexplode("vec").alias("dim", "x"))
         .groupBy("cell_id", "dim")
@@ -544,7 +542,6 @@ def build_ivf_index(
             ).alias("cvec")
         )
         .withColumn("cnorm", norm("cvec"))
-        .localCheckpoint(eager=True)  # two consumers: table write + assignment
     )
     refined.write.mode("overwrite").format("parquet").saveAsTable(
         f"{name}_centroids"
@@ -882,12 +879,12 @@ def knn_graph_blocked_collapsed(
     e = spread(emb).select(
         F.col(id_col), F.col(block_col), as_double(vec_col).alias("vec")
     )
-    fam = (
+    # consumed by both join sides + expansion
+    fam = pin(
         e.groupBy(block_col, "vec")
         .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("members"))
         .withColumn("rep", F.element_at("members", 1))
         .withColumn("vnorm", norm("vec"))
-        .localCheckpoint(eager=True)  # consumed by both join sides + expansion
     )
     a = fam.select(
         F.col(block_col), F.col("rep").alias("rep_a"),
@@ -1238,7 +1235,7 @@ def build_ivfpq_index(
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     dims = _qdims(base, "id", m, q)
     if pin:
-        dims = dims.localCheckpoint(eager=True)
+        dims = scale.pin(dims)
 
     # --- coarse quantizer: n_cells rank-based seeds, exact L2 assignment
     seed_w = W.orderBy(F.col("id"))
@@ -1317,12 +1314,9 @@ def build_ivfpq_index(
         # independent once `dims` is pinned: overlap their two
         # materializations on driver threads (guide §2.6) instead of
         # running them back-to-back.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_r = pool.submit(refined.localCheckpoint, True)
-            f_p = pool.submit(pq_refined.localCheckpoint, True)
-            refined, pq_refined = f_r.result(), f_p.result()
+        refined, pq_refined = overlap(
+            partial(scale.pin, refined), partial(scale.pin, pq_refined)
+        )
     cell_d, assigned = _assign(refined)
     codes = _pq_assign(pq_refined)
 
@@ -1355,23 +1349,14 @@ def build_ivfpq_index(
         # dims/cents are already checkpointed above — re-pinning them
         # would serialize the same rows a second time for nothing. The
         # four export materializations are mutually independent (each
-        # reads only pinned inputs): overlap them (guide §2.6; 3 in
-        # flight is enough to fill stage tails without starving any
-        # one job of executors).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # reads only pinned inputs): overlap them (guide §2.6).
         to_pin = [
             k_
             for k_, v in index.items()
             if isinstance(v, DataFrame) and k_ not in ("dims", "cents")
         ]
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = {
-                k_: pool.submit(index[k_].localCheckpoint, True)
-                for k_ in to_pin
-            }
-            for k_, f in futs.items():
-                index[k_] = f.result()
+        pinned = overlap(*(partial(scale.pin, index[k_]) for k_ in to_pin))
+        index.update(zip(to_pin, pinned))
     return index
 
 
@@ -1606,12 +1591,11 @@ def ivfpq_residual_topk(
     cb = cb0
     for _ in range(2):
         step_codes = pq_assign(cb)
-        cb = (
+        cb = pin(
             step_codes.join(rdims, ["id", "sub"])
             .groupBy("sub", "code", "j")
             .agg(F.expr("CAST(SUM(qx) DIV COUNT(*) AS BIGINT)").alias("qc"))
             .select("code", "j", "qc")
-            .localCheckpoint(eager=True)
         )
     cb1 = cb
     codes = pq_assign(cb1)
@@ -1846,11 +1830,11 @@ def opq_alternation(
     d = len(emb.select("embedding").first()[0]) if "embedding" in emb.columns else 64
     d_sub = d // m
 
-    rdims0 = (
+    rdims0 = pin(
         dims.join(assigned, "id")
         .join(F.broadcast(cents), ["cell_id", "j"])
         .select("id", "j", (F.col("qx") - F.col("qc")).alias("qx"))
-    ).localCheckpoint(eager=True)
+    )
 
     def _rmat_df(rows):
         return F.broadcast(spark.createDataFrame(rows, ["i", "j", "rq"]))
@@ -1900,12 +1884,11 @@ def opq_alternation(
             )
 
         for _ in range(n_lloyd):
-            cb = (
+            cb = pin(
                 pq_assign(cb).join(rcells, ["id", "sub"])
                 .groupBy("sub", "code", "j")
                 .agg(F.expr("CAST(SUM(qx) DIV COUNT(*) AS BIGINT)").alias("qc"))
                 .select("code", "j", "qc")
-                .localCheckpoint(eager=True)
             )
         return cb, pq_assign(cb)
 
@@ -1936,7 +1919,7 @@ def opq_alternation(
     dists: list[DataFrame] = []
     rcells = cb = codes = None
     for it in range(n_np + 1):
-        rcells = _rotate(rdims0, rmat, ["id"], "qx").localCheckpoint(eager=True)
+        rcells = pin(_rotate(rdims0, rmat, ["id"], "qx"))
         cb, codes = _train(rcells)
         dists.append(_distortion(rcells, cb, codes, it))
         if it == n_np:

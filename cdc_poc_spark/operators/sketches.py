@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .scale import pin, spilled
+
 
 def heavy_hitters(items: DataFrame, col: str, k: int) -> DataFrame:
     """EXACT phi-heavy hitters: every value of ``col`` whose frequency
@@ -37,26 +39,25 @@ def heavy_hitters(items: DataFrame, col: str, k: int) -> DataFrame:
     twice — the candidate pass and the verify pass; N comes from the
     candidate pass's own aggregate, not a third scan (r5 review) — and
     shuffled only by candidate membership, never a global groupBy over
-    all distinct values. The per-partition count relation is persisted
-    (memory+disk) because it feeds both N and the candidate filter.
+    all distinct values. The per-partition count relation is spilled
+    because it feeds both N and the candidate filter; the candidate set
+    is pinned so the cache is released before the verify pass.
     Returns (value-column, n BIGINT), exact, so an ANSI GROUP BY/HAVING
     oracle hash-matches it."""
-    from pyspark.storagelevel import StorageLevel
-
     per_part = (
         items.select(F.spark_partition_id().alias("__p"), F.col(col))
         .groupBy("__p", col)
         .agg(F.count(F.lit(1)).alias("c_local"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_total = per_part.agg(F.sum("c_local")).collect()[0][0] or 0
     part_rows = W.partitionBy("__p")
-    candidates = (
-        per_part.withColumn("n_part", F.sum("c_local").over(part_rows))
-        .filter(F.col("c_local") * (k + 1) > F.col("n_part"))
-        .select(col)
-        .distinct()
-    )
+    with spilled(per_part):
+        n_total = per_part.agg(F.sum("c_local")).collect()[0][0] or 0
+        candidates = pin(
+            per_part.withColumn("n_part", F.sum("c_local").over(part_rows))
+            .filter(F.col("c_local") * (k + 1) > F.col("n_part"))
+            .select(col)
+            .distinct()
+        )
     return (
         items.join(F.broadcast(candidates), col, "left_semi")
         .groupBy(col)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.scale import pin
 from ..tables import BAL, MONEY, QTY, VAL, dec, events_with_time, load_table
 from . import register
 
@@ -516,12 +517,11 @@ def text_tfidf_cosine_topk(spark, sf_dir):
     # fix that works: measured 3.0x -> ~1.5x at the 10x probe). No
     # spread() needed — the groupBy exchange already widens the narrow
     # scan before any consumer.
-    tf = (
+    tf = pin(
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .localCheckpoint(eager=True)
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
     n = tf.agg(F.count_distinct("doc_id").cast("double").alias("n"))
@@ -2038,7 +2038,7 @@ def ml_adaboost_stumps_2rounds(spark, sf_dir):
     out_rows = []
     rounds = (1, 2)
     for rnd in rounds:
-        base = base.localCheckpoint(eager=True)  # pin reweighted state
+        base = pin(base)  # pin reweighted state
         parts = []
         for feat, col in (("price_cents", "v_price"), ("cust_bal_cents", "v_bal")):
             h = (

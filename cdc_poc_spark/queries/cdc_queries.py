@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.scale import pin
 from ..streaming import await_done
 from ..tables import VAL, dec, events_with_time, load_table
 from . import register
@@ -2022,7 +2023,7 @@ def cdc_mirror_merge_replay(spark, sf_dir):
         )
 
     def handle(batch_df, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = pin(batch_df)
         topics = [
             r["tbl"] for r in batch_df.select("tbl").distinct().collect()
         ]

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import curation
+from ..operators.scale import pin, spilled
 from ..tables import load_table
 from . import register
 
@@ -421,9 +422,9 @@ def pipeline_embedding_quantize_int8(spark, sf_dir):
 # the n-gram leakage check.
 # ---------------------------------------------------------------------------
 
-_BDC_M = 1 << 18  # bloom bits
-_BDC_K = 4        # hash functions
-_BDC_N = 8        # word n-gram width
+_BDC_M = curation.BDC_M
+_BDC_K = curation.BDC_K
+_BDC_N = curation.BDC_N
 
 _BLOOM_DECON_ORACLE = f"""
 WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents),
@@ -485,98 +486,51 @@ def pipeline_bloom_decontaminate(spark, sf_dir):
     |bench grams| keeps the gram-level FPR near 2^-k; the fixed m here
     is sized for the fixture SFs (the sizing is an input, not a
     semantic)."""
-    from ..operators.curation import word_ngrams
-    from ..operators.scale import spread
-
     docs = load_table(spark, sf_dir, "documents")
-    # Materialized ONCE for its four consumers (bench bits, the bloom
-    # screen, the exact verify, the doc count — unpinned, each re-ran
-    # the corpus explode+distinct: a 72-Exchange plan), as a spillable
-    # RECOMPUTABLE cache rather than an executor-local checkpoint
-    # (ADVICE r13 / VERDICT r13 #2): this is the one multi-consumer
-    # relation here whose size is O(corpus x n-grams), so on executor
-    # loss a cached partition re-derives from the parquet lineage
-    # instead of failing the job, and MEMORY_AND_DISK spills instead of
-    # holding gram rows in memory. The eager count() materializes the
-    # cache BEFORE the multi-branch final job (concurrent branches
-    # would race an empty cache and recompute per branch). At 100 TB
-    # the production shape is a gram TABLE written between stages; an
-    # in-session cache is its single-job analogue.
-    from pyspark import StorageLevel
-
-    grams = (
-        spread(docs)
-        .withColumn("toks", F.split(F.col("text"), " "))
-        .select(
-            "doc_id",
-            (F.col("source") == "src0").alias("__is_bench"),
-            F.explode(word_ngrams("toks", _BDC_N)).alias("gram"),
+    # Cached ONCE for its four consumers (bench bits, the bloom
+    # screen, the exact verify, the doc count — uncached, each re-ran
+    # the corpus explode+distinct: a 72-Exchange plan), spilled rather
+    # than pinned (ADVICE r13 / VERDICT r13 #2): this is the one
+    # multi-consumer relation here whose size is O(corpus x n-grams).
+    # The eager count() materializes the cache BEFORE the multi-branch
+    # job (concurrent branches would race an empty cache and recompute
+    # per branch). At 100 TB the production shape is a gram TABLE
+    # written between stages; an in-session cache is its single-job
+    # analogue.
+    grams = curation.tagged_grams(docs, _BDC_N)
+    with spilled(grams):
+        grams.count()
+        bench = grams.filter(F.col("__is_bench")).select("gram").distinct()
+        cand = grams.filter(~F.col("__is_bench")).select("doc_id", "gram")
+        gpass = curation.bloom_suspects(cand, curation.bloom_bits(bench))
+        # flagged/exact each feed two consumers below — tiny doc-id sets
+        flagged = pin(gpass.select("doc_id").distinct())
+        exact = pin(
+            cand.join(bench, "gram", "left_semi")
+            .select("doc_id")
+            .distinct()
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    grams.count()
-    bench = grams.filter(F.col("__is_bench")).select("gram").distinct()
-    cand = grams.filter(~F.col("__is_bench")).select("doc_id", "gram")
-
-    def pos():
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("bdc"),
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            F.col("gram"),
-                        )
-                    ),
-                    1,
-                    8,
+        # four 1-row aggregates crossed into the one result row, pinned
+        # before the gram cache is released
+        return pin(
+            cand.agg(F.countDistinct("doc_id").alias("n_docs"))
+            .crossJoin(flagged.agg(F.count(F.lit(1)).alias("n_flagged")))
+            .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact")))
+            .crossJoin(
+                exact.join(flagged, "doc_id", "left_anti").agg(
+                    F.count(F.lit(1)).alias("missed")
+                )
+            )
+            .select(
+                "n_docs",
+                "n_flagged",
+                "n_exact",
+                (F.col("missed") == 0).alias("no_false_negatives"),
+                (F.col("n_flagged") - F.col("n_exact")).alias(
+                    "false_positive_docs"
                 ),
-                16,
-                10,
-            ).cast("long")
-            % _BDC_M
-        )
-
-    js = F.explode(F.array(*[F.lit(j) for j in range(_BDC_K)])).alias("j")
-    bits = bench.select("gram", js).select(pos().alias("pos")).distinct()
-    gp = cand.select("doc_id", "gram", js).select("doc_id", "gram", pos().alias("pos"))
-    gpass = (
-        gp.join(F.broadcast(bits), "pos")
-        .groupBy("doc_id", "gram")
-        .agg(F.count(F.lit(1)).alias("hits"))
-        .filter(F.col("hits") == _BDC_K)
-    )
-    # flagged/exact each feed two consumers below — tiny doc-id sets
-    flagged = gpass.select("doc_id").distinct().localCheckpoint(eager=True)
-    exact = (
-        cand.join(bench, "gram", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # one lazy plan, no driver-side counts: four 1-row aggregates cross
-    return (
-        cand.agg(F.countDistinct("doc_id").alias("n_docs"))
-        .crossJoin(flagged.agg(F.count(F.lit(1)).alias("n_flagged")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact")))
-        .crossJoin(
-            exact.join(flagged, "doc_id", "left_anti").agg(
-                F.count(F.lit(1)).alias("missed")
             )
         )
-        .select(
-            "n_docs",
-            "n_flagged",
-            "n_exact",
-            (F.col("missed") == 0).alias("no_false_negatives"),
-            (F.col("n_flagged") - F.col("n_exact")).alias(
-                "false_positive_docs"
-            ),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -38,6 +38,7 @@ from ..operators.curation_stages import (
     stage8_pack,
     stage_row,
 )
+from ..operators.scale import pin
 from ..streaming import await_done
 from ..tables import load_table
 from . import register
@@ -425,7 +426,7 @@ def pipeline_curation_e2e(spark, sf_dir):
         F.min("doc_id").alias("doc_id"),
         F.count(F.lit(1)).alias("n_members"),
     )
-    s1 = fam_full.select("doc_id").localCheckpoint(eager=True)
+    s1 = pin(fam_full.select("doc_id"))
     aux1 = fam_full.filter(F.col("n_members") > 1).agg(
         F.count(F.lit(1)).cast("long").alias("aux")
     )
@@ -442,18 +443,15 @@ def pipeline_curation_e2e(spark, sf_dir):
     # output-identical on this input and skip the collapse groupBy,
     # its pin, and both member-expansion joins per stage.
     docs_s1 = docs.join(s1, "doc_id", "left_semi")
-    sh1 = (
+    sh1 = pin(
         dedup.with_shingles(docs_s1)
         .select("doc_id", "shingles")
-        .localCheckpoint(eager=True)
     )
 
     # -- stage 2: asymmetric containment on canonicals
-    cont = dedup.exact_containment_pairs(
-        sh1, pre_shingled=True
-    ).localCheckpoint(eager=True)
+    cont = pin(dedup.exact_containment_pairs(sh1, pre_shingled=True))
     dom2 = cont.select(F.col("id_a").alias("doc_id")).distinct()
-    s2 = s1.join(dom2, "doc_id", "left_anti").localCheckpoint(eager=True)
+    s2 = pin(s1.join(dom2, "doc_id", "left_anti"))
     aux2 = (
         cont.select("id_b")
         .distinct()
@@ -461,11 +459,11 @@ def pipeline_curation_e2e(spark, sf_dir):
     )
 
     # -- stage 3: MinHash-LSH on the twice-deduped survivors
-    pairs3 = dedup.minhash_lsh_dedup_pairs(
+    pairs3 = pin(dedup.minhash_lsh_dedup_pairs(
         sh1.join(s2, "doc_id", "left_semi"), portable=True, pre_shingled=True
-    ).localCheckpoint(eager=True)
+    ))
     dom3 = pairs3.select(F.col("id_b").alias("doc_id")).distinct()
-    s3 = s2.join(dom3, "doc_id", "left_anti").localCheckpoint(eager=True)
+    s3 = pin(s2.join(dom3, "doc_id", "left_anti"))
     aux3 = (
         pairs3.select("id_a", "id_b")
         .distinct()

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import dedup, multimodal, similarity, text
-from ..operators.scale import spread
+from ..operators.scale import pin, spread
 from ..tables import load_table
 from . import register
 
@@ -1626,10 +1626,9 @@ def sim_knn_graph_ivf(spark, sf_dir):
     # eager pin (optimization r13, guide §3.3): exact feeds the recall
     # semi-join AND the edge count — unpinned, both re-ran the
     # sample-x-corpus scan
-    exact = (
+    exact = pin(
         similarity.knn_graph_exact_sample(emb, n_sample=128)
         .select("vec_id", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
     approx = similarity.knn_graph_cells_gemm(emb).select("vec_id", "neighbor_id")
     hits = exact.join(approx, ["vec_id", "neighbor_id"], "left_semi")
@@ -3895,12 +3894,11 @@ def mm_content_defined_chunks(spark, sf_dir):
     # eager pin (optimization r13, guide §3.3): the collapsed payload
     # relation feeds both the boundary explode and the final-position
     # rows — unpinned, each re-ran synthesize + hex + collapse
-    m = (
+    m = pin(
         media.select(F.hex(F.col("payload")).alias("hx"), "media_id")
         .groupBy("hx")
         .agg(F.min("media_id").alias("rep"))
         .filter(F.length("hx") >= 8)
-        .localCheckpoint(eager=True)
     )
     gram = F.expr("substring(hx, 2 * i - 7, 8)")
     ghash = (
@@ -4271,27 +4269,24 @@ def pipeline_dedup_tiers_composed(spark, sf_dir):
     # clone collapse was a no-op (singleton families, empty cliques),
     # output-identical, minus a groupBy + pin + two expansion joins per
     # tier.
-    fam = (
+    fam = pin(
         docs.groupBy(F.md5("text"))
         .agg(F.min("doc_id").alias("doc_id"))
-        .localCheckpoint(eager=True)
     )
     docs_canon = docs.join(fam, "doc_id", "left_semi")
-    sh1 = (
+    sh1 = pin(
         dedup.with_shingles(docs_canon)
         .select("doc_id", "shingles")
-        .localCheckpoint(eager=True)
     )
     cont = dedup.exact_containment_pairs(sh1, pre_shingled=True)
     dom2 = cont.select(F.col("id_a").alias("doc_id")).distinct()
-    s2 = (
+    s2 = pin(
         fam.select("doc_id")
         .join(dom2, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
     )
-    pairs3 = dedup.minhash_lsh_dedup_pairs(
+    pairs3 = pin(dedup.minhash_lsh_dedup_pairs(
         sh1.join(s2, "doc_id", "left_semi"), portable=True, pre_shingled=True
-    ).localCheckpoint(eager=True)
+    ))
     dom3 = pairs3.select(F.col("id_b").alias("doc_id")).distinct()
     s3 = s2.join(dom3, "doc_id", "left_anti")
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import dedup, similarity
+from ..operators.scale import pin
 from ..streaming import await_done
 from ..tables import load_table
 from . import register
@@ -1127,12 +1128,11 @@ def mm_chunk_store_savings(spark, sf_dir):
     # eager pin (optimization r13, guide §3.3): the collapsed payload
     # relation feeds both the boundary explode and the final-position
     # rows — unpinned, each re-ran synthesize + hex + collapse
-    m = (
+    m = pin(
         media.select(F.hex(F.col("payload")).alias("hx"), "media_id")
         .groupBy("hx")
         .agg(F.min("media_id").alias("rep"))
         .filter(F.length("hx") >= 8)
-        .localCheckpoint(eager=True)
     )
     gram = F.expr("substring(hx, 2 * i - 7, 8)")
     ghash = F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long") % 32
@@ -1961,7 +1961,7 @@ def dedup_lsh_param_planner(spark, sf_dir):
     # consumers (the PPJoin input, both broadcast member joins, the
     # clique rollup) — unpinned, each re-derived the md5 collapse over
     # the full corpus text
-    fams = (
+    fams = pin(
         docs.groupBy(F.md5("text").alias("__fp"))
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -1969,7 +1969,6 @@ def dedup_lsh_param_planner(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_members"),
         )
         .drop("__fp")
-        .localCheckpoint(eager=True)
     )
     members = fams.select("doc_id", "n_members")
     cpairs = (

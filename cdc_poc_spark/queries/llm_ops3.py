@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..operators.scale import pin
 from ..tables import VAL, dec, load_table
 from . import register
 
@@ -1379,12 +1380,11 @@ def sim_pq_sdc_vs_adc(spark, sf_dir):
     # codes and the codebook dims feed the ADC lut, the SDC lut and the
     # code join sides — unpinned, each reference re-ran the PQ Lloyd
     # chain (80-Exchange plan)
-    codes = (
+    codes = pin(
         pq_assign_codes(emb)
         .select("id", "sub", "code")
-        .localCheckpoint(eager=True)
     )
-    cdims = pq_centroid_dims(emb).localCheckpoint(eager=True)
+    cdims = pin(pq_centroid_dims(emb))
     dims = emb.select(
         F.col("vec_id").alias("id"),
         (F.size("embedding") / 8).cast("int").alias("d_sub"),

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..operators import similarity
-from ..operators.scale import spread
+from ..operators.scale import overlap, pin, spread
 from ..streaming import await_done
 from ..tables import VAL, dec, load_table
 from . import register
@@ -989,9 +989,7 @@ def semdedup_prune_pairs(e, with_assign: bool = False):
     # Pinned ONCE: the canonical quantized relation feeds the centroid
     # aggregate (collected below) and the assignment map — n rows x one
     # 64-int array, a tiny checkpoint.
-    base = e.select("vec_id", "label", qv.alias("qv")).localCheckpoint(
-        eager=True
-    )
+    base = pin(e.select("vec_id", "label", qv.alias("qv")))
     # Centroid sums COLLECTED as per-cell literals (optimization r14,
     # guide §2.4): the former explode -> broadcast-join -> groupBy ->
     # row_number chain cost three exchanges and a window to assign each
@@ -1045,7 +1043,7 @@ def semdedup_prune_pairs(e, with_assign: bool = False):
             )
         ]
     best = F.array_min(F.array(*cand_structs))
-    v = (
+    v = pin(
         base.select(
             "vec_id",
             "qv",
@@ -1056,7 +1054,6 @@ def semdedup_prune_pairs(e, with_assign: bool = False):
             "n2",
             F.expr("aggregate(qv, 0L, (acc, x) -> acc + x * x)"),
         )
-        .localCheckpoint(eager=True)
     )
     a, b = v.alias("a"), v.alias("b")
     dot = F.expr(
@@ -1564,8 +1561,6 @@ def dedup_semdedup_recentroid_maintenance(spark, sf_dir):
     comparison adds two bounded id-set joins. The DuckDB oracle
     replays BOTH paths end-to-end (frozen build + screen via the
     fz_ CTE chain; rebuild via the batch operator's full fragment)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..streaming.semdedup import build_standing_index, screen_batch
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1579,28 +1574,23 @@ def dedup_semdedup_recentroid_maintenance(spark, sf_dir):
     # other's tasks). Values are unaffected; both paths are exact.
     def _frozen():
         cent, idx = build_standing_index(base)
-        cent = cent.localCheckpoint(eager=True)
-        idx = idx.localCheckpoint(eager=True)
+        cent = pin(cent)
+        idx = pin(idx)
         return screen_batch(batch, cent, idx)[0]
 
     def _rebuild():
         pruned, assign_v = semdedup_prune_pairs(emb, with_assign=True)
-        kept = (
+        kept = pin(
             assign_v.select("vec_id")
             .join(
                 pruned.select(F.col("dropped_id").alias("vec_id")).distinct(),
                 "vec_id",
                 "left_anti",
             )
-            .localCheckpoint(eager=True)
         )
         return pruned, assign_v, kept
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_frozen = pool.submit(_frozen)
-        f_rebuild = pool.submit(_rebuild)
-        disp = f_frozen.result()
-        pruned, assign_v, kept = f_rebuild.result()
+    disp, (pruned, assign_v, kept) = overlap(_frozen, _rebuild)
     n_base_dropped = (
         base.select("vec_id")
         .join(kept, "vec_id", "left_anti")

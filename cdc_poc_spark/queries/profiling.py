@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.scale import pin
 from ..tables import load_table
 from . import register
 
@@ -889,7 +890,7 @@ def _coorder_part_edges(spark, sf_dir):
             )
         ).alias("uv")
     )
-    return (
+    return pin(
         pairs.groupBy("uv")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= _COORDER_MIN_SHARED)
@@ -898,7 +899,6 @@ def _coorder_part_edges(spark, sf_dir):
             F.col("uv").bitwiseAND(F.lit((1 << 32) - 1)).alias("v"),
             "w",
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -1005,7 +1005,7 @@ def graph_linkpred_common_neighbors(spark, sf_dir):
     from ..operators.graph import common_neighbor_linkpred
 
     e = _coorder_part_edges(spark, sf_dir).select("u", "v")
-    return common_neighbor_linkpred(e, hub_cap=_LINKPRED_HUB_CAP, pin=True).select(
+    return common_neighbor_linkpred(e, hub_cap=_LINKPRED_HUB_CAP).select(
         F.col("a").alias("part_a"),
         F.col("b").alias("part_b"),
         "n_common",
@@ -1416,18 +1416,21 @@ def graph_linkpred_adamic_adar(spark, sf_dir):
     e = _coorder_part_edges(spark, sf_dir).select("u", "v")
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    wn = sym.join(
-        F.broadcast(
-            deg.filter(
-                (F.col("deg") >= 2) & (F.col("deg") <= _LINKPRED_HUB_CAP)
-            )
-        ),
-        sym.v == deg.node,
-    ).select(
-        "u",
-        F.col("v").alias("n"),
-        F.round(1000000.0 / F.log(F.col("deg").cast("double"))).cast("long").alias("w_n"),
-    ).localCheckpoint(eager=True)  # feeds both wedge sides (r14 pin)
+    # feeds both wedge sides (r14 pin)
+    wn = pin(
+        sym.join(
+            F.broadcast(
+                deg.filter(
+                    (F.col("deg") >= 2) & (F.col("deg") <= _LINKPRED_HUB_CAP)
+                )
+            ),
+            sym.v == deg.node,
+        ).select(
+            "u",
+            F.col("v").alias("n"),
+            F.round(1000000.0 / F.log(F.col("deg").cast("double"))).cast("long").alias("w_n"),
+        )
+    )
     s1 = wn.select(F.col("u").alias("a"), "n", "w_n")
     s2 = wn.select(F.col("u").alias("b"), "n")
     cn = (

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.scale import global_cumsum, global_index
+from ..operators.scale import global_cumsum, global_index, pin
 from ..operators.sketches import (
     mg_merge,
     mg_summary,
@@ -126,9 +126,7 @@ def agg_mergeable_quantile_sketch(spark, sf_dir):
     # eager pin (optimization r13, guide §3.3): summary (≤520 rows)
     # feeds the cumsum AND the sample count — unpinned, both re-ran the
     # per-shard sampling windows over the full event stream
-    summary = rank_sample_summary(b, "y", "shard", 64, "event_id").localCheckpoint(
-        eager=True
-    )
+    summary = pin(rank_sample_summary(b, "y", "shard", 64, "event_id"))
     merged = global_cumsum(summary, "w", ["y", "shard", "rk"], "cw")
     stats = shard_stats(b, "shard", 64).select("n", "bound")
     n_samples = summary.agg(
@@ -458,18 +456,16 @@ def agg_misra_gries_topk(spark, sf_dir):
     # rank window AND the summary filter inside mg_summary, fin and
     # exact each feed two consumers below — unpinned, every reference
     # re-derived the orders scan + aggregation (104-Exchange plan)
-    counts = (
+    counts = pin(
         b.groupBy("shard", "cust")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     summary, d1 = mg_summary(counts, "cust", "c", "shard", 12)
     fin, d2 = mg_merge(summary, "cust", 12)
-    fin = fin.localCheckpoint(eager=True)
-    exact = (
+    fin = pin(fin)
+    exact = pin(
         b.groupBy("cust")
         .agg(F.count(F.lit(1)).cast("long").alias("fc"))
-        .localCheckpoint(eager=True)
     )
     bounds = (
         d1.agg(F.sum("d").cast("long").alias("sd"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..operators.scale import pin
 from ..tables import VAL, MONEY, dec, load_table
 from . import register
 
@@ -941,7 +942,7 @@ def graph_ktruss_peel_rounds(spark, sf_dir):
     out = None
     for rnd in range(3):
         if rnd > 0:
-            edges = edges.localCheckpoint(eager=True)
+            edges = pin(edges)
         sym = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -980,7 +981,7 @@ def graph_ktruss_peel_rounds(spark, sf_dir):
                 F.col("t3")[2].alias("c"),
             )
         )
-        supp = (
+        supp = pin(
             tri.select(
                 F.explode(
                     F.array(
@@ -995,7 +996,6 @@ def graph_ktruss_peel_rounds(spark, sf_dir):
             )
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).cast("long").alias("supp"))
-            .localCheckpoint(eager=True)
         )
         stats = (
             supp.agg(

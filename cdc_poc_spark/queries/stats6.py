@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..operators import similarity
-from ..operators.scale import spread
+from ..operators.scale import pin, spread
 from ..tables import VAL, dec, load_table
 from . import register
 from .stats3 import _DAILY_SQL, _daily
@@ -658,10 +658,9 @@ def ml_multiclass_confusion_prf(spark, sf_dir):
     # eager pin (optimization r13, guide §3.3): conf feeds row totals,
     # column totals AND the diagonal — unpinned, each re-ran the score
     # + argmin-window chain (52-Exchange plan for a |labels|² relation)
-    conf = (
+    conf = pin(
         pred.groupBy("true_label", "pred_label")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
     )
     labels = emb.select("label").distinct()
     row_tot = conf.groupBy("true_label").agg(F.sum("n").alias("n_true"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import dedup, text
+from ..operators.scale import pin
 from ..tables import load_table
 from . import register
 
@@ -674,12 +675,11 @@ def text_textrank_keywords(spark, sf_dir):
     # the 3 unrolled iterations plus the degree rollup — unpinned, each
     # reference re-derived the posexplode + positional self-join +
     # count pipeline (the before-plan carried 150 Exchange nodes)
-    sym = (
+    sym = pin(
         pairs.select(F.col("w1").alias("u"), F.col("w2").alias("v"), "w")
         .unionByName(
             pairs.select(F.col("w2").alias("u"), F.col("w1").alias("v"), "w")
         )
-        .localCheckpoint(eager=True)
     )
     ws = sym.groupBy(F.col("u").alias("node")).agg(F.sum("w").alias("wu"))
     nn = ws.agg(F.count(F.lit(1)).alias("n_nodes"))

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.scale import pin
 from ..operators.text import quality_score
 from .decontam import benchmark_screen, screen_batch as decontam_screen
 
@@ -154,8 +155,8 @@ def curation_ingest_stream(
         # materialize both outputs before any write starts: survivors'
         # plan READS index_dir and the second write overwrites it
         # (the ADVICE-r11 rule, same as the semdedup drive)
-        disp = disp.localCheckpoint(eager=True)
-        survivors = survivors.localCheckpoint(eager=True)
+        disp = pin(disp)
+        survivors = pin(survivors)
         (
             disp.withColumn("epoch", F.lit(int(batch_id)))
             .write.mode("overwrite")

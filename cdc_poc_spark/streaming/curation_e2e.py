@@ -79,6 +79,7 @@ from ..operators.dedup import (
     _lsh_banded_docs,
     with_shingles,
 )
+from ..operators.scale import pin
 
 #: epsilon slack shared with operators/dedup.py's prefix filters.
 _EPS = 1e-9
@@ -133,8 +134,8 @@ def _delta_containment(
         "tok",
         (F.col("rk0") < F.col("plen")).alias("is_pfx"),
     )
-    posts = posts.localCheckpoint(eager=True)
-    hsets = sh.select("doc_id", "hset", "sz").localCheckpoint(eager=True)
+    posts = pin(posts)
+    hsets = pin(sh.select("doc_id", "hset", "sz"))
 
     def _cands(probe: DataFrame, index: DataFrame) -> DataFrame:
         return (
@@ -204,28 +205,25 @@ def _delta_lsh(
     only while the standing bucket has room, ranked by id within the
     batch."""
     banded = _lsh_banded_docs(delta_docs, "doc_id", "text", _N, portable=True)
-    dband = banded.select(
+    dband = pin(banded.select(
         F.col("doc.id").alias("doc_id"),
         F.col("doc.hs").alias("hs"),
         "band_id",
         "band_hash",
-    ).localCheckpoint(eager=True)
-    dhs = (
-        dband.groupBy("doc_id").agg(F.first("hs").alias("hs"))
-    ).localCheckpoint(eager=True)
+    ))
+    dhs = pin(dband.groupBy("doc_id").agg(F.first("hs").alias("hs")))
     scnt = standing_bands.groupBy("band_id", "band_hash").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     rk = F.row_number().over(
         W.partitionBy("band_id", "band_hash").orderBy("doc_id")
     )
-    kept = (
+    kept = pin(
         dband.select("doc_id", "band_id", "band_hash")
         .withColumn("rk", rk)
         .join(scnt, ["band_id", "band_hash"], "left")
         .filter(F.coalesce(F.col("cnt"), F.lit(0)) + F.col("rk") <= cap)
         .select("doc_id", "band_id", "band_hash")
-        .localCheckpoint(eager=True)
     )
     new_old = kept.join(
         standing_bands.select(
@@ -334,9 +332,7 @@ def curation_stream_e2e(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
-        b = batch_df.withColumn("h", F.md5("text")).localCheckpoint(
-            eager=True
-        )
+        b = pin(batch_df.withColumn("h", F.md5("text")))
         canon_pre = _read("canon", bid)
         # within-batch collapse to min id, then corpus-wins vs standing
         bc = (
@@ -347,7 +343,7 @@ def curation_stream_e2e(
             )
         )
         delta = bc.join(canon_pre.select("h"), "h", "left_anti")
-        delta = delta.localCheckpoint(eager=True)
+        delta = pin(delta)
         delta_docs = delta.select("doc_id", "text")
 
         posts, hsets, cont_pairs = _delta_containment(
@@ -364,9 +360,9 @@ def curation_stream_e2e(
 
         # materialize every append before writing (the pair plans READ
         # the state dirs being appended to — the ADVICE-r11 rule)
-        cont_pairs = cont_pairs.localCheckpoint(eager=True)
-        lsh_pairs = lsh_pairs.localCheckpoint(eager=True)
-        emb_delta = emb_delta.localCheckpoint(eager=True)
+        cont_pairs = pin(cont_pairs)
+        lsh_pairs = pin(lsh_pairs)
+        emb_delta = pin(emb_delta)
 
         _append("corpus", b.select("doc_id", "source", "lang", "text", "h"), bid)
         _append("canon", delta.select("h", "doc_id"), bid)
@@ -380,10 +376,10 @@ def curation_stream_e2e(
 
         # ---- derive the full cascade for the corpus seen so far ----
         upto = bid + 1
-        docs_all = _read("corpus", upto).localCheckpoint(eager=True)
-        s1 = _read("canon", upto).select("doc_id").localCheckpoint(eager=True)
-        pc = _read("pairs_cont", upto).localCheckpoint(eager=True)
-        pl = _read("pairs_lsh", upto).localCheckpoint(eager=True)
+        docs_all = pin(_read("corpus", upto))
+        s1 = pin(_read("canon", upto).select("doc_id"))
+        pc = pin(_read("pairs_cont", upto))
+        pl = pin(_read("pairs_lsh", upto))
         emb_all = _read("emb_st", upto)
 
         aux1 = (
@@ -393,19 +389,18 @@ def curation_stream_e2e(
             .agg(F.count(F.lit(1)).cast("long").alias("aux"))
         )
         dom2 = pc.select(F.col("id_a").alias("doc_id")).distinct()
-        s2 = s1.join(dom2, "doc_id", "left_anti").localCheckpoint(eager=True)
+        s2 = pin(s1.join(dom2, "doc_id", "left_anti"))
         aux2 = (
             pc.select("id_b")
             .distinct()
             .agg(F.count(F.lit(1)).cast("long").alias("aux"))
         )
-        lsh_eff = (
+        lsh_eff = pin(
             pl.join(s2.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi")
             .join(s2.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")
-            .localCheckpoint(eager=True)
         )
         dom3 = lsh_eff.select(F.col("id_b").alias("doc_id")).distinct()
-        s3 = s2.join(dom3, "doc_id", "left_anti").localCheckpoint(eager=True)
+        s3 = pin(s2.join(dom3, "doc_id", "left_anti"))
         aux3 = lsh_eff.distinct().agg(
             F.count(F.lit(1)).cast("long").alias("aux")
         )
@@ -424,7 +419,7 @@ def curation_stream_e2e(
         out = out.unionByName(stage_row(6, "quality_lang", s5, s6, aux6))
         out = out.unionByName(stage_row(7, "quota_waterfill", s6, s7, aux7))
         out = out.unionByName(stage_row(8, "pack", s7, s7, aux8, n_dropped=0))
-        out = out.localCheckpoint(eager=True)
+        out = pin(out)
         (
             out.withColumn("epoch", F.lit(bid))
             .write.mode("overwrite")

@@ -24,44 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-BLOOM_M = 1 << 18  # bits
-BLOOM_K = 4        # hash functions
-NGRAM_N = 8        # word n-gram width
-
-
-def _pos():
-    """Engine-portable md5-prefix Bloom position for (j, gram) — the
-    same construction as the batch decontaminator, so DuckDB can
-    rebuild the identical bit-set."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("bdc"),
-                        F.col("j").cast("string"),
-                        F.lit(":"),
-                        F.col("gram"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % BLOOM_M
-    )
+from ..operators.curation import BDC_N, bloom_bits, bloom_suspects, word_ngrams
 
 
 def _doc_grams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    from ..operators.curation import word_ngrams
-
     return (
         df.withColumn("toks", F.split(F.col(text_col), " "))
         .select(
             F.col(id_col).alias("doc_id"),
-            F.explode(word_ngrams("toks", NGRAM_N)).alias("gram"),
+            F.explode(word_ngrams("toks", BDC_N)).alias("gram"),
         )
         .distinct()
     )
@@ -78,13 +49,7 @@ def benchmark_screen(
     from pyspark.storagelevel import StorageLevel
 
     bench = _doc_grams(bench_docs, id_col, text_col).select("gram").distinct()
-    js = F.explode(F.array(*[F.lit(j) for j in range(BLOOM_K)])).alias("j")
-    bits = (
-        bench.select("gram", js)
-        .select(_pos().alias("pos"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    bits = bloom_bits(bench).persist(StorageLevel.MEMORY_AND_DISK)
     bench = bench.persist(StorageLevel.MEMORY_AND_DISK)
     return bits, bench
 
@@ -102,16 +67,7 @@ def screen_batch(
     = all k Bloom probes hit; confirmed = suspect gram exactly in the
     benchmark (only suspect grams pay this join)."""
     grams = _doc_grams(batch_df, id_col, text_col)
-    js = F.explode(F.array(*[F.lit(j) for j in range(BLOOM_K)])).alias("j")
-    suspects = (
-        grams.select("doc_id", "gram", js)
-        .select("doc_id", "gram", _pos().alias("pos"))
-        .join(F.broadcast(bits), "pos")
-        .groupBy("doc_id", "gram")
-        .agg(F.count(F.lit(1)).alias("hits"))
-        .filter(F.col("hits") == BLOOM_K)
-        .select("doc_id", "gram")
-    )
+    suspects = bloom_suspects(grams, bits).select("doc_id", "gram")
     confirmed = (
         suspects.join(bench_grams, "gram", "left_semi")
         .select("doc_id")

@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dedup import LSH_BUCKET_CAP, MINHASH_PERMS, _P, shingles_expr
+from ..operators.scale import pin
 
 HIT_SCHEMA = T.StructType(
     [
@@ -265,7 +266,7 @@ def ingest_vs_index(
         )
         if replayed:
             return
-        batch_df = batch_df.localCheckpoint(eager=True)  # consumed 4x below
+        batch_df = pin(batch_df)  # consumed 4x below
         # A doc is flagged if it near-duplicates the INDEX or any
         # LOWER-ID doc of the same batch (with availableNow and no file
         # throttle the whole backlog can be ONE batch, so batch-vs-index

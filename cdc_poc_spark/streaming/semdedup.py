@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.scale import pin
+
 #: Component quantization (shared with the batch operator).
 SD_Q = 1_000_000
 #: tau^2 = 9/100 (tau = 0.30 — see the batch operator's fixture note).
@@ -245,8 +247,8 @@ def semdedup_stream(
         # (depends on the listing being snapshotted at read time).
         # Materialize both outputs eagerly before any write starts so
         # the read is fully consumed first.
-        disp = disp.localCheckpoint(eager=True)
-        survivors = survivors.localCheckpoint(eager=True)
+        disp = pin(disp)
+        survivors = pin(survivors)
         (
             disp.withColumn("epoch", F.lit(int(batch_id)))
             .write.mode("overwrite")

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..operators.scale import pin
+
 
 def gram_rows(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
@@ -140,15 +142,15 @@ def batch_substr_hits(
     meta = spark.table(f"{name}_meta").collect()[0]
     k = int(meta.k)
     collapsed = _collapse_batch(batch_df, id_col, text_col)
-    survivors = (
+    # consumed by hits AND index growth
+    survivors = pin(
         collapsed.join(spark.table(f"{name}_lens"), "h", "left_anti")
         .select(
             "h", "id", "text",
             F.size(F.split("text", " ")).cast("long").alias("n_toks"),
         )
-        .localCheckpoint(eager=True)  # consumed by hits AND index growth
     )
-    bg = gram_rows(survivors, "id", "text", k).localCheckpoint(eager=True)
+    bg = pin(gram_rows(survivors, "id", "text", k))
     idx = spark.table(f"{name}_grams")
     batch_ghs = bg.select("gh").distinct()
     idx_touched = idx.join(batch_ghs, "gh", "left_semi")

@@ -49,3 +49,22 @@ def test_layout_audit_record_fresh_and_clean():
         f"query source/oracle edited since the committed layout audit — "
         f"run `python tools/layout_audit.py --changed`; stale: {stale}"
     )
+
+
+def test_helpers_salt_is_checkout_independent(tmp_path):
+    """The helper salt hashes paths relative to the checkout root, so a
+    copy of the package at another path salts identically (otherwise
+    every row of the record reads stale in any other checkout)."""
+    import shutil
+    import sys
+
+    sys.path.insert(0, os.path.join(_REPO, "tools"))
+    from layout_audit import _helpers_salt
+
+    copy = tmp_path / "elsewhere" / "cdc_poc_spark"
+    shutil.copytree(
+        os.path.join(_REPO, "cdc_poc_spark"),
+        copy,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    assert _helpers_salt(str(copy)) == _helpers_salt()

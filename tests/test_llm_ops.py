@@ -170,8 +170,7 @@ def _naive_block_pairs(emb, threshold):
     )
 
 
-@pytest.mark.parametrize("materialize", [False, True])
-def test_embedding_cosine_pairs_clone_collapse_exact(spark, emb, materialize):
+def test_embedding_cosine_pairs_clone_collapse_exact(spark, emb):
     """The clone-collapsed plan must emit EXACTLY the naive within-label
     self-join's rows on a clone-heavy input (every vector duplicated
     under shifted ids — the 10x-probe shape, where label blocking alone
@@ -184,9 +183,7 @@ def test_embedding_cosine_pairs_clone_collapse_exact(spark, emb, materialize):
     doubled = base.unionByName(clones)
     got = {
         (r.id_a, r.id_b, r.cosine)
-        for r in similarity.embedding_cosine_pairs(
-            doubled, threshold=0.3, materialize=materialize
-        ).collect()
+        for r in similarity.embedding_cosine_pairs(doubled, threshold=0.3).collect()
     }
     want = {
         (r.id_a, r.id_b, r.cosine)
@@ -684,6 +681,37 @@ def test_jaccard_index_append_grows_index(spark, docs):
             "jidx_grow_prefix",
             "jidx_grow_commons",
             "jidx_grow_meta",
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {t_name}")
+
+
+def test_jaccard_index_rejects_other_format_version(spark, docs):
+    """An index whose _meta carries no format version (written before the
+    version existed) or another version is refused by both readers:
+    its prefix rows are cut differently and would silently lose pairs."""
+    from pyspark.sql import functions as F2
+
+    part = F2.pmod(F2.col("doc_id"), F2.lit(2))
+    dedup.build_jaccard_index(docs.filter(part == 0), "jidx_ver", threshold=0.5)
+    new = docs.filter(part == 1)
+    try:
+        for row, schema in (
+            ((0.5, 32), "built_t double, n_buckets int"),
+            ((0.5, 32, 1), "built_t double, n_buckets int, format_version int"),
+        ):
+            spark.createDataFrame([row], schema).write.mode("overwrite").format(
+                "parquet"
+            ).saveAsTable("jidx_ver_meta")
+            with pytest.raises(ValueError, match="format version"):
+                dedup.incremental_vs_jaccard_index(new, "jidx_ver", threshold=0.5)
+            with pytest.raises(ValueError, match="format version"):
+                dedup.append_to_jaccard_index(new, "jidx_ver")
+    finally:
+        for t_name in (
+            "jidx_ver_hsets",
+            "jidx_ver_prefix",
+            "jidx_ver_commons",
+            "jidx_ver_meta",
         ):
             spark.sql(f"DROP TABLE IF EXISTS {t_name}")
 

@@ -232,38 +232,38 @@ def test_expire_log_epochs(spark, tmp_path):
     assert expire_log_epochs(log, keep_last=2) == []
 
 
-def test_reliable_checkpoint_guards_session_dir(spark, tmp_path):
-    """reliable_checkpoint only sets the session checkpoint dir when
+def test_pin_guards_session_dir(spark, tmp_path):
+    """pin only sets the session checkpoint dir when
     unset, re-uses it silently for the same dir, and WARNS before
     redirecting to a different one (ADVICE r3: setCheckpointDir is
     session-global state)."""
     import warnings
 
-    from cdc_poc_spark.operators.scale import reliable_checkpoint
+    from cdc_poc_spark.operators.scale import pin
 
     df = spark.range(10)
     # local path (no dir): no session mutation
-    out = reliable_checkpoint(df)
+    out = pin(df)
     assert out.count() == 10
 
     d1 = str(tmp_path / "ck1")
     # first pin MAY warn (an earlier test in the session can have set a
     # different dir — that's exactly the override the guard reports)
-    assert reliable_checkpoint(df, d1).count() == 10
+    assert pin(df, d1).count() == 10
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # same-dir re-pin must not warn
-        assert reliable_checkpoint(df, d1).count() == 10
+        assert pin(df, d1).count() == 10
     assert d1.lstrip("/") in spark.sparkContext.getCheckpointDir()
 
     d2 = str(tmp_path / "ck2")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        assert reliable_checkpoint(df, d2).count() == 10
+        assert pin(df, d2).count() == 10
     assert any("overriding session checkpoint dir" in str(x.message) for x in w)
     assert d2.lstrip("/") in spark.sparkContext.getCheckpointDir()
 
 
-def test_reliable_checkpoint_scheme_and_authority_compared(spark, tmp_path):
+def test_pin_scheme_and_authority_compared(spark, tmp_path):
     """A same-path dir on a DIFFERENT scheme/authority must be treated
     as a different dir (warn + override), not silently reused — a
     caller asking for hdfs://nn/X while the session points at
@@ -271,27 +271,111 @@ def test_reliable_checkpoint_scheme_and_authority_compared(spark, tmp_path):
     defeating the executor-loss guarantee (ADVICE r4)."""
     import warnings
 
-    from cdc_poc_spark.operators.scale import reliable_checkpoint
+    from cdc_poc_spark.operators.scale import pin
 
     df = spark.range(10)
     d = str(tmp_path / "ck_scheme")
-    assert reliable_checkpoint(df, d).count() == 10
+    assert pin(df, d).count() == 10
     # same dir, explicit file: scheme — still "same", no warning
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        assert reliable_checkpoint(df, "file://" + d).count() == 10
+        assert pin(df, "file://" + d).count() == 10
     # same path under a different scheme+authority — must warn (the
     # write itself fails without an hdfs cluster, which is fine: the
     # guard decision happens before the checkpoint)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         try:
-            reliable_checkpoint(df, "hdfs://namenode" + d).count()
+            pin(df, "hdfs://namenode" + d).count()
         except Exception:
             pass  # no HDFS in the sandbox; only the guard is under test
     assert any("overriding session checkpoint dir" in str(x.message) for x in w)
     # restore a usable local dir for later tests in the session
     spark.sparkContext.setCheckpointDir(d)
+
+
+def test_overlap_keeps_argument_order_and_propagates():
+    """overlap returns results in argument order whatever order the
+    threads finish in, and re-raises a callable's exception."""
+    import time
+
+    def slow(v, delay):
+        def fn():
+            time.sleep(delay)
+            return v
+
+        return fn
+
+    assert scale.overlap(slow("a", 0.2), slow("b", 0.0), slow("c", 0.1)) == [
+        "a",
+        "b",
+        "c",
+    ]
+
+    def boom():
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError, match="boom"):
+        scale.overlap(slow("a", 0.0), boom)
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_spilled_releases_cache_on_exit_and_on_error(spark):
+    """spilled caches for the body of the with-block and releases the
+    cache on a normal exit and on an exception alike."""
+    spark.catalog.clearCache()
+    df = spark.range(100)
+    with scale.spilled(df) as cached:
+        assert cached.count() == 100
+        assert not _cache_empty(spark)
+    assert _cache_empty(spark)
+
+    with pytest.raises(ValueError):
+        with scale.spilled(df):
+            df.count()
+            raise ValueError("inside")
+    assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pipeline_bloom_decontaminate", "agg_heavy_hitters_tokens", "pipeline_curation_e2e"],
+)
+def test_query_releases_its_caches(spark, name):
+    """A query releases every cached relation it creates: after it ran,
+    the session cache manager holds nothing."""
+    from cdc_poc_spark.queries import all_specs
+
+    spark.catalog.clearCache()
+    all_specs()[name].fn(spark, SF_DIR).collect()
+    assert _cache_empty(spark)
+
+
+def test_pins_and_overlaps_only_in_scale():
+    """Every eager pin, reliable checkpoint and driver-thread overlap
+    goes through operators/scale.py (pin / overlap): no other package
+    file hand-rolls one."""
+    import os
+    import re
+
+    pkg = os.path.dirname(os.path.dirname(scale.__file__))
+    pattern = re.compile(r"\.localCheckpoint\b|\.checkpoint\(|ThreadPoolExecutor")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == scale.__file__:
+                continue
+            with open(path) as fh:
+                offenders += [
+                    f"{os.path.relpath(path, pkg)}:{i}"
+                    for i, line in enumerate(fh, 1)
+                    if pattern.search(line)
+                ]
+    assert not offenders, offenders
 
 
 def test_heavy_hitters_exact_and_partitioning_independent(spark):

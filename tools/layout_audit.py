@@ -43,7 +43,7 @@ sys.path.insert(0, REPO)
 RECORD = os.path.join(REPO, "LAYOUT_AUDIT.json")
 
 
-def _helpers_salt() -> str:
+def _helpers_salt(pkg: str = os.path.join(REPO, "cdc_poc_spark")) -> str:
     """md5 over every package source file OUTSIDE queries/ (operators/,
     cdc/, streaming/, sources/, tables.py, session.py, ...). Folded
     into every query fingerprint so that editing a shared helper
@@ -52,17 +52,18 @@ def _helpers_salt() -> str:
     the query function's own source let helper edits silently skip
     re-audit, the same staleness class VERDICT r8 #1 flagged, one
     level down. A helper edit therefore costs a full re-run; cheap
-    false positives beat silent staleness."""
-    pkg = os.path.join(REPO, "cdc_poc_spark")
+    false positives beat silent staleness. Paths are hashed relative
+    to the checkout root, so every checkout of the same tree agrees."""
     h = hashlib.md5()
     for root, dirs, files in os.walk(pkg):
         if os.path.basename(root) == "queries" or "__pycache__" in root:
             dirs[:] = []
             continue
+        dirs.sort()
         for f in sorted(files):
             if f.endswith(".py"):
                 p = os.path.join(root, f)
-                h.update(p.encode())
+                h.update(os.path.relpath(p, os.path.dirname(pkg)).encode())
                 with open(p, "rb") as fh:
                     h.update(fh.read())
     return h.hexdigest()[:8]
