@@ -1919,9 +1919,11 @@ def cdc_mirror_merge_replay(spark, sf_dir):
 
     from ..cdc.apply import (
         apply_changes,
+        has_bucketed_state,
         merge_into_parquet_bucketed,
         read_bucketed_state,
     )
+    from ..streaming.commit import write_epoch
 
     cust = load_table(spark, sf_dir, "customer")
     part = load_table(spark, sf_dir, "part")
@@ -2014,14 +2016,6 @@ def cdc_mirror_merge_replay(spark, sf_dir):
         F.lit(0),
     ).cast("long")
 
-    def _has_state(path: str) -> bool:
-        # the manual DELETE FROM empties the account mirror: every
-        # touched bucket directory is dropped, leaving a data-less
-        # target that parquet cannot infer a schema from
-        return os.path.exists(path) and any(
-            e.startswith("__bucket=") for e in os.listdir(path)
-        )
-
     def handle(batch_df, batch_id: int) -> None:
         batch_df = pin(batch_df)
         topics = [
@@ -2037,7 +2031,8 @@ def cdc_mirror_merge_replay(spark, sf_dir):
             )
         rows = []
         for t in ("account", "product"):
-            if _has_state(mirrors[t]):
+            # the manual DELETE FROM empties the account mirror
+            if has_bucketed_state(mirrors[t]):
                 st = read_bucketed_state(spark, mirrors[t])
                 agg = st.agg(
                     F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -2051,16 +2046,12 @@ def cdc_mirror_merge_replay(spark, sf_dir):
                 )
             else:
                 rows.append((t, 0, 0, 0))
-        (
+        write_epoch(
             spark.createDataFrame(
                 rows, "tbl string, n_rows long, key_sum long, payload_crc long"
-            )
-            .withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(out_dir)
+            ),
+            out_dir,
+            batch_id,
         )
 
     stream = (
@@ -2087,7 +2078,7 @@ def cdc_mirror_merge_replay(spark, sf_dir):
         want = apply_changes(logs[t], ["id"]).select(
             "id", "val", "created_ts", "op", "seq"
         )
-        if _has_state(mirrors[t]):
+        if has_bucketed_state(mirrors[t]):
             have = read_bucketed_state(spark, mirrors[t]).select(
                 "id", "val", "created_ts", "op", "seq"
             )

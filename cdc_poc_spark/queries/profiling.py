@@ -877,16 +877,20 @@ def _coorder_part_edges(spark, sf_dir):
     )
     # The count shuffle carries ONE packed long per pair instead of a
     # two-long struct row (optimization r14, guide §2.3 "narrower
-    # types"): u*2^32 + v is injective while part keys stay below 2^32
-    # (TPC-H part keys reach 200k x SF — five orders of magnitude of
-    # headroom at the 100 TB point), and u < v survives the decode
-    # unchanged. Same pair multiset, same counts.
+    # types"): u*2^32 + v fits a long and decodes back to (u, v) only
+    # while 0 <= u < 2^31 and v < 2^32. TPC-H part keys run to 200k x
+    # SF, so that holds up to SF 10,737; a key outside the range fails
+    # the query inside the pack expression instead of silently
+    # decoding to a wrong pair. Same pair multiset, same counts.
     pairs = ps.select(
         F.explode(
             F.expr(
                 "flatten(transform(ps, (x, i) ->"
                 " transform(slice(ps, i + 2, size(ps)),"
-                " y -> x * 4294967296L + y)))"
+                " y -> IF(x < 0 OR x >= 2147483648L OR y >= 4294967296L,"
+                " raise_error(concat('co-order part key out of the packed"
+                " range [0, 2^31) x [0, 2^32): ', x, ', ', y)),"
+                " x * 4294967296L + y))))"
             )
         ).alias("uv")
     )

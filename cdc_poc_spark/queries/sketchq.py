@@ -33,6 +33,7 @@ from ..operators.sketches import (
     shard_stats,
 )
 from ..streaming import await_done
+from ..streaming.commit import write_epoch
 from ..tables import VAL, dec, load_table
 from . import register
 
@@ -615,15 +616,8 @@ def pipeline_quantile_sketch_stream(spark, sf_dir):
 
     def handle(batch_df, batch_id: int) -> None:
         sb = batch_df.withColumn("shard", F.expr("event_id % 4"))
-        (
-            rank_sample_summary(sb, "y", "shard", 32, "event_id")
-            .withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(state_dir)
-        )
+        summary = rank_sample_summary(sb, "y", "shard", 32, "event_id")
+        write_epoch(summary, state_dir, batch_id)
 
     stream = (
         spark.readStream.schema("y long, event_id long")
@@ -1031,7 +1025,7 @@ def pipeline_hll_register_stream(spark, sf_dir):
     )
 
     def handle(batch_df, batch_id: int) -> None:
-        (
+        regs = (
             batch_df.select(
                 F.expr(bucket_expr).alias("bucket"),
                 F.expr(
@@ -1042,13 +1036,8 @@ def pipeline_hll_register_stream(spark, sf_dir):
             .select("bucket", F.expr(rank_expr).alias("r"))
             .groupBy("bucket")
             .agg(F.max("r").cast("long").alias("r"))
-            .withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(state_dir)
         )
+        write_epoch(regs, state_dir, batch_id)
 
     stream = (
         spark.readStream.schema("user_id long, event_id long")

@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..cdc import apply as cdc_apply
 from ..cdc import envelope as env
+from .commit import write_epoch
 
 
 @dataclass
@@ -73,21 +74,14 @@ class CDCConsumer:
 
     def _quarantine(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         """Split off dead letters (if a DLQ is configured) and return the
-        parseable remainder. The DLQ write is partitioned by epoch and
-        uses dynamic-partition overwrite, so a foreachBatch replay after
-        a crash rewrites the SAME epoch partition instead of appending a
-        duplicate copy — idempotent per epoch, matching the checkpointed
-        main write."""
+        parseable remainder. The DLQ lands through write_epoch, so a
+        foreachBatch replay after a crash rewrites the SAME epoch
+        partition instead of appending a duplicate copy — idempotent
+        per epoch, matching the checkpointed main write."""
         if not self.dlq_dir:
             return batch_df
         good, bad = env.split_dead_letters(batch_df)
-        (
-            bad.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(self.dlq_dir)
-        )
+        write_epoch(bad, self.dlq_dir, epoch_id, col="__epoch")
         return good
 
     # -- log path (reference Spark path, §1.1c shape) -----------------
@@ -99,21 +93,18 @@ class CDCConsumer:
         'creation' = new partition directory, any-schema acceptance =
         the log schema is fixed (before/after stay JSON strings).
 
-        The write is additionally partitioned by epoch with
-        dynamic-partition overwrite: epoch replay after a crash rewrites
-        its own partitions, making the append path exactly-once (not
-        merely at-least-once) under checkpoint recovery."""
+        The write is additionally partitioned by epoch through
+        write_epoch: epoch replay after a crash rewrites its own
+        partitions, making the append path exactly-once (not merely
+        at-least-once) under checkpoint recovery."""
         parsed = env.parse_envelope_raw(self._quarantine(batch_df, epoch_id))
-        out = (
-            parsed.withColumn("table_name", env.table_from_topic("topic"))
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .drop("topic")
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("table_name", "__epoch")
-            .parquet(os.path.join(self.warehouse_dir, "cdc_log"))
+        out = parsed.withColumn("table_name", env.table_from_topic("topic")).drop("topic")
+        write_epoch(
+            out,
+            os.path.join(self.warehouse_dir, "cdc_log"),
+            epoch_id,
+            col="__epoch",
+            by=("table_name",),
         )
 
     def start_log_query(self, stream_df: DataFrame, available_now: bool = True) -> StreamingQuery:

@@ -21,10 +21,9 @@ arriving documents pass, in one map-heavy screen per micro-batch,
 
 Only docs passing ALL four gates are ADMITTED; their content hashes
 append to the standing index under their epoch. Dispositions and index
-appends are epoch-partitioned with dynamic partition overwrite
-(exactly-once on replay, the CDC log/DLQ protocol), and both writes
-are eagerly materialized before touching the index dir (the ADVICE-r11
-read-then-overwrite rule).
+appends land through streaming/commit.py:write_epoch (exactly-once on
+replay), and both writes are eagerly materialized before touching the
+index dir (a plan must not read the directory its write overwrites).
 """
 
 from __future__ import annotations
@@ -34,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.scale import pin
 from ..operators.text import quality_score
+from .commit import write_epoch
 from .decontam import benchmark_screen, screen_batch as decontam_screen
 
 #: Admission bar for the composite quality score (shared with the
@@ -121,31 +121,11 @@ def curation_ingest_stream(
     call .start()."""
     bits, bench = benchmark_screen(bench_docs)
     spark = base_docs.sparkSession
-    (
-        curate_base(base_docs)
-        .withColumn("epoch", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("epoch")
-        # DYNAMIC overwrite is load-bearing here too (round-13 replay
-        # test): this setup re-runs on every RESTART from checkpoint,
-        # and a static overwrite would wipe every prior epoch's admits
-        # from the standing index — the replayed batch would then
-        # re-admit clones of everything admitted before the crash.
-        .option("partitionOverwriteMode", "dynamic")
-        .format("parquet")
-        .save(index_dir)
-    )
+    write_epoch(curate_base(base_docs), index_dir, -1)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # ADVICE r12: restrict the standing index to PRIOR epochs. If a
-        # crash lands between the survivors write and the streaming
-        # commit, the replayed batch would otherwise see its own prior
-        # admits at epoch == batch_id and reject every one of them as a
-        # clone — while dynamic overwrite leaves the stale epoch-N index
-        # rows in place (it only rewrites partitions present in the new,
-        # now-empty, survivor set). Filtering to epoch < batch_id makes
-        # the replay see exactly the pre-batch state, so the rerun is
-        # byte-identical to the first attempt.
+        # prior epochs only (write_epoch's replay rule): a replay must
+        # not reject its own first attempt's admits as clones
         index = (
             spark.read.schema("h string, doc_id long, epoch int")
             .parquet(index_dir)
@@ -157,22 +137,8 @@ def curation_ingest_stream(
         # (the ADVICE-r11 rule, same as the semdedup drive)
         disp = pin(disp)
         survivors = pin(survivors)
-        (
-            disp.withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(out_dir)
-        )
-        (
-            survivors.withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(index_dir)
-        )
+        write_epoch(disp, out_dir, batch_id)
+        write_epoch(survivors, index_dir, batch_id)
 
     return (
         stream_docs.writeStream.foreachBatch(handle)

@@ -80,6 +80,7 @@ from ..operators.dedup import (
     with_shingles,
 )
 from ..operators.scale import pin
+from .commit import write_epoch
 
 #: epsilon slack shared with operators/dedup.py's prefix filters.
 _EPS = 1e-9
@@ -306,8 +307,7 @@ def curation_stream_e2e(
     dirs = {k: os.path.join(state_dir, k) for k in _STATE_SCHEMAS}
 
     def _read(name: str, lt: int) -> DataFrame:
-        # ADVICE r12: standing reads see PRIOR epochs only, so a
-        # replayed batch recomputes byte-identical state.
+        # prior epochs only: write_epoch's replay rule
         return (
             spark.read.schema(_STATE_SCHEMAS[name] + ", epoch int")
             .parquet(dirs[name])
@@ -315,20 +315,10 @@ def curation_stream_e2e(
             .drop("epoch")
         )
 
-    def _append(name: str, df: DataFrame, epoch: int) -> None:
-        (
-            df.withColumn("epoch", F.lit(int(epoch)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(dirs[name])
-        )
-
     # seed every relation with an empty epoch -1 partition so the
     # first batch's standing reads resolve
     for name, schema in _STATE_SCHEMAS.items():
-        _append(name, spark.createDataFrame([], schema), -1)
+        write_epoch(spark.createDataFrame([], schema), dirs[name], -1)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
@@ -364,15 +354,15 @@ def curation_stream_e2e(
         lsh_pairs = pin(lsh_pairs)
         emb_delta = pin(emb_delta)
 
-        _append("corpus", b.select("doc_id", "source", "lang", "text", "h"), bid)
-        _append("canon", delta.select("h", "doc_id"), bid)
-        _append("cont_post", posts.select("doc_id", "sz", "tok", "is_pfx"), bid)
-        _append("cont_hset", hsets, bid)
-        _append("lsh_bands", kept_bands, bid)
-        _append("lsh_hs", dhs, bid)
-        _append("pairs_cont", cont_pairs, bid)
-        _append("pairs_lsh", lsh_pairs, bid)
-        _append("emb_st", emb_delta, bid)
+        write_epoch(b.select("doc_id", "source", "lang", "text", "h"), dirs["corpus"], bid)
+        write_epoch(delta.select("h", "doc_id"), dirs["canon"], bid)
+        write_epoch(posts.select("doc_id", "sz", "tok", "is_pfx"), dirs["cont_post"], bid)
+        write_epoch(hsets, dirs["cont_hset"], bid)
+        write_epoch(kept_bands, dirs["lsh_bands"], bid)
+        write_epoch(dhs, dirs["lsh_hs"], bid)
+        write_epoch(cont_pairs, dirs["pairs_cont"], bid)
+        write_epoch(lsh_pairs, dirs["pairs_lsh"], bid)
+        write_epoch(emb_delta, dirs["emb_st"], bid)
 
         # ---- derive the full cascade for the corpus seen so far ----
         upto = bid + 1
@@ -420,14 +410,7 @@ def curation_stream_e2e(
         out = out.unionByName(stage_row(7, "quota_waterfill", s6, s7, aux7))
         out = out.unionByName(stage_row(8, "pack", s7, s7, aux8, n_dropped=0))
         out = pin(out)
-        (
-            out.withColumn("epoch", F.lit(bid))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(out_dir)
-        )
+        write_epoch(out, out_dir, bid)
 
     return (
         stream_docs.writeStream.foreachBatch(handle)

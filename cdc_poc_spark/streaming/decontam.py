@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.curation import BDC_N, bloom_bits, bloom_suspects, word_ngrams
+from .commit import write_epoch
 
 
 def _doc_grams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -108,20 +109,13 @@ def decontam_stream(
 ):
     """The checkpointed in-flight decontamination query: benchmark side
     built once, every micro-batch screened and its dispositions landed
-    epoch-partitioned (idempotent dynamic overwrite on replay).
+    through write_epoch (idempotent on replay).
     Returns the configured DataStreamWriter — call .start()."""
     bits, bench = benchmark_screen(bench_docs, id_col, text_col)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            screen_batch(batch_df, bits, bench, id_col, text_col)
-            .withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(out_dir)
-        )
+        disp = screen_batch(batch_df, bits, bench, id_col, text_col)
+        write_epoch(disp, out_dir, batch_id)
 
     return (
         stream_docs.writeStream.foreachBatch(handle)

@@ -18,13 +18,14 @@ group total to exactly what a naive recompute over all history gives.
 Exactly-once: totals, key state, and the applied-epoch set COMMIT
 ATOMICALLY. Each batch writes a complete new state VERSION
 (``v<N>/{totals,key_state,meta.json}``) while reading the previous
-one, then publishes it with a single ``os.replace`` of the ``CURRENT``
-pointer file. A crash anywhere before the pointer swap leaves CURRENT
-on the old version — the epoch is unrecorded AND the totals are
-unadvanced, so replay recomputes from consistent state (no torn
-window where totals moved but the epoch marker didn't). Versioning
-also removes the write-aside-then-rename dance: the new version's
-plan reads the old version's files, never its own output.
+one, then publishes it through the CURRENT-pointer protocol of
+streaming/commit.py (``VersionedDir``). A crash anywhere before the
+pointer swap leaves CURRENT on the old version — the epoch is
+unrecorded AND the totals are unadvanced, so replay recomputes from
+consistent state (no torn window where totals moved but the epoch
+marker didn't). Versioning also removes the write-aside-then-rename
+dance: the new version's plan reads the old version's files, never
+its own output.
 
 Known tradeoff: tombstones evict the key row entirely, so an event
 arriving LATER but timestamped BEFORE the tombstone resurrects the key
@@ -35,18 +36,18 @@ horizon) — same policy Kafka compaction and Cassandra use.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from .commit import VersionedDir
 
 VAL_DEC = "decimal(12,2)"
 TOMBSTONE = "error"
 
 
-class ContinuousAggregate:
+class ContinuousAggregate(VersionedDir):
     """Maintains per-key live values + per-group totals from CDC batches.
 
     Wire `apply_batch` into `writeStream.foreachBatch`, or drive it
@@ -62,27 +63,12 @@ class ContinuousAggregate:
         dim_key: str = "c_custkey",
         group_col: str = "c_mktsegment",
     ) -> None:
+        super().__init__(state_dir)
         self.spark = spark
-        self.state_dir = state_dir
         self.dim_df = dim_df
         self.key_col = key_col
         self.dim_key = dim_key
         self.group_col = group_col
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- versioned state (atomic commit via CURRENT pointer) ----------
-
-    @property
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "CURRENT")
-
-    def _current_version(self) -> int | None:
-        if not os.path.exists(self._pointer_path):
-            return None
-        return int(open(self._pointer_path).read().strip())
-
-    def _vdir(self, version: int) -> str:
-        return os.path.join(self.state_dir, f"v{version}")
 
     def _vpath(self, version: int | None, name: str) -> str | None:
         if version is None:
@@ -91,31 +77,7 @@ class ContinuousAggregate:
         return p if os.path.exists(p) else None
 
     def _epochs(self, version: int | None) -> list[int]:
-        meta = self._vpath(version, "meta.json")
-        if meta is None:
-            return []
-        return json.load(open(meta))["epochs"]
-
-    def _publish(self, version: int, epochs: list[int]) -> None:
-        """The commit point: meta lands inside the version dir, then ONE
-        atomic os.replace flips CURRENT. Everything before this is
-        invisible to readers and to replay."""
-        json.dump(
-            {"epochs": epochs}, open(os.path.join(self._vdir(version), "meta.json"), "w")
-        )
-        tmp = self._pointer_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path)
-
-    def _gc(self, keep_version: int) -> None:
-        """Best-effort removal of superseded version dirs (post-commit)."""
-        for entry in os.listdir(self.state_dir):
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) != keep_version:
-                    shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
+        return [] if version is None else self._meta(version)["epochs"]
 
     # -- the per-batch update -----------------------------------------
 
@@ -125,10 +87,8 @@ class ContinuousAggregate:
         epochs = self._epochs(cur)
         if epoch_id in epochs:
             return  # replay after crash: committed state reflects this epoch
-        new_v = (cur if cur is not None else 0) + 1
+        new_v = self._begin(cur)
         vdir = self._vdir(new_v)
-        shutil.rmtree(vdir, ignore_errors=True)  # stale uncommitted attempt
-        os.makedirs(vdir)
         keys_path = self._vpath(cur, "key_state")
         totals_path = self._vpath(cur, "totals")
 
@@ -222,8 +182,7 @@ class ContinuousAggregate:
             new_state.write.mode("overwrite").parquet(os.path.join(vdir, "key_state"))
 
             # 5. atomic commit: totals + key_state + epoch set flip together
-            self._publish(new_v, epochs + [epoch_id])
-            self._gc(new_v)
+            self._commit(new_v, {"epochs": epochs + [epoch_id]})
         finally:
             deltas.unpersist()
 

@@ -26,10 +26,10 @@ buckets are never copied forward, so per-batch I/O is
 O(delta + affected buckets), not O(state).
 
 Exactly-once: the manifest (bucket pointers + applied-epoch set) and
-the bucket data COMMIT ATOMICALLY via the same CURRENT-pointer
-``os.replace`` protocol as ContinuousAggregate. A crash before the
-pointer swap leaves every bucket pointing at its old version and the
-epoch unrecorded — replay recomputes from consistent state.
+the bucket data COMMIT ATOMICALLY via the CURRENT-pointer protocol of
+streaming/commit.py (``VersionedDir``). A crash before the pointer
+swap leaves every bucket pointing at its old version and the epoch
+unrecorded — replay recomputes from consistent state.
 
 Contract (documented constraint, the same one Kafka Streams KTable
 joins and most MV engines impose): the JOIN KEY is part of a row's
@@ -44,13 +44,15 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cdc.apply import merge_upsert
+from .commit import VersionedDir
 
-class MaterializedJoin:
+
+class MaterializedJoin(VersionedDir):
     """Maintains ``left ⋈ right ON left[join_key] = right[join_key]``
     (inner equi-join) under two-sided CDC deltas.
 
@@ -69,59 +71,18 @@ class MaterializedJoin:
         join_key: str,
         n_buckets: int = 16,
     ) -> None:
+        super().__init__(state_dir)
         self.spark = spark
-        self.state_dir = state_dir
         self.left_id = left_id
         self.join_key = join_key
         self.n_buckets = n_buckets
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- manifest / versioned state (atomic commit via CURRENT) --------
-
-    @property
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "CURRENT")
-
-    def _current_version(self) -> int | None:
-        if not os.path.exists(self._pointer_path):
-            return None
-        return int(open(self._pointer_path).read().strip())
-
-    def _vdir(self, version: int) -> str:
-        return os.path.join(self.state_dir, f"v{version}")
 
     def _manifest(self, version: int | None) -> dict:
         if version is None:
             return {"epochs": [], "buckets": {}, "schemas": {}}
-        m = json.load(open(os.path.join(self._vdir(version), "meta.json")))
+        m = self._meta(version)
         m.setdefault("schemas", {})
         return m
-
-    def _publish(self, version: int, manifest: dict) -> None:
-        # The manifest must be durable BEFORE the CURRENT pointer swap —
-        # otherwise a crash after the swap can publish a version with a
-        # torn meta.json (ADVICE r7): explicit close + fsync, no reliance
-        # on CPython refcount close ordering.
-        with open(os.path.join(self._vdir(version), "meta.json"), "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        tmp = self._pointer_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path)
-
-    def _gc(self, manifest: dict, new_version: int) -> None:
-        """Remove version dirs no bucket references anymore."""
-        live = set(manifest["buckets"].values()) | {new_version}
-        for entry in os.listdir(self.state_dir):
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) not in live:
-                    shutil.rmtree(
-                        os.path.join(self.state_dir, entry), ignore_errors=True
-                    )
 
     def _bucket_paths(
         self, manifest: dict, side: str, buckets: set[int] | None = None
@@ -174,22 +135,6 @@ class MaterializedJoin:
             ("view", [self.left_id]),
         ]
 
-    @staticmethod
-    def _merge(old: DataFrame | None, delta: DataFrame, key_cols: list[str]) -> DataFrame:
-        """Last-writer-wins merge of a CDC delta into the side state:
-        max __seq per key wins (ties break toward the delete — the
-        conservative CDC convention); surviving deletes evict the row."""
-        rows = delta if old is None else old.unionByName(delta)
-        w = W.partitionBy(*key_cols).orderBy(
-            F.col("__seq").desc(), F.col("__op").asc()  # 'd' < 'u'
-        )
-        return (
-            rows.withColumn("__rn", F.row_number().over(w))
-            .filter("__rn = 1")
-            .filter(F.col("__op") == "u")
-            .drop("__rn")
-        )
-
     # -- the per-batch update -------------------------------------------
 
     def apply_batch(
@@ -204,10 +149,8 @@ class MaterializedJoin:
         manifest = self._manifest(cur)
         if epoch_id in manifest["epochs"]:
             return  # replay after crash: committed state reflects this epoch
-        new_v = (cur if cur is not None else 0) + 1
+        new_v = self._begin(cur)
         vdir = self._vdir(new_v)
-        shutil.rmtree(vdir, ignore_errors=True)  # stale uncommitted attempt
-        os.makedirs(vdir)
 
         jk = self.join_key
         dl = (
@@ -227,15 +170,24 @@ class MaterializedJoin:
         affected = (
             {r["__bkt"] for r in bkts.distinct().collect()} if bkts is not None else set()
         )
-        if not affected:
-            self._publish_passthrough(cur, manifest, new_v, epoch_id)
+        if not affected:  # record the epoch, keep every bucket pointer
+            self._commit(
+                new_v,
+                {**manifest, "epochs": manifest["epochs"] + [epoch_id]},
+                manifest["buckets"].values(),
+            )
             return
 
         # only the affected buckets' old state is ever read
         old_left = self._read_side(manifest, "left", affected)
         old_right = self._read_side(manifest, "right", affected)
-        left_new = old_left if dl is None else self._merge(old_left, dl, [self.left_id])
-        right_new = old_right if dr is None else self._merge(old_right, dr, [jk])
+        # last writer wins per key, the CDC mirror's rule: max __seq, a
+        # delete wins a tie, surviving deletes evict the row
+        lww = dict(seq_col="__seq", op_col="__op", delete_ops=("d",))
+        left_new = (
+            old_left if dl is None else merge_upsert(old_left, dl, [self.left_id], **lww)
+        )
+        right_new = old_right if dr is None else merge_upsert(old_right, dr, [jk], **lww)
         if left_new is None or right_new is None:
             view_new = None
         else:
@@ -278,8 +230,7 @@ class MaterializedJoin:
             "buckets": buckets,
             "schemas": schemas,
         }
-        self._publish(new_v, new_manifest)
-        self._gc(new_manifest, new_v)
+        self._commit(new_v, new_manifest, buckets.values())
 
     def _derived_sides(self, view_new: DataFrame | None) -> dict:
         """Hook for subclasses that maintain relations DERIVED from the
@@ -288,18 +239,6 @@ class MaterializedJoin:
         the same version commit as the view itself — one atomic
         pointer swap covers view + derivations."""
         return {}
-
-    def _publish_passthrough(
-        self, cur: int | None, manifest: dict, new_v: int, epoch_id: int
-    ) -> None:
-        """Empty batch: record the epoch, keep every bucket pointer."""
-        new_manifest = {
-            "epochs": manifest["epochs"] + [epoch_id],
-            "buckets": dict(manifest["buckets"]),
-            "schemas": dict(manifest["schemas"]),
-        }
-        self._publish(new_v, new_manifest)
-        self._gc(new_manifest, new_v)
 
     # -- readers ----------------------------------------------------------
 
@@ -324,10 +263,8 @@ class MaterializedJoin:
         if cur is None:
             return
         manifest = self._manifest(cur)
-        new_v = cur + 1
+        new_v = self._begin(cur)
         vdir = self._vdir(new_v)
-        shutil.rmtree(vdir, ignore_errors=True)
-        os.makedirs(vdir)
         schemas = dict(manifest["schemas"])
         live_buckets: set[str] = set()
         for side, key_cols in self._side_specs():
@@ -351,8 +288,7 @@ class MaterializedJoin:
             "buckets": {b: new_v for b in sorted(live_buckets, key=int)},
             "schemas": schemas,
         }
-        self._publish(new_v, new_manifest)
-        self._gc(new_manifest, new_v)
+        self._commit(new_v, new_manifest)
 
     def left_state(self) -> DataFrame:
         df = self._read_side(self._manifest(self._current_version()), "left")

@@ -53,6 +53,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dedup import LSH_BUCKET_CAP, MINHASH_PERMS, _P, shingles_expr
 from ..operators.scale import pin
+from .commit import already_applied, mark_applied, write_epoch
 
 HIT_SCHEMA = T.StructType(
     [
@@ -226,19 +227,18 @@ def ingest_vs_index(
     state); this one dedups it against the standing corpus, with the
     index as the state — unbounded corpus, zero stream state.
 
-    Exactly-once: hits are idempotent on replay (each batch rewrites
-    its own epoch partition, dynamic overwrite — same contract as the
-    CDC log/DLQ sinks); index growth is guarded by a per-batch ledger
-    table ``{index_name}_applied`` (a replayed batch that completed is
-    skipped wholesale). The unguarded window is one metadata write
-    wide — a crash BETWEEN the index append and the ledger append
-    replays the batch with its docs already indexed. Ids are globally
-    unique in this loop, so index-side SELF-hits (new_id == index_id)
-    are filtered in ``handle()``; the residual failure mode of that
-    window is therefore that the replayed batch's clean docs are
-    re-appended to the index (duplicate index rows → duplicate hit
-    rows for later batches), NOT corrupted hits for the replayed
-    epoch (ADVICE r4). Closing it fully needs a transactional table
+    Exactly-once (streaming/commit.py): hits land through write_epoch,
+    idempotent on replay; index growth is guarded by the per-batch
+    ledger table ``{index_name}_applied`` (a replayed batch that
+    completed is skipped wholesale). The unguarded window is one
+    metadata write wide — a crash BETWEEN the index append and the
+    ledger append replays the batch with its docs already indexed.
+    Ids are globally unique in this loop, so index-side SELF-hits
+    (new_id == index_id) are filtered in ``handle()``; the residual
+    failure mode of that window is therefore that the replayed batch's
+    clean docs are re-appended to the index (duplicate index rows →
+    duplicate hit rows for later batches), NOT corrupted hits for the
+    replayed epoch. Closing it fully needs a transactional table
     format (Delta/Iceberg MERGE — classpath-gated here, like the CDC
     MERGE path); the ledger narrows it to the same window every
     at-least-once ingest system documents.
@@ -256,15 +256,7 @@ def ingest_vs_index(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ledger = f"{index_name}_applied"
-        if not spark.catalog.tableExists(ledger):
-            spark.createDataFrame([], "batch_id long").write.format(
-                "parquet"
-            ).saveAsTable(ledger)
-        replayed = (
-            spark.table(ledger).filter(SF.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-        if replayed:
+        if already_applied(spark, ledger, batch_id):
             return
         batch_df = pin(batch_df)  # consumed 4x below
         # A doc is flagged if it near-duplicates the INDEX or any
@@ -291,23 +283,14 @@ def ingest_vs_index(
             .filter(SF.col("new_id") != SF.col("index_id"))
             .unionByName(within)
         )
-        (
-            hits.withColumn("epoch", SF.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(hits_dir)
-        )
+        write_epoch(hits, hits_dir, batch_id)
         if grow:
             flagged = hits.select(
                 SF.col("new_id").alias("doc_id")
             ).distinct()
             clean = batch_df.join(flagged, "doc_id", "left_anti")
             append_to_jaccard_index(clean, index_name)
-        spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
-            "append"
-        ).format("parquet").saveAsTable(ledger)
+        mark_applied(spark, ledger, batch_id)
 
     return (
         stream_docs.writeStream.foreachBatch(handle)

@@ -22,10 +22,9 @@ next batch-mode pass — but batch N+1 screens against batch N's
 survivors, so the cross-batch index append is load-bearing: a lost
 append shows up as false survivors one epoch later.
 
-Exactly-once: dispositions AND index appends are epoch-partitioned
-with dynamic partition overwrite (the corpus base rides as epoch -1),
-so a replayed micro-batch rewrites its own epoch in both relations —
-same protocol as the CDC log/DLQ sinks and the substring-index drive.
+Exactly-once: dispositions AND index appends land through
+streaming/commit.py:write_epoch (the corpus base rides as epoch -1),
+so a replayed micro-batch rewrites its own epoch in both relations.
 """
 
 from __future__ import annotations
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.scale import pin
+from .commit import write_epoch
 
 #: Component quantization (shared with the batch operator).
 SD_Q = 1_000_000
@@ -215,24 +215,11 @@ def semdedup_stream(
     cent, idx0 = build_standing_index(corpus)
     cent = cent.persist(StorageLevel.MEMORY_AND_DISK)
     spark = corpus.sparkSession
-    (
-        idx0.withColumn("epoch", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("epoch")
-        # dynamic: this setup re-runs on restart from checkpoint; a
-        # static overwrite would wipe prior epochs' survivors from the
-        # standing index (round-13 replay test, streaming/curation.py)
-        .option("partitionOverwriteMode", "dynamic")
-        .format("parquet")
-        .save(index_dir)
-    )
+    write_epoch(idx0, index_dir, -1)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # ADVICE r12: restrict the standing index to PRIOR epochs so a
-        # replayed batch (crash between the survivors write and the
-        # streaming commit) screens against exactly the pre-batch state
-        # instead of matching its own prior survivors as duplicates —
-        # see streaming/curation.py for the full failure narrative.
+        # prior epochs only (write_epoch's replay rule): a replay must
+        # not match its own first attempt's survivors as duplicates
         index = (
             spark.read.schema(
                 "vec_id long, cell_id long, qv array<bigint>, n2 long,"
@@ -249,22 +236,8 @@ def semdedup_stream(
         # the read is fully consumed first.
         disp = pin(disp)
         survivors = pin(survivors)
-        (
-            disp.withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(out_dir)
-        )
-        (
-            survivors.withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(index_dir)
-        )
+        write_epoch(disp, out_dir, batch_id)
+        write_epoch(survivors, index_dir, batch_id)
 
     return (
         stream_vecs.writeStream.foreachBatch(handle)

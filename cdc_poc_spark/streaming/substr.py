@@ -25,8 +25,8 @@ Index tables ({name} prefix):
                                indexed doc is dropped, mirroring the
                                batch tier's collapse-first rule
   {name}_meta  (k, n_buckets)  one row; {name}_applied — exactly-once
-                               batch ledger (same protocol as
-                               ingest_vs_index)
+                               batch ledger (streaming/commit.py:
+                               already_applied / mark_applied)
 
 Batch == streaming agreement (proved in tests/test_substr_stream.py):
 with arrival order == doc_id order and no gram ever exceeding
@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..operators.scale import pin
+from .commit import already_applied, mark_applied, write_epoch
 
 
 def gram_rows(
@@ -209,39 +210,25 @@ def ingest_substr_stream(
     gram_doc_cap: int = 50,
 ):
     """The checkpointed ingest loop: every micro-batch is flagged
-    against the positional-gram index (hits parquet to ``hits_dir``,
-    partitioned by epoch, idempotent dynamic overwrite on replay), and
+    against the positional-gram index (hits parquet to ``hits_dir``
+    through write_epoch, idempotent on replay), and
     the batch's clone-collapsed new docs — flagged or not; keep/drop
     is a downstream POLICY, the index must see every distinct doc for
     future batches to pair against — are appended to the index.
-    Exactly-once via the {name}_applied ledger (same protocol and same
-    one-metadata-write residual window as ingest_vs_index, documented
-    there). Returns the configured DataStreamWriter — call .start()."""
+    Exactly-once via the {name}_applied ledger of streaming/commit.py
+    (same one-metadata-write residual window as ingest_vs_index,
+    documented there). Returns the configured DataStreamWriter — call .start()."""
     from ..operators.scale import write_bucketed
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ledger = f"{name}_applied"
-        if not spark.catalog.tableExists(ledger):
-            spark.createDataFrame([], "batch_id long").write.format(
-                "parquet"
-            ).saveAsTable(ledger)
-        if (
-            spark.table(ledger).filter(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        ):
+        if already_applied(spark, ledger, batch_id):
             return
         hits, survivors = batch_substr_hits(
             batch_df, name, min_span=min_span, gram_doc_cap=gram_doc_cap
         )
-        (
-            hits.withColumn("epoch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .format("parquet")
-            .save(hits_dir)
-        )
+        write_epoch(hits, hits_dir, batch_id)
         meta = spark.table(f"{name}_meta").collect()[0]
         write_bucketed(
             survivors.select("h", "id", "n_toks"),
@@ -257,9 +244,7 @@ def ingest_substr_stream(
             n_buckets=int(meta.n_buckets),
             mode="append",
         )
-        spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
-            "append"
-        ).format("parquet").saveAsTable(ledger)
+        mark_applied(spark, ledger, batch_id)
 
     return (
         stream_docs.writeStream.foreachBatch(handle)

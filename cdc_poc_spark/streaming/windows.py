@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..tables import VAL, dec
+from .commit import write_epoch
 
 
 def with_event_time(df: DataFrame, ts_ns_col: str = "ts") -> DataFrame:
@@ -217,14 +218,8 @@ def streaming_anomaly_zscore(
             )
             .groupBy("event_type", "bucket_us")
             .agg(F.count(F.lit(1)).alias("n_inc"))
-            .withColumn("__epoch", F.lit(int(epoch_id)))
         )
-        (
-            inc.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(inc_dir)
-        )
+        write_epoch(inc, inc_dir, epoch_id, col="__epoch")
 
     return (
         events_stream.writeStream.foreachBatch(handle)
@@ -318,20 +313,8 @@ def streaming_watermark_recommendation(
             ).alias("hwm_prev"),
         )
         inc = lateness_histogram(e, hwm).withColumnRenamed("c", "n_inc")
-        (
-            inc.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(hist_dir)
-        )
-        (
-            bm.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(bm_dir)
-        )
+        write_epoch(inc, hist_dir, epoch_id, col="__epoch")
+        write_epoch(bm, bm_dir, epoch_id, col="__epoch")
 
     return (
         events_stream.writeStream.foreachBatch(handle)
@@ -458,25 +441,13 @@ def streaming_out_of_order_profile(
                 F.sum("late").alias("late_inc"),
             )
         )
-        (
-            inc.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(inc_dir)
-        )
+        write_epoch(inc, inc_dir, epoch_id, col="__epoch")
         last = (
             e.groupBy("user_id")
             .agg(F.max(F.struct("arr", "event_id", "ts_us")).alias("s"))
             .select("user_id", "s.arr", "s.event_id", "s.ts_us")
         )
-        (
-            last.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(last_dir)
-        )
+        write_epoch(last, last_dir, epoch_id, col="__epoch")
 
     return (
         events_stream.writeStream.foreachBatch(handle)

@@ -497,3 +497,33 @@ def test_min_label_propagation_matches_python_reference(spark):
     df = spark.createDataFrame(edges, "u long, v long")
     got = {r.node: r.lbl for r in min_label_propagation(df, n_iters=3).collect()}
     assert got == lbl
+
+
+@pytest.mark.parametrize(
+    "u, v, ok",
+    [
+        (2**31 - 1, 2**31, True),
+        (2**31, 2**31 + 1, False),  # u * 2^32 overflows the long
+        (1, 2**32 + 1, False),  # v spills into u's bits: decodes as (2, 1)
+        (-5, -3, False),  # the arithmetic shift decodes u as -6
+    ],
+)
+def test_coorder_pack_bound_is_enforced(spark, tmp_path, u, v, ok):
+    """The co-order pair pack u*2^32 + v decodes exactly while
+    0 <= u < 2^31 and v < 2^32; outside that range the query must fail
+    with its own message instead of returning a wrong pair."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_poc_spark.queries.profiling import _coorder_part_edges
+
+    pq.write_table(
+        pa.table({"l_orderkey": [1, 1, 2, 2], "l_partkey": [u, v, u, v]}),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    if ok:
+        got = [tuple(r) for r in _coorder_part_edges(spark, str(tmp_path)).collect()]
+        assert got == [(u, v, 2)]
+    else:
+        with pytest.raises(Exception, match="co-order part key out of the packed range"):
+            _coorder_part_edges(spark, str(tmp_path))

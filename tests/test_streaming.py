@@ -572,6 +572,73 @@ def test_continuous_aggregate_crash_is_atomic(spark, tmp_path):
     assert got == expect
 
 
+@pytest.mark.parametrize("cls", ["ContinuousAggregate", "MaterializedJoin"])
+def test_versioned_commit_is_durable_before_pointer_swap(spark, tmp_path, monkeypatch, cls):
+    """A version's meta.json must be fsynced BEFORE the CURRENT.tmp
+    pointer file (else a crash after the swap can publish a torn
+    meta.json), and CURRENT must name that version."""
+    import os
+
+    from cdc_poc_spark.streaming.ivm import ContinuousAggregate
+    from cdc_poc_spark.streaming.ivm_join import MaterializedJoin
+
+    state = str(tmp_path / "state")
+    if cls == "ContinuousAggregate":
+        _, cust, chunks = _ivm_chunks(spark)
+        view = ContinuousAggregate(spark, state, cust)
+        batch = (chunks[0], 0)
+    else:
+        view = MaterializedJoin(spark, state, left_id="l_id", join_key="jk", n_buckets=4)
+        left = spark.createDataFrame(
+            [(1, 10, 100, "u", 0)], "l_id long, jk long, amount long, __op string, __seq long"
+        )
+        right = spark.createDataFrame([(10, "A", "u", 0)], "jk long, seg string, __op string, __seq long")
+        batch = (left, right, 0)
+
+    synced = []
+    real_fsync = os.fsync
+
+    def record(fd):
+        synced.append(os.readlink(f"/proc/self/fd/{fd}"))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", record)
+    view.apply_batch(*batch)
+    version = view._current_version()
+    meta = os.path.realpath(os.path.join(state, f"v{version}", "meta.json"))
+    pointer_tmp = os.path.realpath(os.path.join(state, "CURRENT.tmp"))
+    assert meta in synced and pointer_tmp in synced, synced
+    assert synced.index(meta) < synced.index(pointer_tmp)
+    with open(os.path.join(state, "CURRENT")) as f:
+        assert f.read() == str(version) == "1"
+
+
+def test_epoch_commits_only_in_commit_module():
+    """Every epoch-partition overwrite, pointer swap and fsync goes
+    through streaming/commit.py: no other package file hand-rolls the
+    exactly-once commit."""
+    import os
+    import re
+
+    from cdc_poc_spark.streaming import commit
+
+    pkg = os.path.dirname(os.path.dirname(commit.__file__))
+    pattern = re.compile(r"partitionOverwriteMode|os\.replace|\bfsync\b")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == commit.__file__:
+                continue
+            with open(path) as fh:
+                offenders += [
+                    f"{os.path.relpath(path, pkg)}:{i}"
+                    for i, line in enumerate(fh, 1)
+                    if pattern.search(line)
+                ]
+    assert not offenders, offenders
+
+
 def test_tws_matches_applyinpandaswithstate(spark, envelope_dir, tmp_path):
     """The transformWithStateInPandas twin must land the exact same
     final per-key state as the applyInPandasWithState implementation —
