@@ -35,7 +35,15 @@ from cdc_poc_spark.session import get_spark  # noqa: E402
 #   $SPARK_GRAFT_BENCH_ROUND / $SPARK_GRAFT_BENCH_COHORT), so every
 #   rotating query gets a fresh number every 2 rounds and the wall
 #   stays bounded as the registry grows. New additions append to
-#   ROTATING (never CORE).
+#   ROTATING (never CORE); the order must not change, since the cohort
+#   is chosen by index parity.
+#
+# Not benched: the checkpointed foreachBatch stream drives and the
+# bucketed-state IVM drives (cdc_materialized_join_view/_agg), whose
+# walls are stream and table churn, and the queries whose wall is a
+# fixed build or driver loop (sim_ann_opq_topk,
+# ml_adaboost_stumps_2rounds). None of these times a query plan; their
+# scale record is the 10x probe.
 CORE = [
     "q1_pricing_summary",          # TPC-H scan-heavy agg
     "q3_shipping_priority",        # 3-way join + top-k
@@ -76,39 +84,30 @@ ROTATING = [
     "pipeline_decontaminate_ngram",
     "tw_gap_fill_interpolate",
     "sql_revenue_by_nation_year",
-    # round 3 additions (queries/analytics.py)
     "agg_moment_stats",
     "join_range_binned",
     "tw_sessionize_ids",
     "text_tfidf_cosine_topk",
     "pipeline_dup_rate_by_source",
-    # round 4 additions
     "text_unigram_logprob_junk",
     "dedup_incremental_vs_index",
     "pipeline_token_budget_fill",
-    # round 5 additions — one per new operator family
     "agg_heavy_hitters_tokens",
     "text_passage_dedup",
     "tw_m4_downsample",
     "pipeline_bpe_merge_step",
     "join_nearest_event",
     "sim_knn_graph_ivf",
-    # round 5 (cont.) additions — one per new operator family
     "tw_ohlc_bars",
     "dedup_token_containment",
     "text_winnowing_fingerprints",
     "agg_pareto_concentration",
-    # round 6 additions — one per new operator family (statistical aggs,
-    # co-order graph analytics, sequential analytics, text collocations,
-    # distributed-ML step, deterministic shuffle)
     "agg_ks_two_sample",
     "graph_local_clustering",
     "tw_cusum_changepoint",
     "text_collocations_pmi",
     "ml_logreg_grad_step",
     "pipeline_epoch_shuffle",
-    # round 6 (cont.) — spatial join, probabilistic structures, lateral
-    # SQL, basket rules, spectral step
     "join_spatial_grid_pairs",
     "sql_lateral_topn_per_nation",
     "agg_bloom_filter_semijoin",
@@ -122,7 +121,6 @@ ROTATING = [
     "text_textrank_keywords",
     "ml_decision_stump",
     "sim_ann_ivfpq_topk",
-    # round 7 additions
     "graph_linkpred_common_neighbors",
     "ml_ols_normal_equation",
     "ml_nearest_centroid_classifier",
@@ -130,19 +128,10 @@ ROTATING = [
     "scalar_xml_functions",
     "sql_pivot_unpivot_roundtrip",
     "dedup_threshold_sweep",
-    # round 8 additions. (cdc_materialized_join_agg is deliberately NOT
-    # here, like its r7 view sibling: both drive a 4-epoch bucketed-
-    # parquet state machine end-to-end — table-churn wall time, not a
-    # query plan; their scale records are the 10x probes + the
-    # bucket-locality tests.)
     "sim_ann_ivfpq_rerank_topk",
     "agg_spearman_rho",
     "ml_covariance_matrix",
     "pipeline_bloom_decontaminate",
-    # round 9 additions (cdc_consumer_scd2_intervals is NOT here, like
-    # the other checkpointed consumer drives; sim_ann_opq_topk is NOT
-    # here because its wall is the 3x alternation BUILD — its scale
-    # record is the 10x probe)
     "dedup_common_substring_pairs",
     "text_rouge2_pairs",
     "ml_roc_auc_exact",
@@ -156,15 +145,6 @@ ROTATING = [
     "graph_two_hop_reach",
     "mm_content_defined_chunks",
     "text_hybrid_rrf_fusion",
-    # round 10 additions — one per new operator family (mergeable
-    # sketches, nonparametric/EDF statistics, recurrent timeseries,
-    # eval decompositions, corpus laws, graph centrality, fairness
-    # allocation, LSH planning, PQ distance modes). The checkpointed
-    # consumer drives (dedup_substring_index_stream,
-    # pipeline_bloom_decontam_stream, pipeline_*_sketch_stream,
-    # cdc_consumer_catalog_landing) are deliberately NOT here, like
-    # the other foreachBatch drives — their walls are stream/table
-    # churn; their scale records are the 10x probes.
     "agg_mergeable_quantile_sketch",
     "agg_misra_gries_topk",
     "agg_cliff_delta",
@@ -178,11 +158,6 @@ ROTATING = [
     "pipeline_quota_water_filling",
     "dedup_lsh_param_planner",
     "sim_pq_sdc_vs_adc",
-    # round 10, waves 5-10 — retrieval-quality eval, binary/Matryoshka
-    # ANN, lexical estimators, regression diagnostics, graph censuses,
-    # calibration/regression eval, recursion surface
-    # (pipeline_hll_register_stream is a foreachBatch drive — excluded
-    # by the standing rule):
     "ml_ndcg_at_k",
     "sim_hamming_sign_topk",
     "sim_matryoshka_prefix_recall",
@@ -198,37 +173,21 @@ ROTATING = [
     "ml_multiclass_confusion_prf",
     "pipeline_hash_uniformity_check",
     "sql_recursive_cte_reach",
-    # round 11 additions — the deep-operator wave (multi-round BPE
-    # trainer, SemDeDup embedding pruning) plus the portable-LSH oracle
-    # form so its cost stays visible somewhere after the core re-point.
-    # (ml_adaboost_stumps_2rounds is NOT here — its wall is the 2x
-    # collect+checkpoint driver-loop machinery, fixed-overhead
-    # dominated (10x probe runs ~1x); its scale record is the probe.
-    # dedup_semdedup_stream is a foreachBatch drive — excluded by the
-    # standing rule.)
     "pipeline_bpe_train_k_rounds",
     "dedup_semdedup_prune",
     "dedup_minhash_lsh_pairs_portable",
     "pipeline_bpe_apply_encode",
     "agg_bottomk_sample_merge",
     "graph_ktruss_peel_rounds",
-    # round-12 seeds
     "pipeline_dedup_tiers_composed",
     "pipeline_pack_nfd_vs_greedy",
-    # round 12 additions — the composition wave. The e2e DAG is the
-    # heaviest rotating entry (~28 s at sf0.1: it IS eight probed
-    # stages run end-to-end); keeping it in rotation keeps the
-    # composed cost visible longitudinally, the tiers-composed
-    # precedent. (pipeline_curation_ingest_stream is a foreachBatch
-    # drive — excluded by the standing rule.)
+    # the heaviest rotating entry (~28 s at sf0.1: eight probed stages
+    # run end to end); kept so the composed cost stays visible
     "pipeline_curation_e2e",
     "pipeline_bpe_fertility_eval",
     "dedup_semdedup_recentroid_maintenance",
     "pipeline_pack_manifest_shuffle",
     "pipeline_pack_split_vs_truncate",
-    # round 13 additions. (pipeline_curation_stream_e2e is a
-    # foreachBatch drive — excluded by the standing rule; its scale
-    # record is the 10x probe + the per-epoch agreement contract.)
     "pipeline_bpe_train_to_vocab",
 ]
 

@@ -18,25 +18,38 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.scale import pin
+from ..sources.files import ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..tables import VAL, dec, events_with_time, load_table
 from . import register
 
 
-def _ephemeral_state_dir(prefix: str) -> str:
-    """mkdtemp reaped at interpreter exit. The IVM queries return a
-    DataFrame that reads this dir lazily, so it must outlive the query
-    function — but repeated invocations (the driver runs each query
-    twice; the sweep/audit/bench rebuild it) must not leak bucketed
-    parquet state trees under /tmp for the life of the machine
-    (ADVICE r7)."""
-    import atexit
-    import shutil
-    import tempfile
+def _event_op():
+    """The events fixture's Debezium op code: signup creates, error
+    deletes (the tombstone), every other event type updates."""
+    return (
+        F.when(F.col("event_type") == "signup", F.lit("c"))
+        .when(F.col("event_type") == "error", F.lit("d"))
+        .otherwise(F.lit("u"))
+    )
 
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+
+def _event_envelope(*after_cols):
+    """One events row as a Debezium envelope JSON string:
+    ``{payload: {before: null, after: {after_cols}, op, ts_ms}}``
+    (default after-image: user_id, event_id, value)."""
+    after_cols = after_cols or ("user_id", "event_id", "value")
+    return F.to_json(
+        F.struct(
+            F.struct(
+                F.lit(None).cast("string").alias("before"),
+                F.struct(*after_cols).alias("after"),
+                _event_op().alias("op"),
+                F.expr("ts DIV 1000000").alias("ts_ms"),
+            ).alias("payload")
+        )
+    )
+
 
 # ---------------------------------------------------------------------------
 # Current-state materialization (the flagship)
@@ -172,13 +185,7 @@ def cdc_oplog_profile(spark, sf_dir):
     """Debezium op-code profile (r/c/u/d domain, reference consumer.py:55):
     map event types onto op codes and profile the log."""
     ev = load_table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op")
-    )
-    return ev.groupBy(op).agg(
+    return ev.groupBy(_event_op().alias("op")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_keys"),
     )
@@ -393,7 +400,7 @@ def cdc_continuous_aggregate(spark, sf_dir):
     # State lives in a dir that OUTLIVES this function (the returned
     # DataFrame reads it lazily and distributed — no driver-side collect
     # round-trip) and is reaped at interpreter exit.
-    d = _ephemeral_state_dir("cdc_poc_ivm_")
+    d = ephemeral_dir("cdc_poc_ivm_")
     agg = ContinuousAggregate(spark, d, cust)
     for i, chunk in enumerate(chunks):
         agg.apply_batch(chunk, epoch_id=i)
@@ -699,7 +706,7 @@ def cdc_materialized_join_view(spark, sf_dir):
     )
     mj = MaterializedJoin(
         spark,
-        _ephemeral_state_dir("mjoin_query_"),
+        ephemeral_dir("mjoin_query_"),
         left_id="l_id",
         join_key="jk",
         n_buckets=16,
@@ -787,7 +794,7 @@ def cdc_materialized_join_agg(spark, sf_dir):
     )
     mj = MaterializedJoinAggregate(
         spark,
-        _ephemeral_state_dir("mjoinagg_query_"),
+        ephemeral_dir("mjoinagg_query_"),
         left_id="l_id",
         join_key="jk",
         group_cols=["seg"],
@@ -863,37 +870,21 @@ def cdc_ooo_profile_stream_state(spark, sf_dir):
     never sees an epoch, so a defect in the epoch guard, the prior-state
     lookup, or the increment algebra breaks the hash. Per-epoch state
     I/O is |series| + |users-in-batch| rows, never history."""
-    import glob
     import os
-    import shutil
 
     from ..operators.temporal import JITTER_SPARK, WM_BATCH
     from ..streaming import windows as swin
 
     ev = load_table(spark, sf_dir, "events")
-    work = _ephemeral_state_dir("cdc_ooo_stream_")
-    staged = os.path.join(work, "staged")
-    # ONE pass stages every arrival bucket as its own file (partitioned
-    # write), then mtimes order the stream's file listing = arrival order
-    # (the twin's documented input contract).
-    (
-        ev.withColumn("__bkt", F.expr(f"({JITTER_SPARK}) DIV {WM_BATCH}"))
-        .repartition(1)
-        .write.partitionBy("__bkt")
-        .parquet(staged)
+    work = ephemeral_dir("cdc_ooo_stream_")
+    # one file per arrival bucket; mtimes order the stream = arrival
+    # order (the twin's documented input contract)
+    data_dir = stage_batches(
+        ev.withColumn("__bkt", F.expr(f"({JITTER_SPARK}) DIV {WM_BATCH}")),
+        "__bkt",
+        work,
+        "parquet",
     )
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    bkts = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staged)
-        if d.startswith("__bkt=")
-    )
-    for i, b in enumerate(bkts):
-        (pf,) = glob.glob(os.path.join(staged, f"__bkt={b}", "part-*.parquet"))
-        dest = os.path.join(data_dir, f"e{i:05d}.parquet")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -934,34 +925,19 @@ def cdc_watermark_rec_stream_state(spark, sf_dir):
     carry across epochs, the prior-epoch guard, and the histogram
     increment algebra all break the hash if wrong. Per-epoch state is
     |series x lateness-quanta| + |buckets| rows, never history."""
-    import glob
     import os
-    import shutil
 
     from ..operators.temporal import JITTER_SPARK, WM_BATCH
     from ..streaming import windows as swin
 
     ev = load_table(spark, sf_dir, "events")
-    work = _ephemeral_state_dir("cdc_wmrec_stream_")
-    staged = os.path.join(work, "staged")
-    (
-        ev.withColumn("__bkt", F.expr(f"({JITTER_SPARK}) DIV {WM_BATCH}"))
-        .repartition(1)
-        .write.partitionBy("__bkt")
-        .parquet(staged)
+    work = ephemeral_dir("cdc_wmrec_stream_")
+    data_dir = stage_batches(
+        ev.withColumn("__bkt", F.expr(f"({JITTER_SPARK}) DIV {WM_BATCH}")),
+        "__bkt",
+        work,
+        "parquet",
     )
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    bkts = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staged)
-        if d.startswith("__bkt=")
-    )
-    for i, b in enumerate(bkts):
-        (pf,) = glob.glob(os.path.join(staged, f"__bkt={b}", "part-*.parquet"))
-        dest = os.path.join(data_dir, f"e{i:05d}.parquet")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1015,19 +991,12 @@ def cdc_consumer_log_landing(spark, sf_dir):
     envelope construction/parsing, topic->table routing, the epoch
     partitioning, or a duplicate/lost row under the landing protocol
     changes the row multiset and breaks the hash."""
-    import glob
     import os
-    import shutil
 
     from ..sources.files import envelope_json_stream
     from ..streaming.consumer import CDCConsumer
 
     ev = load_table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-    )
     topic = F.concat(
         F.lit("dbserver1.public.events_"),
         F.when(F.pmod("user_id", F.lit(2)) == 0, F.lit("even")).otherwise(
@@ -1035,35 +1004,13 @@ def cdc_consumer_log_landing(spark, sf_dir):
         ),
     )
     envelopes = ev.select(
-        F.to_json(
-            F.struct(
-                F.struct(
-                    F.lit(None).cast("string").alias("before"),
-                    F.struct(
-                        F.col("user_id"),
-                        F.col("event_id"),
-                        F.col("value"),
-                    ).alias("after"),
-                    op.alias("op"),
-                    F.expr("ts DIV 1000000").alias("ts_ms"),
-                ).alias("payload")
-            )
-        ).alias("value"),
+        _event_envelope().alias("value"),
         topic.alias("topic"),
         F.col("event_id").cast("long").alias("offset"),
         F.pmod("event_id", F.lit(3)).alias("__part"),
     )
-    work = _ephemeral_state_dir("cdc_consumer_log_")
-    staged = os.path.join(work, "staged")
-    envelopes.repartition(1).write.partitionBy("__part").json(staged)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    for i, p in enumerate(range(3)):
-        files = glob.glob(os.path.join(staged, f"__part={p}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"e{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    work = ephemeral_dir("cdc_consumer_log_")
+    data_dir = stage_batches(envelopes, "__part", work)
     consumer = CDCConsumer(
         warehouse_dir=os.path.join(work, "wh"),
         checkpoint_dir=os.path.join(work, "ckpt"),
@@ -1117,9 +1064,7 @@ def cdc_consumer_mirror_state(spark, sf_dir):
     offset order breaks the hash. This closes the last pytest-only
     flagship surface: both consumer modes (log + mirror) now carry
     driver-checked value hashes."""
-    import glob
     import os
-    import shutil
 
     from pyspark.sql import types as T
 
@@ -1127,27 +1072,11 @@ def cdc_consumer_mirror_state(spark, sf_dir):
     from ..streaming.consumer import CDCConsumer, TableSpec
 
     ev = load_table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-    )
     bounds = ev.agg(
         F.min("event_id").alias("min_id"), F.max("event_id").alias("max_id")
     )
     envelopes = ev.crossJoin(F.broadcast(bounds)).select(
-        F.to_json(
-            F.struct(
-                F.struct(
-                    F.lit(None).cast("string").alias("before"),
-                    F.struct(
-                        F.col("user_id"), F.col("event_id"), F.col("value")
-                    ).alias("after"),
-                    op.alias("op"),
-                    F.expr("ts DIV 1000000").alias("ts_ms"),
-                ).alias("payload")
-            )
-        ).alias("value"),
+        _event_envelope().alias("value"),
         F.lit("dbserver1.public.events").alias("topic"),
         F.col("event_id").cast("long").alias("offset"),
         # epochs split by OFFSET RANGE, not id modulus: the mirror merge
@@ -1160,17 +1089,8 @@ def cdc_consumer_mirror_state(spark, sf_dir):
             " DIV (max_id - min_id + 1) AS INT))"
         ).alias("__part"),
     )
-    work = _ephemeral_state_dir("cdc_consumer_mirror_")
-    staged = os.path.join(work, "staged")
-    envelopes.repartition(1).write.partitionBy("__part").json(staged)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    for i, p in enumerate(range(3)):
-        files = glob.glob(os.path.join(staged, f"__part={p}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"e{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    work = ephemeral_dir("cdc_consumer_mirror_")
+    data_dir = stage_batches(envelopes, "__part", work)
     schema = T.StructType(
         [
             T.StructField("user_id", T.LongType()),
@@ -1224,31 +1144,13 @@ def cdc_consumer_dlq_accounting(spark, sf_dir):
     tags). The oracle recomputes the classification from the
     construction — a record landing in the wrong place, double-landed
     under replay, or tagged with the wrong reason breaks the hash."""
-    import glob
     import os
-    import shutil
 
     from ..sources.files import envelope_json_stream
     from ..streaming.consumer import CDCConsumer
 
     ev = load_table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-    )
-    good = F.to_json(
-        F.struct(
-            F.struct(
-                F.lit(None).cast("string").alias("before"),
-                F.struct(
-                    F.col("user_id"), F.col("event_id"), F.col("value")
-                ).alias("after"),
-                op.alias("op"),
-                F.expr("ts DIV 1000000").alias("ts_ms"),
-            ).alias("payload")
-        )
-    )
+    good = _event_envelope()
     no_op = F.to_json(
         F.struct(
             F.struct(
@@ -1268,17 +1170,8 @@ def cdc_consumer_dlq_accounting(spark, sf_dir):
         F.col("event_id").cast("long").alias("offset"),
         F.pmod("event_id", F.lit(3)).alias("__part"),
     )
-    work = _ephemeral_state_dir("cdc_consumer_dlq_")
-    staged = os.path.join(work, "staged")
-    envelopes.repartition(1).write.partitionBy("__part").json(staged)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    for i, p in enumerate(range(3)):
-        files = glob.glob(os.path.join(staged, f"__part={p}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"e{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    work = ephemeral_dir("cdc_consumer_dlq_")
+    data_dir = stage_batches(envelopes, "__part", work)
     consumer = CDCConsumer(
         warehouse_dir=os.path.join(work, "wh"),
         checkpoint_dir=os.path.join(work, "ckpt"),
@@ -1340,48 +1233,21 @@ def cdc_consumer_scd2_intervals(spark, sf_dir):
     order in the SCD2 derivation (deletes must participate in the
     lead BEFORE being filtered, else the pre-delete version stays
     open) breaks the hash."""
-    import glob
     import os
-    import shutil
 
     from ..cdc.apply import scd2_from_log
     from ..sources.files import envelope_json_stream
     from ..streaming.consumer import CDCConsumer
 
     ev = load_table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-    )
     envelopes = ev.select(
-        F.to_json(
-            F.struct(
-                F.struct(
-                    F.lit(None).cast("string").alias("before"),
-                    F.struct(
-                        F.col("user_id"), F.col("event_id"), F.col("value")
-                    ).alias("after"),
-                    op.alias("op"),
-                    F.expr("ts DIV 1000000").alias("ts_ms"),
-                ).alias("payload")
-            )
-        ).alias("value"),
+        _event_envelope().alias("value"),
         F.lit("dbserver1.public.events").alias("topic"),
         F.col("event_id").cast("long").alias("offset"),
         F.pmod("event_id", F.lit(3)).alias("__part"),
     )
-    work = _ephemeral_state_dir("cdc_consumer_scd2_")
-    staged = os.path.join(work, "staged")
-    envelopes.repartition(1).write.partitionBy("__part").json(staged)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    for i, p in enumerate(range(3)):
-        files = glob.glob(os.path.join(staged, f"__part={p}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"e{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    work = ephemeral_dir("cdc_consumer_scd2_")
+    data_dir = stage_batches(envelopes, "__part", work)
     consumer = CDCConsumer(
         warehouse_dir=os.path.join(work, "wh"),
         checkpoint_dir=os.path.join(work, "ckpt"),
@@ -1703,7 +1569,6 @@ def cdc_consumer_catalog_landing(spark, sf_dir):
     exact seq sum from raw events — a row landed in the wrong table,
     a lost/duplicated batch, or a create-vs-append branch bug breaks
     the hash."""
-    import glob
     import os
     import shutil
     from urllib.parse import urlparse
@@ -1718,11 +1583,6 @@ def cdc_consumer_catalog_landing(spark, sf_dir):
         if wh:
             shutil.rmtree(f"{wh}/{db}.db/{tbl}", ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-    )
     topic = F.concat(
         F.lit("dbserver1.public.events_"),
         F.when(F.pmod("user_id", F.lit(2)) == 0, F.lit("even")).otherwise(
@@ -1730,31 +1590,13 @@ def cdc_consumer_catalog_landing(spark, sf_dir):
         ),
     )
     envelopes = ev.select(
-        F.to_json(
-            F.struct(
-                F.struct(
-                    F.lit(None).cast("string").alias("before"),
-                    F.struct(F.col("user_id"), F.col("value")).alias("after"),
-                    op.alias("op"),
-                    F.expr("ts DIV 1000000").alias("ts_ms"),
-                ).alias("payload")
-            )
-        ).alias("value"),
+        _event_envelope("user_id", "value").alias("value"),
         topic.alias("topic"),
         F.col("event_id").cast("long").alias("offset"),
         F.pmod("event_id", F.lit(3)).alias("__part"),
     )
-    work = _ephemeral_state_dir("cdc_consumer_catalog_")
-    staged = os.path.join(work, "staged")
-    envelopes.repartition(1).write.partitionBy("__part").json(staged)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    for i in range(3):
-        files = glob.glob(os.path.join(staged, f"__part={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"e{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    work = ephemeral_dir("cdc_consumer_catalog_")
+    data_dir = stage_batches(envelopes, "__part", work)
     consumer = CDCConsumer(
         warehouse_dir=os.path.join(work, "wh"),
         checkpoint_dir=os.path.join(work, "ckpt"),
@@ -1913,9 +1755,7 @@ def cdc_mirror_merge_replay(spark, sf_dir):
     MERGE file-pruning idea in plain parquet); trajectory rows are
     bounded aggregates; replay is idempotent because state rows keep
     their seq (a re-delivered batch cannot regress newer state)."""
-    import glob as _glob
     import os
-    import shutil
 
     from ..cdc.apply import (
         apply_changes,
@@ -1983,17 +1823,8 @@ def cdc_mirror_merge_replay(spark, sf_dir):
             .otherwise(2),
         )
     )
-    work = _ephemeral_state_dir("cdc_mirror_merge_")
-    staged = os.path.join(work, "staged")
-    log_all.repartition(1).write.partitionBy("__ep").json(staged)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    for i in range(3):
-        files = _glob.glob(os.path.join(staged, f"__ep={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"e{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    work = ephemeral_dir("cdc_mirror_merge_")
+    data_dir = stage_batches(log_all, "__ep", work)
     mirrors = {t: os.path.join(work, f"mirror_{t}") for t in ("account", "product")}
     out_dir = os.path.join(work, "traj")
 

@@ -39,6 +39,7 @@ from ..operators.curation_stages import (
     stage_row,
 )
 from ..operators.scale import pin
+from ..sources.files import ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..tables import load_table
 from . import register
@@ -627,11 +628,7 @@ def pipeline_curation_ingest_stream(spark, sf_dir):
     quality exprs) or an equi-join against the bounded standing index;
     the drive inherits exactly-once from epoch-partitioned dynamic
     overwrite (the CDC log/DLQ protocol)."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.curation import curation_ingest_stream
 
@@ -645,25 +642,14 @@ def pipeline_curation_ingest_stream(spark, sf_dir):
     arrivals = docs.filter(F.col("doc_id") >= t1).select(
         "doc_id", "source", "text"
     )
-    work = tempfile.mkdtemp(prefix="curation_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
+    work = ephemeral_dir("curation_stream_")
+    data_dir = stage_batches(
         arrivals.withColumn(
             "__b", F.when(F.col("doc_id") < 2 * t1, 0).otherwise(1)
-        )
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+        ),
+        "__b",
+        work,
     )
-    for i in range(2):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema("doc_id long, source string, text string")
         .option("maxFilesPerTrigger", 1)
@@ -808,11 +794,7 @@ def pipeline_curation_stream_e2e(spark, sf_dir):
     at checkpoint cadence, with the r12 frozen-centroid ingest screen
     (streaming/semdedup.py) as the per-arrival fast path between
     rebuilds."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.curation_e2e import curation_stream_e2e
 
@@ -821,29 +803,18 @@ def pipeline_curation_stream_e2e(spark, sf_dir):
     mx = docs.agg(F.max("doc_id")).collect()[0][0]
     tfull = int(mx) + 1
     c1, c2 = tfull * 1 // 3, tfull * 2 // 3
-    work = tempfile.mkdtemp(prefix="curation_stream_e2e_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
+    work = ephemeral_dir("curation_stream_e2e_")
+    data_dir = stage_batches(
         docs.select("doc_id", "source", "lang", "text")
         .withColumn(
             "__b",
             F.when(F.col("doc_id") < c1, 0)
             .when(F.col("doc_id") < c2, 1)
             .otherwise(2),
-        )
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+        ),
+        "__b",
+        work,
     )
-    for i in range(3):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema(
             "doc_id long, source string, lang string, text string"

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, similarity
 from ..operators.scale import pin
+from ..sources.files import ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..tables import load_table
 from . import register
@@ -1710,11 +1711,8 @@ def dedup_substring_index_stream(spark, sf_dir):
     prefix — it never sees the stream, so a dropped micro-batch, a
     mis-capped gram, a clone mishandled at the cut, or an island
     split across the ingest boundary breaks the hash."""
-    import atexit
-    import glob as _glob
     import os
     import shutil
-    import tempfile
     from urllib.parse import urlparse
 
     from ..streaming.substr import build_gram_index, ingest_substr_stream
@@ -1729,24 +1727,13 @@ def dedup_substring_index_stream(spark, sf_dir):
     mx = docs.agg(F.max("doc_id")).collect()[0][0]
     t1 = (int(mx) + 1) // 3
     build_gram_index(docs.filter(F.col("doc_id") < t1), name)
-    work = tempfile.mkdtemp(prefix="substr_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
+    work = ephemeral_dir("substr_stream_")
+    data_dir = stage_batches(
         docs.filter(F.col("doc_id") >= t1)
-        .withColumn("__b", (F.col("doc_id") >= 2 * t1).cast("int"))
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+        .withColumn("__b", (F.col("doc_id") >= 2 * t1).cast("int")),
+        "__b",
+        work,
     )
-    for i in range(2):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -1839,11 +1826,7 @@ def pipeline_bloom_decontam_stream(spark, sf_dir):
     epoch each doc must land in — a dropped batch, a wrong bit, a
     false negative (soundness breach), or a doc screened in the wrong
     epoch breaks the hash."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.decontam import decontam_stream
 
@@ -1852,28 +1835,17 @@ def pipeline_bloom_decontam_stream(spark, sf_dir):
     t1 = (int(mx) + 1) // 3
     bench = docs.filter(F.col("source") == "src0").select("doc_id", "text")
     cand = docs.filter(F.col("source") != "src0").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="bloom_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
+    work = ephemeral_dir("bloom_stream_")
+    data_dir = stage_batches(
         cand.withColumn(
             "__b",
             F.when(F.col("doc_id") < t1, 0)
             .when(F.col("doc_id") < 2 * t1, 1)
             .otherwise(2),
-        )
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+        ),
+        "__b",
+        work,
     )
-    for i in range(3):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)

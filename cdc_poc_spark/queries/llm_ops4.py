@@ -22,6 +22,7 @@ from pyspark.sql import Window as W
 
 from ..operators import similarity
 from ..operators.scale import overlap, pin, spread
+from ..sources.files import ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..tables import VAL, dec, load_table
 from . import register
@@ -1318,11 +1319,7 @@ def dedup_semdedup_stream(spark, sf_dir):
     rules replayed exactly by the oracle, which unrolls build + two
     screen epochs in SQL and never sees the stream. Parquet staging
     (not JSON) so float embeddings round-trip bit-exactly."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.semdedup import semdedup_stream
 
@@ -1333,24 +1330,14 @@ def dedup_semdedup_stream(spark, sf_dir):
     t1 = max(1, (int(mx) + 1) // 3)
     corpus = e.filter(F.col("vec_id") < t1)
     arriving = e.filter(F.col("vec_id") >= t1)
-    work = tempfile.mkdtemp(prefix="semdedup_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
+    work = ephemeral_dir("semdedup_stream_")
+    data_dir = stage_batches(
         arriving.select("vec_id", "embedding", "label")
-        .withColumn("__b", F.when(F.col("vec_id") < 2 * t1, 0).otherwise(1))
-        .repartition(1)
-        .write.partitionBy("__b")
-        .parquet(staged)
+        .withColumn("__b", F.when(F.col("vec_id") < 2 * t1, 0).otherwise(1)),
+        "__b",
+        work,
+        "parquet",
     )
-    for i in range(2):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*.parquet"))
-        (pf,) = files
-        dest = os.path.join(data_dir, f"b{i:03d}.parquet")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema(
             "vec_id long, embedding array<float>, label int"

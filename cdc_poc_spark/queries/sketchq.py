@@ -32,6 +32,7 @@ from ..operators.sketches import (
     rank_sample_summary,
     shard_stats,
 )
+from ..sources.files import ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..streaming.commit import write_epoch
 from ..tables import VAL, dec, load_table
@@ -577,11 +578,7 @@ def pipeline_quantile_sketch_stream(spark, sf_dir):
     the exact-answer verification column). This is the day->rollup
     lifecycle of agg_mergeable_quantile_sketch run through the
     streaming surface."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from ..operators.scale import global_cumsum, global_index
     from ..operators.sketches import rank_sample_summary
@@ -595,23 +592,12 @@ def pipeline_quantile_sketch_stream(spark, sf_dir):
         F.round(dec("value", VAL) * 100).cast("long").alias("y"),
         "event_id",
     )
-    work = tempfile.mkdtemp(prefix="qsketch_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
-        b.withColumn("__b", F.least(F.lit(2), F.expr(f"event_id DIV {t1}")))
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+    work = ephemeral_dir("qsketch_stream_")
+    data_dir = stage_batches(
+        b.withColumn("__b", F.least(F.lit(2), F.expr(f"event_id DIV {t1}"))),
+        "__b",
+        work,
     )
-    for i in range(3):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     state_dir = os.path.join(work, "summary")
 
     def handle(batch_df, batch_id: int) -> None:
@@ -786,11 +772,7 @@ def pipeline_mg_sketch_stream(spark, sf_dir):
     stages in SQL and never sees the stream — a lost batch, a wrong
     subtraction, or state read from the wrong epoch breaks the
     hash."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from ..operators.sketches import mg_merge, mg_summary
 
@@ -800,23 +782,12 @@ def pipeline_mg_sketch_stream(spark, sf_dir):
         raise ValueError("orders table is empty: cannot batch the stream drive")
     t1 = max(1, (int(mx) + 1) // 3)  # guard: tiny fixture must not DIV 0
     b = o.select(F.col("o_custkey").alias("cust"), "o_orderkey")
-    work = tempfile.mkdtemp(prefix="mg_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
-        b.withColumn("__b", F.least(F.lit(2), F.expr(f"o_orderkey DIV {t1}")))
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+    work = ephemeral_dir("mg_stream_")
+    data_dir = stage_batches(
+        b.withColumn("__b", F.least(F.lit(2), F.expr(f"o_orderkey DIV {t1}"))),
+        "__b",
+        work,
     )
-    for i in range(3):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     state_dir = os.path.join(work, "state")
     budget_dir = os.path.join(work, "budget")
     k = 12
@@ -984,11 +955,7 @@ def pipeline_hll_register_stream(spark, sf_dir):
     Scale: per-batch state is 256 rows regardless of batch size; the
     100 TB shape is per-day register partials unioned by MAX — the
     cheapest possible rollup lifecycle."""
-    import atexit
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).collect()[0][0]
@@ -996,23 +963,12 @@ def pipeline_hll_register_stream(spark, sf_dir):
         raise ValueError("events table is empty: cannot batch the stream drive")
     t1 = max(1, (int(mx) + 1) // 3)  # guard: tiny fixture must not DIV 0
     b = ev.select("user_id", "event_id")
-    work = tempfile.mkdtemp(prefix="hll_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    data_dir = os.path.join(work, "data")
-    os.makedirs(data_dir)
-    staged = os.path.join(work, "staged")
-    (
-        b.withColumn("__b", F.least(F.lit(2), F.expr(f"event_id DIV {t1}")))
-        .repartition(1)
-        .write.partitionBy("__b")
-        .json(staged)
+    work = ephemeral_dir("hll_stream_")
+    data_dir = stage_batches(
+        b.withColumn("__b", F.least(F.lit(2), F.expr(f"event_id DIV {t1}"))),
+        "__b",
+        work,
     )
-    for i in range(3):
-        files = _glob.glob(os.path.join(staged, f"__b={i}", "part-*"))
-        (pf,) = [f for f in files if not f.endswith(".crc")]
-        dest = os.path.join(data_dir, f"b{i:03d}.json")
-        shutil.move(pf, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     state_dir = os.path.join(work, "registers")
 
     bucket_expr = (

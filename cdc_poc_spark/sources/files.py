@@ -2,14 +2,64 @@
 supports, plus file *streams* that stand in for Kafka in tests —
 deterministic (processAllAvailable/availableNow) instead of the
 reference's sleep-and-poll e2e (reference test_cdc.py:119-122).
+Every staged stream drive builds its source with ``stage_batches``
+under an ``ephemeral_dir``.
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..session import configure_session
+
+
+def ephemeral_dir(prefix: str) -> str:
+    """mkdtemp reaped at interpreter exit. The stream-drive and IVM
+    queries return a DataFrame that reads this dir lazily, so it must
+    outlive the query function — but repeated invocations (the driver
+    runs each query twice; the sweep/audit/bench rebuild it) must not
+    leak bucketed parquet state trees under /tmp for the life of the
+    machine (ADVICE r7)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def stage_batches(df: DataFrame, batch_col: str, work: str, fmt: str = "json") -> str:
+    """Stage ``df`` as a file stream of one micro-batch per distinct
+    ``batch_col`` value and return its directory (``work/data``).
+
+    One pass writes ``df`` partitioned by ``batch_col`` (an integer tag)
+    in ``fmt``; each tag's single data file then becomes
+    ``b{i:05d}.{fmt}``, i its rank in numeric tag order, with mtime
+    ``1_700_000_000 + i``. The tag column is not in the files. A file
+    stream sorts by mtime, so under ``maxFilesPerTrigger=1`` micro-batch
+    i holds exactly the rows of the i-th smallest tag."""
+    staged = os.path.join(work, "staged")
+    df.repartition(1).write.partitionBy(batch_col).format(fmt).save(staged)
+    prefix = f"{batch_col}="
+    tag_dirs = sorted(
+        (d for d in os.listdir(staged) if d.startswith(prefix)),
+        key=lambda d: int(d[len(prefix):]),
+    )
+    data_dir = os.path.join(work, "data")
+    os.makedirs(data_dir)
+    for i, d in enumerate(tag_dirs):
+        tag_dir = os.path.join(staged, d)
+        parts = [f for f in os.listdir(tag_dir) if f.startswith("part-")]
+        if len(parts) != 1:
+            raise RuntimeError(f"{tag_dir}: expected one data file, got {parts}")
+        dest = os.path.join(data_dir, f"b{i:05d}.{fmt}")
+        shutil.move(os.path.join(tag_dir, parts[0]), dest)
+        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    return data_dir
+
 
 #: schema of a file-backed envelope record (matches what
 #: cdc.envelope.parse_envelope_* expect from a Kafka record)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -111,8 +112,6 @@ def test_kafka_batch_smoke(spark):
     where the environment can't provide one. Asserts the batch read
     path yields the (key, value, topic, partition, offset, ...) shape
     the envelope parser consumes."""
-    import pytest
-
     from cdc_poc_spark.sources import kafka
 
     servers = _kafka_broker()
@@ -243,3 +242,73 @@ def test_python_stream_source_deterministic_and_replayable(spark):
     assert r.readBetweenOffsets({"idx": 40}, {"idx": 55}) == [
         synthetic_event(i) for i in range(40, 55)
     ]
+
+
+@pytest.mark.parametrize("fmt", ["json", "parquet"])
+def test_stage_batches_one_file_per_tag_in_numeric_order(spark, tmp_path, fmt):
+    """stage_batches' contract: one file per distinct tag, mtimes in
+    NUMERIC tag order (12 tags, so a lexicographic sort would put 10
+    before 2), the tag column left out of the files, and one
+    micro-batch per file under maxFilesPerTrigger=1 — batch k holds
+    exactly tag k's rows (tag k has k + 1 rows, so a mix-up shows)."""
+    from cdc_poc_spark.streaming import await_done
+
+    rows = [(k * 100 + j, k, j) for k in range(12) for j in range(k + 1)]
+    df = spark.createDataFrame(rows, "id long, tag int, v long")
+    want = {k: sorted(r[0] for r in rows if r[1] == k) for k in range(12)}
+    work = str(tmp_path / "work")
+    os.makedirs(work)
+
+    data_dir = files.stage_batches(df, "tag", work, fmt)
+
+    names = sorted(os.listdir(data_dir))
+    assert names == [f"b{i:05d}.{fmt}" for i in range(12)]
+    mtimes = [os.stat(os.path.join(data_dir, n)).st_mtime for n in names]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    for k, n in enumerate(names):
+        staged = spark.read.format(fmt).load(os.path.join(data_dir, n))
+        assert "tag" not in staged.columns
+        assert sorted(r.id for r in staged.collect()) == want[k], n
+
+    got = {}
+
+    def record(batch_df, batch_id):
+        got[batch_id] = sorted(r.id for r in batch_df.collect())
+
+    stream = (
+        spark.readStream.schema("id long, v long")
+        .option("maxFilesPerTrigger", 1)
+        .format(fmt)
+        .load(data_dir)
+    )
+    q = (
+        stream.writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_done(q, 300)
+    assert got == want
+
+
+def test_staging_only_in_files_module():
+    """Every staged stream drive stages through sources/files.py
+    (stage_batches / ephemeral_dir): no other package file creates temp
+    dirs, registers exit hooks, or moves and re-times staged files."""
+    import re
+
+    pkg = os.path.dirname(os.path.dirname(files.__file__))
+    pattern = re.compile(r"mkdtemp|os\.utime|shutil\.move|atexit")
+    offenders = []
+    for root, _, names in os.walk(pkg):
+        for f in names:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == files.__file__:
+                continue
+            with open(path) as fh:
+                offenders += [
+                    f"{os.path.relpath(path, pkg)}:{i}"
+                    for i, line in enumerate(fh, 1)
+                    if pattern.search(line)
+                ]
+    assert not offenders, offenders
