@@ -20,11 +20,14 @@ consumer.py:76.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def apply_changes(
@@ -88,6 +91,54 @@ def has_bucketed_state(target_path: str) -> bool:
     )
 
 
+#: Parquet footer key under which Spark's writer stores the row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _bucket_state(
+    spark: SparkSession, target_path: str, buckets: list[int] | None = None
+) -> DataFrame | None:
+    """Read the given bucket directories of a bucketed-merge target (all
+    of them when ``buckets`` is None) with ``__bucket``, or None when
+    none of them exists.
+
+    The schema is the union by name of the files' Spark row schemas,
+    read from their footers on the driver, so a column that only some
+    buckets carry (schema evolution) is read from every file — NULL
+    where a file lacks it — and the read plans with no schema-inference
+    job. Its directory listing is driver-side too while the paths stay
+    under ``parallelPartitionDiscovery.threshold`` (session.RUNTIME_CONFS).
+    """
+    names = sorted(
+        (e for e in os.listdir(target_path) if e.startswith("__bucket=")),
+        key=lambda e: int(e.split("=", 1)[1]),
+    )
+    if buckets is not None:
+        wanted = {f"__bucket={b}" for b in buckets}
+        names = [e for e in names if e in wanted]
+    dirs = [os.path.join(target_path, e) for e in names]
+    # one schema per distinct footer, in bucket order
+    footers = dict.fromkeys(
+        pq.read_schema(os.path.join(d, f)).metadata[_SPARK_ROW_SCHEMA]
+        for d in dirs
+        for f in sorted(os.listdir(d))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    if not footers:
+        return None
+    schema, *others = [T.StructType.fromJson(json.loads(f)) for f in footers]
+    if others:
+        # merge_upsert's combine rule: union by name, types widened
+        union = spark.createDataFrame([], schema)
+        for other in others:
+            union = union.unionByName(
+                spark.createDataFrame([], other), allowMissingColumns=True
+            )
+        schema = union.schema
+    schema = schema.add("__bucket", T.IntegerType())
+    return spark.read.schema(schema).option("basePath", target_path).parquet(*dirs)
+
+
 def merge_into_parquet_bucketed(
     spark: SparkSession,
     target_path: str,
@@ -123,7 +174,9 @@ def merge_into_parquet_bucketed(
     state = None
     if exists:
         touched = [r["__bucket"] for r in batch_b.select("__bucket").distinct().collect()]
-        state = spark.read.parquet(target_path).filter(F.col("__bucket").isin(touched))
+        if not touched:
+            return
+        state = _bucket_state(spark, target_path, touched)
     merged = merge_upsert(state, batch_b, key_cols, seq_col, op_col, delete_ops)
     # Self-overwrite hazard: the merged plan reads the very files being
     # replaced. Write-aside distributed, then swap ONLY the touched
@@ -260,8 +313,12 @@ def merge_into(
 
 
 def read_bucketed_state(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read a bucketed-merge target without the layout column."""
-    return spark.read.parquet(target_path).drop("__bucket")
+    """Read a bucketed-merge target without the layout column, with
+    every column that any bucket holds."""
+    state = _bucket_state(spark, target_path)
+    if state is None:
+        raise FileNotFoundError(f"no bucket data under {target_path}")
+    return state.drop("__bucket")
 
 
 def scd2_from_log(

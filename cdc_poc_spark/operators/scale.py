@@ -29,7 +29,7 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, Iterator, TypeVar
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -130,9 +130,16 @@ def overlap(*fns: Callable[[], _R]) -> list[_R]:
     fill each other's stage tails instead of running back to back (3 in
     flight is enough without starving any one job of executors).
     Returns the results in argument order; the first exception raised
-    (in argument order) propagates once every callable has finished."""
+    (in argument order) propagates once every callable has finished.
+    Each thread runs its jobs under the caller's Spark local properties
+    (job group, description, scheduler pool) and job tags, so the
+    caller's job group or tag counts and cancels them."""
+    if not fns:
+        return []
+    session = SparkSession.getActiveSession()
+    inherit = inheritable_thread_target(session) if session else inheritable_thread_target
     with ThreadPoolExecutor(max_workers=min(len(fns), 3)) as pool:
-        futures = [pool.submit(fn) for fn in fns]
+        futures = [pool.submit(inherit(fn)) for fn in fns]
     return [f.result() for f in futures]
 
 

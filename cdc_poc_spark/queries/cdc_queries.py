@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.scale import pin
-from ..sources.files import ephemeral_dir, stage_batches
+from ..sources.files import ephemeral_database, ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..tables import VAL, dec, events_with_time, load_table
 from . import register
@@ -1570,18 +1570,11 @@ def cdc_consumer_catalog_landing(spark, sf_dir):
     a lost/duplicated batch, or a create-vs-append branch bug breaks
     the hash."""
     import os
-    import shutil
-    from urllib.parse import urlparse
 
     from ..sources.files import envelope_json_stream
     from ..streaming.consumer import CDCConsumer
 
-    db = "cdcdb"
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    for tbl in ("public_events_even", "public_events_odd"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        if wh:
-            shutil.rmtree(f"{wh}/{db}.db/{tbl}", ignore_errors=True)
+    db = ephemeral_database(spark, "cdcdb")
     ev = load_table(spark, sf_dir, "events")
     topic = F.concat(
         F.lit("dbserver1.public.events_"),

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, similarity
 from ..operators.scale import pin
-from ..sources.files import ephemeral_dir, stage_batches
+from ..sources.files import ephemeral_database, ephemeral_dir, stage_batches
 from ..streaming import await_done
 from ..tables import load_table
 from . import register
@@ -1712,17 +1712,10 @@ def dedup_substring_index_stream(spark, sf_dir):
     mis-capped gram, a clone mishandled at the cut, or an island
     split across the ingest boundary breaks the hash."""
     import os
-    import shutil
-    from urllib.parse import urlparse
 
     from ..streaming.substr import build_gram_index, ingest_substr_stream
 
-    name = "substr_ingest"
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    for tbl in (f"{name}_grams", f"{name}_lens", f"{name}_meta", f"{name}_applied"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if wh:
-            shutil.rmtree(f"{wh}/{tbl}", ignore_errors=True)
+    name = f"{ephemeral_database(spark, 'substrdb')}.substr_ingest"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mx = docs.agg(F.max("doc_id")).collect()[0][0]
     t1 = (int(mx) + 1) // 3

@@ -44,6 +44,14 @@ RUNTIME_CONFS = {
     # Cache consumers may see different partitioning across re-use —
     # fine here: nothing relies on cached output partitioning.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # List up to 1024 input paths on the driver instead of in a Spark
+    # job. At the default of 32, a read of a 64-bucket mirror state
+    # (cdc.apply) ran a 64-task listing job per table per micro-batch,
+    # even with its schema given: measured, 64 bucket directories or
+    # 64 file paths -> 1 job, 20 directories -> 0 jobs. At local[2] on
+    # a 4-vCPU 2.1 GHz Xeon, planning that read took ~0.5 s with the
+    # job and ~0.05-0.08 s listed on the driver.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
 }
 
 

@@ -31,6 +31,17 @@ def ephemeral_dir(prefix: str) -> str:
     return d
 
 
+def ephemeral_database(spark: SparkSession, db: str) -> str:
+    """(Re)create the session-catalog database ``db`` with its location
+    in an ``ephemeral_dir``, and return ``db``. An earlier ``db`` is
+    dropped with its tables first, so every call starts empty, and the
+    managed tables' files are reaped at exit instead of staying in the
+    working directory's ``spark-warehouse/``."""
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{ephemeral_dir(db + '_')}'")
+    return db
+
+
 def stage_batches(df: DataFrame, batch_col: str, work: str, fmt: str = "json") -> str:
     """Stage ``df`` as a file stream of one micro-batch per distinct
     ``batch_col`` value and return its directory (``work/data``).

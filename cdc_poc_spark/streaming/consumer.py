@@ -12,10 +12,11 @@ Reference anti-patterns fixed (SURVEY §4 last row):
 - the N+1 re-scan (per-topic filter re-reads the batch,
   consumer.py:69-72) -> log mode lands ALL tables in ONE partitioned
   write (partitionBy over the routing column); mirror mode persists the
-  batch before the per-table loop
-- `.rdd.flatMap(list).collect()` topic discovery -> plain
-  distinct().collect() of the routing column (tiny cardinality), and
-  only in mirror mode
+  raw batch before its DLQ split and per-table loop
+- `.rdd.flatMap(list).collect()` topic discovery -> none in log or
+  mirror mode (mirror mode loops over its configured tables); the
+  catalog landing path keeps a plain distinct().collect() of the
+  routing column (tiny cardinality)
 - the `TODO: Switch to MERGE INTO` (consumer.py:76) -> mirror mode
   actually merges (cdc.apply.merge_into_parquet_bucketed; a
   transactional catalog swaps in SQL MERGE with the same batch contract)
@@ -119,24 +120,18 @@ class CDCConsumer:
 
     def merge_mirror_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Upsert current-state mirrors, one per configured table.
-        The batch is persisted once (fixes the N+1 re-scan); each
-        table's slice is typed-parsed and MERGEd by key with
-        last-writer-wins on Kafka offset."""
-        batch_df = self._quarantine(batch_df, epoch_id)
+        The raw batch is persisted first, so the DLQ split and every
+        table's slice share one source scan (fixes the N+1 re-scan);
+        each slice is typed-parsed and MERGEd by key with
+        last-writer-wins on Kafka offset. There is no per-batch table
+        discovery: a table absent from the batch costs an existing
+        mirror one touched-bucket collect and no read or write, and
+        writes a mirror that does not exist yet as empty."""
         batch_df.persist()
         try:
-            present = {
-                r.t
-                for r in batch_df.select(
-                    env.table_from_topic("topic").alias("t")
-                )
-                .distinct()
-                .collect()  # tiny cardinality: one row per source table
-            }
+            good = self._quarantine(batch_df, epoch_id)
             for tbl, spec in self.tables.items():
-                if tbl not in present:
-                    continue
-                sub = batch_df.filter(env.table_from_topic("topic") == tbl)
+                sub = good.filter(env.table_from_topic("topic") == tbl)
                 typed = env.parse_envelope_typed(
                     sub, spec.schema, key_cols=spec.key_cols
                 ).select(

@@ -7,6 +7,7 @@ deterministic asserts — replacing the reference's sleep-and-scrape e2e
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -301,6 +302,139 @@ def test_merge_into_parquet_bucketed(spark, tmp_path):
     assert not os.path.exists(os.path.join(target, bucket_of_3))
     got = {r.pk for r in cdc_apply.read_bucketed_state(spark, target).collect()}
     assert got == set(range(20)) - set(same_bucket_keys)
+
+
+def test_bucketed_state_keeps_columns_of_any_bucket(spark, tmp_path):
+    """A column that only some buckets carry survives a merge into a
+    bucket whose batch lacks it, and every read shows it: the state
+    schema is the union of all bucket files' schemas, not one file's.
+    (Reading one file's schema dropped ``plan`` from the state, and the
+    third merge rewrote pk 3's bucket without it.)"""
+    target = str(tmp_path / "state")
+    old = "pk LONG, val STRING, seq LONG, op STRING"
+    b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in range(40)], old)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8)
+    b2 = spark.createDataFrame(
+        [(3, "v3", "premium", 100, "u")],
+        "pk LONG, val STRING, plan STRING, seq LONG, op STRING",
+    )
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8)
+    assert "plan" in cdc_apply.read_bucketed_state(spark, target).columns
+    b3 = spark.createDataFrame(
+        [(i, f"w{i}", 200 + i, "u") for i in range(40) if i != 3], old
+    )
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8)
+    got = {
+        r.pk: (r.val, r.plan)
+        for r in cdc_apply.read_bucketed_state(spark, target).collect()
+    }
+    assert got == {
+        i: ("v3", "premium") if i == 3 else (f"w{i}", None) for i in range(40)
+    }
+
+
+def test_bucketed_state_widens_a_type_that_differs_across_buckets(spark, tmp_path):
+    """A key widened from INT to BIGINT rewrites only the touched
+    buckets; the state read widens the untouched buckets' INT files to
+    BIGINT (merge_upsert's union rule) instead of failing on them."""
+    target = str(tmp_path / "state")
+    narrow = "pk INT, val STRING, seq LONG, op STRING"
+    b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in range(40)], narrow)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8)
+    b2 = spark.createDataFrame(
+        [(3, "w3", 100, "u"), (2**40, "big", 101, "c")],
+        "pk LONG, val STRING, seq LONG, op STRING",
+    )
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8)
+    b3 = spark.createDataFrame([(5, "w5", 200, "u")], narrow)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8)
+    state = cdc_apply.read_bucketed_state(spark, target)
+    assert dict(state.dtypes)["pk"] == "bigint"
+    want = {i: f"v{i}" for i in range(40)} | {3: "w3", 5: "w5", 2**40: "big"}
+    assert {r.pk: r.val for r in state.collect()} == want
+
+
+def _jobs_in_group(spark, group, fn) -> int:
+    """Run ``fn`` under Spark job group ``group``; return its job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _kv_env(table, key, val, offset):
+    after = {f"{table}_id": key, "name": val}
+    value = json.dumps(
+        {"payload": {"before": None, "after": after, "op": "u", "ts_ms": offset}}
+    )
+    return (value, f"cdc.commerce.{table}", offset)
+
+
+def test_bucketed_merge_plans_state_read_without_jobs(spark, tmp_path):
+    """The merge into an existing 64-bucket target plans its state read
+    with no Spark job: no schema-inference job (the schema comes from
+    the bucket files' footers) and no listing job (64 paths are under
+    ``parallelPartitionDiscovery.threshold``). Measured at local[4]:
+    the merge ran 6 jobs when its state read inferred the schema and
+    listed the buckets in a job, and runs 4 now (touched collect and
+    write); one two-table ``merge_mirror_batch`` with a DLQ ran 16 jobs
+    when it also collected the batch's tables, and runs 9 now."""
+    target = str(tmp_path / "state")
+    schema = "pk LONG, val STRING, seq LONG, op STRING"
+    keys = range(1000)
+    b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in keys], schema)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"])
+    b2 = spark.createDataFrame([(i, f"w{i}", 5000 + i, "u") for i in keys], schema)
+    n_jobs = _jobs_in_group(
+        spark,
+        "bucketed_merge_budget",
+        lambda: cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"]),
+    )
+    assert len([d for d in os.listdir(target) if d.startswith("__bucket=")]) == 64
+    got = {(r.pk, r.val) for r in cdc_apply.read_bucketed_state(spark, target).collect()}
+    assert got == {(i, f"w{i}") for i in keys}
+    assert n_jobs <= 4, n_jobs
+
+    tables = {
+        f"commerce_{t}": TableSpec(
+            T.StructType(
+                [
+                    T.StructField(f"{t}_id", T.IntegerType()),
+                    T.StructField("name", T.StringType()),
+                ]
+            ),
+            (f"{t}_id",),
+        )
+        for t in ("account", "product")
+    }
+    c = CDCConsumer(
+        str(tmp_path / "wh"), str(tmp_path / "ck"), tables=tables,
+        dlq_dir=str(tmp_path / "dlq"),
+    )
+    raw = "value string, topic string, offset long"
+
+    def batch(base):
+        rows = [
+            _kv_env(t, i, f"n{base + i}", base + 2 * i + j)
+            for i in range(500)
+            for j, t in enumerate(("account", "product"))
+        ]
+        return spark.createDataFrame(rows + [("{oops", "cdc.commerce.account", base)], raw)
+
+    c.merge_mirror_batch(batch(0), 0)
+    b = batch(10_000)
+    n_jobs = _jobs_in_group(
+        spark, "mirror_batch_budget", lambda: c.merge_mirror_batch(b, 1)
+    )
+    for tbl, key in (("commerce_account", "account_id"), ("commerce_product", "product_id")):
+        got = {(r[key], r.name) for r in c.read_mirror(spark, tbl).collect()}
+        assert got == {(i, f"n{10_000 + i}") for i in range(500)}
+    assert n_jobs <= 9, n_jobs
 
 
 def test_merge_sql_statement_shape():

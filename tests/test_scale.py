@@ -319,6 +319,25 @@ def test_overlap_keeps_argument_order_and_propagates():
         scale.overlap(slow("a", 0.0), boom)
 
 
+def test_overlap_runs_jobs_under_the_callers_job_group(spark):
+    """Jobs started inside overlap's threads carry the caller's Spark
+    local properties, so the caller's job group counts (and can cancel)
+    them."""
+    sc = spark.sparkContext
+    sc.setJobGroup("overlap_group", "overlap")
+    try:
+        scale.overlap(lambda: spark.range(10).count(), lambda: spark.range(5).count())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("overlap_group")) >= 2
+
+
+def test_overlap_of_nothing_is_empty():
+    assert scale.overlap() == []
+
+
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
