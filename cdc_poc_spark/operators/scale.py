@@ -252,48 +252,6 @@ def global_index(
     )
 
 
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files (the
-    maintenance job every CDC/append pipeline needs: micro-batches leave
-    thousands of small files, and at 100 TB the scan's task count — and
-    the object store's LIST/GET bill — follows file count, not bytes).
-
-    Returns the new file count. Optional sort_cols re-sorts data within
-    output files for min/max row-group skipping on those columns.
-    Write-aside + atomic swap, same pattern as the merge sinks.
-    """
-    import math
-    import shutil
-
-    df = spark.read.parquet(path)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        out = df.coalesce(n_files)
-    tmp = path.rstrip("/") + ".__compact__"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return sum(
-        1
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-
-
 def zorder_by(
     df: DataFrame,
     cols: list[str],

@@ -1750,13 +1750,8 @@ def cdc_mirror_merge_replay(spark, sf_dir):
     their seq (a re-delivered batch cannot regress newer state)."""
     import os
 
-    from ..cdc.apply import (
-        apply_changes,
-        has_bucketed_state,
-        merge_into_parquet_bucketed,
-        read_bucketed_state,
-    )
-    from ..streaming.commit import write_epoch
+    from ..cdc.apply import apply_changes, merge_into_parquet_bucketed
+    from ..streaming.commit import BUCKET, BucketedState, write_epoch
 
     cust = load_table(spark, sf_dir, "customer")
     part = load_table(spark, sf_dir, "part")
@@ -1840,6 +1835,9 @@ def cdc_mirror_merge_replay(spark, sf_dir):
         F.lit(0),
     ).cast("long")
 
+    def mirror(t: str):
+        return BucketedState(spark, mirrors[t]).read().drop(BUCKET)
+
     def handle(batch_df, batch_id: int) -> None:
         batch_df = pin(batch_df)
         topics = [
@@ -1852,24 +1850,17 @@ def cdc_mirror_merge_replay(spark, sf_dir):
                 batch_df.filter(F.col("tbl") == t).drop("tbl"),
                 ["id"],
                 n_buckets=16,
+                epoch=batch_id,
             )
         rows = []
         for t in ("account", "product"):
             # the manual DELETE FROM empties the account mirror
-            if has_bucketed_state(mirrors[t]):
-                st = read_bucketed_state(spark, mirrors[t])
-                agg = st.agg(
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.coalesce(F.sum("id"), F.lit(0))
-                    .cast("long")
-                    .alias("key_sum"),
-                    crc.alias("payload_crc"),
-                ).collect()[0]
-                rows.append(
-                    (t, agg["n_rows"], agg["key_sum"], agg["payload_crc"])
-                )
-            else:
-                rows.append((t, 0, 0, 0))
+            agg = mirror(t).agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.coalesce(F.sum("id"), F.lit(0)).cast("long").alias("key_sum"),
+                crc.alias("payload_crc"),
+            ).collect()[0]
+            rows.append((t, agg["n_rows"], agg["key_sum"], agg["payload_crc"]))
         write_epoch(
             spark.createDataFrame(
                 rows, "tbl string, n_rows long, key_sum long, payload_crc long"
@@ -1902,12 +1893,7 @@ def cdc_mirror_merge_replay(spark, sf_dir):
         want = apply_changes(logs[t], ["id"]).select(
             "id", "val", "created_ts", "op", "seq"
         )
-        if has_bucketed_state(mirrors[t]):
-            have = read_bucketed_state(spark, mirrors[t]).select(
-                "id", "val", "created_ts", "op", "seq"
-            )
-        else:
-            have = want.limit(0)
+        have = mirror(t).select("id", "val", "created_ts", "op", "seq")
         diff_n = (
             have.exceptAll(want).unionByName(want.exceptAll(have)).count()
         )

@@ -14,9 +14,12 @@ Three forms, one per kind of state:
   bucketed catalog tables). The unguarded window is the one write
   between the side effect and ``mark_applied``.
 - ``VersionedDir``: state that is rewritten rather than appended
-  (maintained aggregates and join views) commits whole versions
-  ``v<N>/`` with a ``meta.json`` and publishes them by swapping the
-  ``CURRENT`` pointer file.
+  (maintained aggregates) commits whole versions ``v<N>/`` with a
+  ``meta.json`` and publishes them by swapping the ``CURRENT`` pointer
+  file.
+- ``BucketedState``: hash-bucketed keyed state (the CDC mirror, the
+  maintained join view) appends each epoch's touched buckets in place
+  and publishes the set of live files through the same pointer swap.
 """
 
 from __future__ import annotations
@@ -26,8 +29,13 @@ import os
 import shutil
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: the layout column of a ``BucketedState``: rows live under
+#: ``<side>/__bucket=N/``
+BUCKET = "__bucket"
 
 
 def write_epoch(
@@ -148,3 +156,133 @@ class VersionedDir:
         nor ``live_versions`` still needs."""
         self._publish(version, meta)
         self._gc({version, *live_versions})
+
+
+class BucketedState(VersionedDir):
+    """Keyed state hash-bucketed by ``BUCKET`` into one or more sides:
+    side ``s`` keeps its rows under ``<state_dir>/<s>/__bucket=N/`` (side
+    ``""`` is ``state_dir`` itself). The committed version's meta.json is
+    the manifest: each side's live file names per bucket, each side's
+    row schema (union by name of every epoch's, types widened) and the
+    last applied epoch.
+
+    A commit appends new files for the buckets it touches next to the
+    live ones, publishes the manifest that swaps them in, and only then
+    deletes the files it superseded. A crash anywhere leaves either the
+    old manifest (the new files are orphans, deleted by the next commit
+    before it writes) or the new one (the superseded files are never
+    read again), so a replay of the epoch rebuilds or skips it."""
+
+    def __init__(self, spark: SparkSession, state_dir: str) -> None:
+        super().__init__(state_dir)
+        self.spark = spark
+
+    @staticmethod
+    def bucket(key_cols: Iterable[str], n_buckets: int) -> Column:
+        """The bucket of a row: ``pmod(xxhash64(cast(key as string)), n)``.
+        The cast makes it a function of the key's value, not of its
+        physical type (xxhash64(int 2) != xxhash64(bigint 2)), so a key
+        widened by schema evolution stays in its bucket."""
+        h = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
+        return F.pmod(h, F.lit(n_buckets)).cast("int")
+
+    def _manifest(self) -> dict | None:
+        cur = self._current_version()
+        return None if cur is None else self._meta(cur)
+
+    def applied(self, epoch: int) -> bool:
+        """True when ``epoch`` is at or below the last committed one:
+        epochs are a stream's increasing batch ids, so it is a replay."""
+        m = self._manifest()
+        return m is not None and epoch <= m["epoch"]
+
+    def read(self, side: str = "") -> DataFrame | None:
+        """Every live row of ``side`` with ``BUCKET``, or None before
+        the side's first commit. One scan over the manifest's files in
+        its recorded schema, so it plans with no Spark job; a side that
+        holds no rows reads as zero rows in that schema. Filter on
+        ``BUCKET`` to read some buckets: the scan prunes the rest."""
+        m = self._manifest()
+        if m is None or side not in m["schemas"]:
+            return None
+        schema = T.StructType.fromJson(m["schemas"][side]).add(BUCKET, T.IntegerType())
+        root = os.path.join(self.state_dir, side)
+        paths = [
+            os.path.join(root, f"{BUCKET}={b}", name)
+            for b, names in m["files"][side].items()
+            for name in names
+        ]
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).option("basePath", root).parquet(*paths)
+
+    def commit(
+        self, epoch: int, touched: Iterable[int] | None, sides: dict[str, DataFrame]
+    ) -> None:
+        """Commit ``epoch``: each ``sides[s]`` (rows with ``BUCKET``)
+        becomes the whole content of side ``s``'s ``touched`` buckets
+        (of every bucket when ``touched`` is None), one file per bucket;
+        every other bucket and side keeps its files."""
+        cur = self._current_version()
+        old = self._meta(cur) if cur is not None else {"schemas": {}, "files": {}}
+        version = self._begin(cur)
+        self._sweep(old["files"])
+        touched = None if touched is None else {str(b) for b in touched}
+        schemas, files = dict(old["schemas"]), dict(old["files"])
+        for side, df in sides.items():
+            root = os.path.join(self.state_dir, side)
+            df.repartition(BUCKET).write.mode("append").partitionBy(BUCKET).parquet(root)
+            schemas[side] = self._widen(schemas.get(side), df.drop(BUCKET).schema)
+            prev = files.get(side, {})
+            live = {b: n for b, n in prev.items() if touched is not None and b not in touched}
+            for b, names in self._listing(root).items():
+                new = sorted(set(names) - set(prev.get(b, ())))
+                if new and (touched is None or b in touched):
+                    live[b] = new
+            files[side] = live
+        self._commit(version, {"epoch": epoch, "schemas": schemas, "files": files})
+        self._sweep(files)
+
+    def _widen(self, recorded: dict | None, schema: T.StructType) -> dict:
+        """``schema`` united by name with the ``recorded`` one: the
+        schema every live file of the side reads in."""
+        if recorded is not None and recorded != schema.jsonValue():
+            empty = self.spark.createDataFrame
+            schema = (
+                empty([], T.StructType.fromJson(recorded))
+                .unionByName(empty([], schema), allowMissingColumns=True)
+                .schema
+            )
+        return schema.jsonValue()
+
+    @staticmethod
+    def _listing(root: str) -> dict[str, list[str]]:
+        """Bucket -> the data files on disk in its directory under ``root``."""
+        if not os.path.isdir(root):
+            return {}
+        return {
+            d.split("=", 1)[1]: [
+                n for n in os.listdir(os.path.join(root, d)) if not n.startswith((".", "_"))
+            ]
+            for d in os.listdir(root)
+            if d.startswith(BUCKET + "=")
+        }
+
+    def _sweep(self, files: dict) -> None:
+        """Delete every file in a bucket directory that ``files`` does
+        not list (with its checksum), each bucket directory this leaves
+        empty, and the ``_temporary`` directory of an unfinished write."""
+        for root, dirs, names in os.walk(self.state_dir):
+            if "_temporary" in dirs:
+                dirs.remove("_temporary")
+                shutil.rmtree(os.path.join(root, "_temporary"))
+            base = os.path.basename(root)
+            if not base.startswith(BUCKET + "="):
+                continue
+            side = os.path.relpath(os.path.dirname(root), self.state_dir)
+            live = set(files.get("" if side == "." else side, {}).get(base.split("=", 1)[1], ()))
+            for n in names:
+                if n not in live and n.lstrip(".").removesuffix(".crc") not in live:
+                    os.remove(os.path.join(root, n))
+            if not os.listdir(root):
+                os.rmdir(root)

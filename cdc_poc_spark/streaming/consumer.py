@@ -34,7 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..cdc import apply as cdc_apply
 from ..cdc import envelope as env
-from .commit import write_epoch
+from .commit import BUCKET, BucketedState, write_epoch
 
 
 @dataclass
@@ -144,6 +144,7 @@ class CDCConsumer:
                     self._spark(batch_df), target, typed,
                     list(spec.key_cols), seq_col="seq", op_col="op",
                     delete_ops=("D",), n_buckets=self.mirror_buckets,
+                    epoch=epoch_id,
                 )
         finally:
             batch_df.unpersist()
@@ -294,15 +295,6 @@ class CDCConsumer:
     def read_mirror(self, spark, table_name: str) -> DataFrame:
         """Current state of one mirrored table: its row columns plus the
         ``op``/``seq`` of each key's last change. A mirror whose keys were
-        all deleted holds no bucket, so it reads as zero rows."""
+        all deleted reads as zero rows."""
         target = os.path.join(self.warehouse_dir, "mirror", table_name)
-        if cdc_apply.has_bucketed_state(target):
-            return cdc_apply.read_bucketed_state(spark, target)
-        schema = T.StructType(
-            [
-                *self.tables[table_name].schema.fields,
-                T.StructField("op", T.StringType()),
-                T.StructField("seq", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame([], schema)
+        return BucketedState(spark, target).read().drop(BUCKET)

@@ -13,23 +13,17 @@ recomputed ONLY for the join keys the batch touches:
 
     affected = jk(delta_left) ∪ jk(delta_right)
     V_new[affected]   = L_new[affected] ⋈ R_new[affected]
-    V_new[~affected]  = V_old[~affected]        (no I/O — see manifest)
+    V_new[~affected]  = V_old[~affected]        (no I/O)
 
-Bucket manifest (the scale design): state and view are hash-bucketed by
-join key (``__bkt = pmod(xxhash64(jk), n_buckets)``). Each committed
-VERSION directory holds parquet for the buckets that batch touched;
-``meta.json`` maps every bucket to the version that last wrote it
-(an Iceberg-snapshot-style manifest, reimplemented from the published
-idea on plain parquet — no table-format jar needed). Readers compose
-each side as the union of per-bucket current locations; untouched
-buckets are never copied forward, so per-batch I/O is
-O(delta + affected buckets), not O(state).
-
-Exactly-once: the manifest (bucket pointers + applied-epoch set) and
-the bucket data COMMIT ATOMICALLY via the CURRENT-pointer protocol of
-streaming/commit.py (``VersionedDir``). A crash before the pointer
-swap leaves every bucket pointing at its old version and the epoch
-unrecorded — replay recomputes from consistent state.
+Storage: both side states and the view are sides of one
+``streaming.commit.BucketedState`` — the keyed store the CDC mirror
+(cdc/apply.py) commits through too — hash-bucketed by join key under
+``<state_dir>/<side>/__bucket=N/``. A batch reads and rewrites only the
+affected buckets of the sides it changes; untouched buckets keep their
+files, so per-batch I/O is O(delta + affected buckets), not O(state).
+The new files of every side and the applied epoch are published by
+one manifest commit, so a crash before it leaves every reader and
+every replay on the old state, and a replayed epoch is a no-op.
 
 Contract (documented constraint, the same one Kafka Streams KTable
 joins and most MV engines impose): the JOIN KEY is part of a row's
@@ -42,17 +36,16 @@ wins per key, matching the CDC mirror's semantics.
 
 from __future__ import annotations
 
-import json
-import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.apply import merge_upsert
-from .commit import VersionedDir
+from .commit import BUCKET, BucketedState
 
 
-class MaterializedJoin(VersionedDir):
+class MaterializedJoin(BucketedState):
     """Maintains ``left ⋈ right ON left[join_key] = right[join_key]``
     (inner equi-join) under two-sided CDC deltas.
 
@@ -71,69 +64,10 @@ class MaterializedJoin(VersionedDir):
         join_key: str,
         n_buckets: int = 16,
     ) -> None:
-        super().__init__(state_dir)
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.left_id = left_id
         self.join_key = join_key
         self.n_buckets = n_buckets
-
-    def _manifest(self, version: int | None) -> dict:
-        if version is None:
-            return {"epochs": [], "buckets": {}, "schemas": {}}
-        m = self._meta(version)
-        m.setdefault("schemas", {})
-        return m
-
-    def _bucket_paths(
-        self, manifest: dict, side: str, buckets: set[int] | None = None
-    ) -> list[str]:
-        out = []
-        for b, ver in manifest["buckets"].items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            p = os.path.join(self._vdir(ver), side, f"__bktp={b}")
-            if os.path.exists(p):
-                out.append(p)
-        return out
-
-    def _read_side(
-        self, manifest: dict, side: str, buckets: set[int] | None = None
-    ) -> DataFrame | None:
-        """Compose a side as the union of its buckets' CURRENT locations
-        (each possibly in a different version dir — the manifest is what
-        makes untouched buckets free). When no bucket has data, returns
-        an EMPTY frame in the side's recorded schema (a fully-deleted
-        view is a legitimate state, not an error) — or None before the
-        side has ever been written."""
-        paths = self._bucket_paths(manifest, side, buckets)
-        if not paths:
-            schema_json = manifest["schemas"].get(side)
-            if schema_json is None:
-                return None
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(json.loads(schema_json))
-            return self.spark.createDataFrame([], schema).withColumn(
-                "__bkt", F.lit(None).cast("int")
-            )
-        # __bkt is stored as a DATA column (the partition dir __bktp= is
-        # a duplicate), so all buckets read as ONE multi-path scan — a
-        # per-bucket union would grow the plan linearly with bucket
-        # count (measured: the 4-epoch driver query spent most of its
-        # 19 s in per-epoch 16-way union plans before this).
-        return self.spark.read.parquet(*paths)
-
-    def _bkt(self, col: str):
-        return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets)).cast("int")
-
-    def _side_specs(self) -> list[tuple[str, list[str]]]:
-        """Every maintained side with its within-bucket sort keys —
-        compaction rewrites exactly these."""
-        return [
-            ("left", [self.left_id]),
-            ("right", [self.join_key]),
-            ("view", [self.left_id]),
-        ]
 
     # -- the per-batch update -------------------------------------------
 
@@ -145,160 +79,72 @@ class MaterializedJoin(VersionedDir):
     ) -> None:
         """Advance both side states and the join view by one micro-batch
         of deltas (either side may be None = no changes)."""
-        cur = self._current_version()
-        manifest = self._manifest(cur)
-        if epoch_id in manifest["epochs"]:
+        if self.applied(epoch_id):
             return  # replay after crash: committed state reflects this epoch
-        new_v = self._begin(cur)
-        vdir = self._vdir(new_v)
-
         jk = self.join_key
-        dl = (
-            delta_left.withColumn("__bkt", self._bkt(jk))
-            if delta_left is not None
-            else None
-        )
-        dr = (
-            delta_right.withColumn("__bkt", self._bkt(jk))
-            if delta_right is not None
-            else None
-        )
-        bkts = None
-        for d in (dl, dr):
-            if d is not None:
-                bkts = d.select("__bkt") if bkts is None else bkts.union(d.select("__bkt"))
-        affected = (
-            {r["__bkt"] for r in bkts.distinct().collect()} if bkts is not None else set()
-        )
-        if not affected:  # record the epoch, keep every bucket pointer
-            self._commit(
-                new_v,
-                {**manifest, "epochs": manifest["epochs"] + [epoch_id]},
-                manifest["buckets"].values(),
-            )
+        bucket = self.bucket([jk], self.n_buckets)
+        deltas = {
+            side: d.withColumn(BUCKET, bucket)
+            for side, d in (("left", delta_left), ("right", delta_right))
+            if d is not None
+        }
+        affected = []
+        if deltas:
+            bkts = reduce(DataFrame.union, [d.select(BUCKET) for d in deltas.values()])
+            affected = [r[BUCKET] for r in bkts.distinct().collect()]
+        if not affected:  # record the epoch, keep every file
+            self.commit(epoch_id, [], {})
             return
 
-        # only the affected buckets' old state is ever read
-        old_left = self._read_side(manifest, "left", affected)
-        old_right = self._read_side(manifest, "right", affected)
-        # last writer wins per key, the CDC mirror's rule: max __seq, a
-        # delete wins a tie, surviving deletes evict the row
+        # only the affected buckets' old state is ever read; last writer
+        # wins per key, the CDC mirror's rule: max __seq, a delete wins
+        # a tie, surviving deletes evict the row
         lww = dict(seq_col="__seq", op_col="__op", delete_ops=("d",))
-        left_new = (
-            old_left if dl is None else merge_upsert(old_left, dl, [self.left_id], **lww)
-        )
-        right_new = old_right if dr is None else merge_upsert(old_right, dr, [jk], **lww)
-        if left_new is None or right_new is None:
-            view_new = None
-        else:
-            lpay = [c for c in left_new.columns if c not in ("__op", "__seq", "__bkt")]
-            rpay = [
-                c
-                for c in right_new.columns
-                if c not in ("__op", "__seq", "__bkt", jk)
-            ]
-            view_new = left_new.select(*lpay, "__bkt").join(
-                right_new.select(jk, *rpay), jk
+        keys = {"left": [self.left_id], "right": [jk]}
+        new = {}
+        for side in ("left", "right"):
+            old = self.read(side)
+            if old is not None:
+                old = old.filter(F.col(BUCKET).isin(affected))
+            new[side] = (
+                merge_upsert(old, deltas[side], keys[side], **lww)
+                if side in deltas
+                else old
             )
-
-        schemas = dict(manifest["schemas"])
-
-        def _write(df: DataFrame | None, side: str, key_cols: list[str]) -> None:
-            if df is None:
-                return
-            schemas[side] = json.dumps(df.drop("__bkt").schema.jsonValue())
-            (
-                df.withColumn("__bktp", F.col("__bkt"))
-                .repartition(len(affected), "__bkt")
-                .sortWithinPartitions(*key_cols)
-                .write.mode("overwrite")
-                .partitionBy("__bktp")
-                .parquet(os.path.join(vdir, side))
+        sides = {side: new[side] for side in deltas}
+        if new["left"] is not None and new["right"] is not None:
+            meta = ("__op", "__seq", BUCKET)
+            lpay = [c for c in new["left"].columns if c not in meta]
+            rpay = [c for c in new["right"].columns if c not in (*meta, jk)]
+            view_new = new["left"].select(*lpay, BUCKET).join(
+                new["right"].select(jk, *rpay), jk
             )
+            sides["view"] = view_new
+            sides.update(self._derived_sides(view_new))
+        self.commit(epoch_id, affected, sides)
 
-        _write(left_new, "left", [self.left_id])
-        _write(right_new, "right", [jk])
-        _write(view_new, "view", [self.left_id])
-        for side, (df, key_cols) in self._derived_sides(view_new).items():
-            _write(df, side, key_cols)
-
-        buckets = dict(manifest["buckets"])
-        for b in affected:
-            buckets[str(b)] = new_v
-        new_manifest = {
-            "epochs": manifest["epochs"] + [epoch_id],
-            "buckets": buckets,
-            "schemas": schemas,
-        }
-        self._commit(new_v, new_manifest, buckets.values())
-
-    def _derived_sides(self, view_new: DataFrame | None) -> dict:
+    def _derived_sides(self, view_new: DataFrame) -> dict[str, DataFrame]:
         """Hook for subclasses that maintain relations DERIVED from the
         join view (e.g. per-bucket aggregate partials). Returns
-        {side_name: (df_with___bkt, sort_key_cols)} to be written into
-        the same version commit as the view itself — one atomic
-        pointer swap covers view + derivations."""
+        {side_name: df_with_BUCKET} for the affected buckets, committed
+        together with the view itself."""
         return {}
 
     # -- readers ----------------------------------------------------------
 
-    def view(self) -> DataFrame:
-        cur = self._current_version()
-        assert cur is not None, "no committed state yet"
-        df = self._read_side(self._manifest(cur), "view")
-        assert df is not None, "view was never written (no joined epochs yet)"
-        return df.drop("__bkt")
+    def _side(self, side: str) -> DataFrame:
+        df = self.read(side)
+        assert df is not None, f"{side} was never written (no joined epochs yet)"
+        return df.drop(BUCKET)
 
-    def compact(self) -> None:
-        """Rewrite every bucket's current data into ONE fresh version
-        and drop the rest — the maintenance pass that bounds manifest
-        fan-out. After many small epochs the manifest references many
-        version dirs (one open file per bucket per side at read time);
-        compaction restores the single-dir layout without changing any
-        visible row. Runs as its own atomic commit (same CURRENT
-        protocol), so a crash mid-compaction leaves the old manifest
-        intact. The analog of the parquet small-file compaction pass in
-        operators/scale.py, applied to the view's own state."""
-        cur = self._current_version()
-        if cur is None:
-            return
-        manifest = self._manifest(cur)
-        new_v = self._begin(cur)
-        vdir = self._vdir(new_v)
-        schemas = dict(manifest["schemas"])
-        live_buckets: set[str] = set()
-        for side, key_cols in self._side_specs():
-            df = self._read_side(manifest, side)
-            if df is None or not df.columns:
-                continue
-            schemas[side] = json.dumps(df.drop("__bkt").schema.jsonValue())
-            (
-                df.withColumn("__bktp", F.col("__bkt"))
-                .repartition(self.n_buckets, "__bkt")
-                .sortWithinPartitions(*key_cols)
-                .write.mode("overwrite")
-                .partitionBy("__bktp")
-                .parquet(os.path.join(vdir, side))
-            )
-            for d in os.listdir(os.path.join(vdir, side)):
-                if d.startswith("__bktp="):
-                    live_buckets.add(d.split("=", 1)[1])
-        new_manifest = {
-            "epochs": manifest["epochs"],
-            "buckets": {b: new_v for b in sorted(live_buckets, key=int)},
-            "schemas": schemas,
-        }
-        self._commit(new_v, new_manifest)
+    def view(self) -> DataFrame:
+        return self._side("view")
 
     def left_state(self) -> DataFrame:
-        df = self._read_side(self._manifest(self._current_version()), "left")
-        assert df is not None
-        return df.drop("__bkt", "__op", "__seq")
+        return self._side("left").drop("__op", "__seq")
 
     def right_state(self) -> DataFrame:
-        df = self._read_side(self._manifest(self._current_version()), "right")
-        assert df is not None
-        return df.drop("__bkt", "__op", "__seq")
+        return self._side("right").drop("__op", "__seq")
 
 
 class MaterializedJoinAggregate(MaterializedJoin):
@@ -345,35 +191,26 @@ class MaterializedJoinAggregate(MaterializedJoin):
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
 
-    def _side_specs(self) -> list[tuple[str, list[str]]]:
-        return super()._side_specs() + [("agg", self.group_cols)]
-
-    def _derived_sides(self, view_new: DataFrame | None) -> dict:
-        if view_new is None:
-            return {}
+    def _derived_sides(self, view_new: DataFrame) -> dict[str, DataFrame]:
         partial = {
             "sum": F.sum,
             "count": F.count,
             "min": F.min,
             "max": F.max,
         }
-        agg = view_new.groupBy("__bkt", *self.group_cols).agg(
+        agg = view_new.groupBy(BUCKET, *self.group_cols).agg(
             *[
                 partial[fn](F.expr(expr)).alias(name)
                 for name, (expr, fn) in self.measures.items()
             ]
         )
-        return {"agg": (agg, self.group_cols)}
+        return {"agg": agg}
 
     def aggregate(self) -> DataFrame:
         """The current rollup: re-combine the per-bucket partials. The
         input relation is at most n_buckets x |groups| rows — at 100 TB
         this read costs the same as at 100 MB."""
-        cur = self._current_version()
-        assert cur is not None, "no committed state yet"
-        df = self._read_side(self._manifest(cur), "agg")
-        assert df is not None, "aggregate was never written (no joined epochs)"
-        return df.groupBy(*self.group_cols).agg(
+        return self._side("agg").groupBy(*self.group_cols).agg(
             *[
                 self._COMBINE[fn](F.col(name)).alias(name)
                 for name, (_, fn) in self.measures.items()

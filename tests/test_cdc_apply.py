@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -16,6 +17,8 @@ from pyspark.sql import types as T
 
 from cdc_poc_spark.cdc import apply as cdc_apply
 from cdc_poc_spark.cdc import envelope as env
+from cdc_poc_spark.streaming import commit
+from cdc_poc_spark.streaming.commit import BUCKET, BucketedState
 from cdc_poc_spark.streaming.consumer import CDCConsumer, TableSpec
 
 ACCOUNT_SCHEMA = T.StructType(
@@ -48,6 +51,11 @@ def _env(op, before, after, ts_ms, offset):
         "cdc.commerce.account",
         offset,
     )
+
+
+def _state(spark, target):
+    """The committed rows of a bucketed-merge target."""
+    return BucketedState(spark, target).read().drop(BUCKET)
 
 
 def _row(uid, email):
@@ -183,12 +191,13 @@ def test_merge_is_idempotent_under_redelivery(spark, typed_log):
 def test_merge_into_parquet_roundtrip(spark, typed_log, tmp_path):
     target = str(tmp_path / "mirror")
     cdc_apply.merge_into_parquet_bucketed(
-        spark, target, typed_log.filter("seq <= 2"), ["user_id"], n_buckets=4
+        spark, target, typed_log.filter("seq <= 2"), ["user_id"], n_buckets=4, epoch=0
     )
     cdc_apply.merge_into_parquet_bucketed(
-        spark, target, typed_log.filter("seq BETWEEN 3 AND 5"), ["user_id"], n_buckets=4
+        spark, target, typed_log.filter("seq BETWEEN 3 AND 5"), ["user_id"], n_buckets=4,
+        epoch=1,
     )
-    state = cdc_apply.read_bucketed_state(spark, target)
+    state = _state(spark, target)
     assert {(r.user_id, r.email) for r in state.collect()} == {
         (1, "alice@example.com"),
         (2, "bob@example.com"),
@@ -197,9 +206,10 @@ def test_merge_into_parquet_roundtrip(spark, typed_log, tmp_path):
         (5, "emma@example.com"),
     }
     cdc_apply.merge_into_parquet_bucketed(
-        spark, target, typed_log.filter("seq >= 6"), ["user_id"], n_buckets=4
+        spark, target, typed_log.filter("seq >= 6"), ["user_id"], n_buckets=4, epoch=2
     )
-    assert not cdc_apply.has_bucketed_state(target)
+    assert _state(spark, target).count() == 0
+    assert not any(d.startswith("__bucket=") for d in os.listdir(target))
 
 
 def test_mirror_survives_delete_all(spark, scenario, tmp_path):
@@ -266,8 +276,8 @@ def test_merge_into_parquet_bucketed(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(i, f"v{i}", i, "c") for i in range(20)], schema
     )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8)
-    got = {(r.pk, r.val) for r in cdc_apply.read_bucketed_state(spark, target).collect()}
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8, epoch=0)
+    got = {(r.pk, r.val) for r in _state(spark, target).collect()}
     assert got == {(i, f"v{i}") for i in range(20)}
 
     dirs_before = {
@@ -275,8 +285,8 @@ def test_merge_into_parquet_bucketed(spark, tmp_path):
     }
     # batch 2 touches exactly one key -> at most one bucket rewritten
     b2 = spark.createDataFrame([(3, "v3b", 100, "u")], schema)
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8)
-    got = {(r.pk, r.val) for r in cdc_apply.read_bucketed_state(spark, target).collect()}
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8, epoch=1)
+    got = {(r.pk, r.val) for r in _state(spark, target).collect()}
     assert (3, "v3b") in got and len(got) == 20
     changed = [
         d
@@ -290,7 +300,7 @@ def test_merge_into_parquet_bucketed(spark, tmp_path):
     bucket_of_3 = changed[0]
     same_bucket_keys = [
         r.pk
-        for r in cdc_apply.read_bucketed_state(spark, target)
+        for r in _state(spark, target)
         .withColumn("b", F.expr("pmod(xxhash64(cast(pk as string)), 8)"))
         .filter(F.expr(f"b = {bucket_of_3.split('=')[1]}"))
         .collect()
@@ -298,10 +308,122 @@ def test_merge_into_parquet_bucketed(spark, tmp_path):
     b3 = spark.createDataFrame(
         [(pk, None, 200 + pk, "d") for pk in same_bucket_keys], schema
     )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8, epoch=2)
     assert not os.path.exists(os.path.join(target, bucket_of_3))
-    got = {r.pk for r in cdc_apply.read_bucketed_state(spark, target).collect()}
+    got = {r.pk for r in _state(spark, target).collect()}
     assert got == set(range(20)) - set(same_bucket_keys)
+
+
+def test_bucketed_merge_writes_one_file_per_bucket(spark, tmp_path):
+    """A merge writes one file per bucket whatever the partition count
+    of its shuffle. The merge's window once shuffled by key alone, so
+    with AQE's coalescing off every shuffle partition held rows of
+    every bucket: a fresh 5,000-row merge at local[4] left 256 files in
+    64 buckets."""
+    target = str(tmp_path / "state")
+    rows = [(i, f"v{i}", i, "c") for i in range(5000)]
+    b1 = spark.createDataFrame(rows, "pk LONG, val STRING, seq LONG, op STRING")
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], epoch=0)
+    finally:
+        spark.conf.set(conf, was)
+    buckets = [d for d in os.listdir(target) if d.startswith("__bucket=")]
+    files = [
+        f
+        for d in buckets
+        for f in os.listdir(os.path.join(target, d))
+        if f.endswith(".parquet")
+    ]
+    assert len(buckets) == 64 and len(files) == 64, (len(buckets), len(files))
+    assert _state(spark, target).count() == 5000
+
+
+class _Crash(Exception):
+    pass
+
+
+#: every filesystem call a bucketed-merge commit may make to swap data
+#: in or out; the data itself is written by Spark's JVM, not by these
+_FS_CALLS = [
+    (os, "rename"),
+    (os, "replace"),
+    (os, "remove"),
+    (os, "unlink"),
+    (shutil, "rmtree"),
+    (commit, "_write_durable"),
+]
+
+
+def _crash_at(monkeypatch, k):
+    """Make the ``k``-th call (1-based; 0 = none) of any ``_FS_CALLS``
+    raise ``_Crash``; return the list the calls' names are recorded in."""
+    calls = []
+    for mod, name in _FS_CALLS:
+
+        def fake(*args, _real=getattr(mod, name), _name=name, **kwargs):
+            calls.append(_name)
+            if len(calls) == k:
+                raise _Crash(f"call {k}: {_name}")
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, fake)
+    return calls
+
+
+def _crash_replay(spark, tmp_path, sweep):
+    """40 keys in 8 buckets, then an 8-key update batch whose merge dies
+    at the k-th filesystem call and is replayed, as foreachBatch re-
+    delivers a failed epoch. For every k the state must equal
+    apply_changes of the whole log. ``sweep(calls)`` picks the k's from
+    the call names of an uninterrupted merge."""
+    schema = "pk LONG, val STRING, seq LONG, op STRING"
+    rows = [(i, f"v{i}", i, "c") for i in range(40)]
+    upd = [(i, f"w{i}", 100 + i, "u") for i in range(0, 40, 5)]
+    b1, b2 = spark.createDataFrame(rows, schema), spark.createDataFrame(upd, schema)
+    want = {r[0]: r[:3] for r in rows} | {r[0]: r[:3] for r in upd}
+    base = str(tmp_path / "base")
+    cdc_apply.merge_into_parquet_bucketed(spark, base, b1, ["pk"], n_buckets=8, epoch=0)
+
+    def merge(target, k):
+        with pytest.MonkeyPatch.context() as mp:
+            calls = _crash_at(mp, k)
+            try:
+                cdc_apply.merge_into_parquet_bucketed(
+                    spark, target, b2, ["pk"], n_buckets=8, epoch=1
+                )
+            except _Crash:
+                pass
+        return calls
+
+    calls = merge(shutil.copytree(base, str(tmp_path / "dry")), 0)
+    for k in sweep(calls):
+        target = shutil.copytree(base, str(tmp_path / f"k{k}"))
+        merge(target, k)
+        cdc_apply.merge_into_parquet_bucketed(
+            spark, target, b2, ["pk"], n_buckets=8, epoch=1
+        )
+        got = {r.pk: (r.pk, r.val, r.seq) for r in _state(spark, target).collect()}
+        assert got == want, (k, calls[k - 1], len(got))
+
+
+def test_bucketed_merge_replay_after_crash_is_exact(spark, tmp_path):
+    """A merge that dies at the first call of each kind it makes (the
+    pointer swap, the durable meta.json write, the delete of a
+    superseded file, ...) and is then replayed leaves exactly the state
+    of the whole log: no bucket is lost and no update is applied twice.
+    (The write-aside-then-rename swap lost a bucket when the process
+    died between its rmtree and its rename: 38 rows of 40 came back.)"""
+    _crash_replay(spark, tmp_path, lambda calls: sorted({calls.index(c) + 1 for c in calls}))
+
+
+@pytest.mark.slow
+def test_bucketed_merge_replay_after_crash_at_every_call(spark, tmp_path):
+    """The exhaustive sweep: a crash at every one of the merge's
+    filesystem calls in turn, each replayed to the exact state."""
+    _crash_replay(spark, tmp_path, lambda calls: range(1, len(calls) + 1))
 
 
 def test_bucketed_state_keeps_columns_of_any_bucket(spark, tmp_path):
@@ -313,20 +435,20 @@ def test_bucketed_state_keeps_columns_of_any_bucket(spark, tmp_path):
     target = str(tmp_path / "state")
     old = "pk LONG, val STRING, seq LONG, op STRING"
     b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in range(40)], old)
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8, epoch=0)
     b2 = spark.createDataFrame(
         [(3, "v3", "premium", 100, "u")],
         "pk LONG, val STRING, plan STRING, seq LONG, op STRING",
     )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8)
-    assert "plan" in cdc_apply.read_bucketed_state(spark, target).columns
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8, epoch=1)
+    assert "plan" in _state(spark, target).columns
     b3 = spark.createDataFrame(
         [(i, f"w{i}", 200 + i, "u") for i in range(40) if i != 3], old
     )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8, epoch=2)
     got = {
         r.pk: (r.val, r.plan)
-        for r in cdc_apply.read_bucketed_state(spark, target).collect()
+        for r in _state(spark, target).collect()
     }
     assert got == {
         i: ("v3", "premium") if i == 3 else (f"w{i}", None) for i in range(40)
@@ -340,15 +462,15 @@ def test_bucketed_state_widens_a_type_that_differs_across_buckets(spark, tmp_pat
     target = str(tmp_path / "state")
     narrow = "pk INT, val STRING, seq LONG, op STRING"
     b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in range(40)], narrow)
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8, epoch=0)
     b2 = spark.createDataFrame(
         [(3, "w3", 100, "u"), (2**40, "big", 101, "c")],
         "pk LONG, val STRING, seq LONG, op STRING",
     )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8, epoch=1)
     b3 = spark.createDataFrame([(5, "w5", 200, "u")], narrow)
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8)
-    state = cdc_apply.read_bucketed_state(spark, target)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8, epoch=2)
+    state = _state(spark, target)
     assert dict(state.dtypes)["pk"] == "bigint"
     want = {i: f"v{i}" for i in range(40)} | {3: "w3", 5: "w5", 2**40: "big"}
     assert {r.pk: r.val for r in state.collect()} == want
@@ -378,8 +500,8 @@ def _kv_env(table, key, val, offset):
 def test_bucketed_merge_plans_state_read_without_jobs(spark, tmp_path):
     """The merge into an existing 64-bucket target plans its state read
     with no Spark job: no schema-inference job (the schema comes from
-    the bucket files' footers) and no listing job (64 paths are under
-    ``parallelPartitionDiscovery.threshold``). Measured at local[4]:
+    the state's manifest) and no listing job (its 64 file paths are
+    under ``parallelPartitionDiscovery.threshold``). Measured at local[4]:
     the merge ran 6 jobs when its state read inferred the schema and
     listed the buckets in a job, and runs 4 now (touched collect and
     write); one two-table ``merge_mirror_batch`` with a DLQ ran 16 jobs
@@ -388,15 +510,15 @@ def test_bucketed_merge_plans_state_read_without_jobs(spark, tmp_path):
     schema = "pk LONG, val STRING, seq LONG, op STRING"
     keys = range(1000)
     b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in keys], schema)
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"])
+    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], epoch=0)
     b2 = spark.createDataFrame([(i, f"w{i}", 5000 + i, "u") for i in keys], schema)
     n_jobs = _jobs_in_group(
         spark,
         "bucketed_merge_budget",
-        lambda: cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"]),
+        lambda: cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], epoch=1),
     )
     assert len([d for d in os.listdir(target) if d.startswith("__bucket=")]) == 64
-    got = {(r.pk, r.val) for r in cdc_apply.read_bucketed_state(spark, target).collect()}
+    got = {(r.pk, r.val) for r in _state(spark, target).collect()}
     assert got == {(i, f"w{i}") for i in keys}
     assert n_jobs <= 4, n_jobs
 
@@ -484,11 +606,14 @@ def test_merge_into_dispatcher_falls_back_to_bucketed(spark, typed_log, tmp_path
     merge_into takes the bucketed-parquet path with identical semantics."""
     assert cdc_apply.detect_merge_backend(spark) is None
     target = str(tmp_path / "mirror")
-    cdc_apply.merge_into(spark, target, typed_log.filter("seq <= 2"), ["user_id"], n_buckets=4)
     cdc_apply.merge_into(
-        spark, target, typed_log.filter("seq BETWEEN 3 AND 5"), ["user_id"], n_buckets=4
+        spark, target, typed_log.filter("seq <= 2"), ["user_id"], n_buckets=4, epoch=0
     )
-    state = cdc_apply.read_bucketed_state(spark, target)
+    cdc_apply.merge_into(
+        spark, target, typed_log.filter("seq BETWEEN 3 AND 5"), ["user_id"], n_buckets=4,
+        epoch=1,
+    )
+    state = _state(spark, target)
     assert {(r.user_id, r.email) for r in state.collect()} == {
         (1, "alice@example.com"),
         (2, "bob@example.com"),

@@ -4,10 +4,10 @@ engine surface. Four angles:
 1. Equality with a full recompute after every epoch of a mixed
    upsert/delete two-sided delta sequence (the IVM identity).
 2. Replay idempotence (crash-recovery epoch re-applied → unchanged).
-3. Crash atomicity: an unpublished version dir is invisible.
-4. Bucket locality: an epoch touching one join key writes ONLY that
-   key's bucket into the new version dir — the manifest is what makes
-   untouched buckets free.
+3. Crash atomicity: files written by an epoch that died before its
+   manifest commit are invisible, and its replay deletes them.
+4. Bucket locality: an epoch touching one join key rewrites ONLY that
+   key's bucket files; every other bucket keeps its files.
 """
 
 from __future__ import annotations
@@ -20,6 +20,23 @@ import os
 from pyspark.sql import functions as F
 
 from cdc_poc_spark.streaming.ivm_join import MaterializedJoin
+
+
+def _live_files(state):
+    """(side, bucket dir) -> the data files on disk of a join state."""
+    return {
+        (side, b): frozenset(
+            f for f in os.listdir(os.path.join(state, side, b)) if f.endswith(".parquet")
+        )
+        for side in os.listdir(state)
+        if os.path.isdir(os.path.join(state, side))
+        for b in os.listdir(os.path.join(state, side))
+        if b.startswith("__bucket=")
+    }
+
+
+def _changed(before, after):
+    return {k for k in before.keys() | after.keys() if before.get(k) != after.get(k)}
 
 
 def _delta(spark, rows, schema):
@@ -107,7 +124,7 @@ def test_materialized_join_matches_recompute(spark, tmp_path):
     # change nothing
     mj.apply_batch(None, None, 7)
     assert _view_rows(mj) == _reference_join(all_l, all_r)
-    assert 7 in mj._manifest(mj._current_version())["epochs"]
+    assert mj.applied(7)
 
 
 def test_materialized_join_replay_is_idempotent(spark, tmp_path):
@@ -124,7 +141,10 @@ def test_materialized_join_replay_is_idempotent(spark, tmp_path):
     assert _view_rows(mj) == before
 
 
-def test_materialized_join_crash_is_atomic(spark, tmp_path):
+def test_materialized_join_crash_is_atomic(spark, tmp_path, monkeypatch):
+    """An epoch that dies after writing its bucket files but before its
+    manifest commit leaves the view as it was; its replay commits the
+    epoch and deletes the dead attempt's files."""
     state = str(tmp_path / "mj")
     mj = MaterializedJoin(spark, state, left_id="l_id", join_key="jk", n_buckets=4)
     mj.apply_batch(
@@ -132,22 +152,29 @@ def test_materialized_join_crash_is_atomic(spark, tmp_path):
         _delta(spark, [(10, "A", "u", 0)], R_SCHEMA),
         0,
     )
-    before = _view_rows(mj)
-    committed = mj._current_version()
-    # simulate a crash mid-batch: a later version dir exists with data
-    # but CURRENT was never flipped
-    fake = os.path.join(state, f"v{committed + 7}")
-    os.makedirs(os.path.join(fake, "view", "__bkt=0"))
-    assert mj._current_version() == committed
-    assert _view_rows(mj) == before  # reader never sees the torn dir
-    # and the next apply_batch clobbers any stale attempt at ITS version
-    mj.apply_batch(_delta(spark, [(2, 10, 200, "u", 1)], L_SCHEMA), None, 1)
-    assert (1, 10, 100, "A") in _view_rows(mj) and (2, 10, 200, "A") in _view_rows(mj)
+    before, committed = _view_rows(mj), _live_files(state)
+    d1 = _delta(spark, [(2, 10, 200, "u", 1)], L_SCHEMA)
+
+    def crash(*args):
+        raise RuntimeError("crash before the manifest commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(mj, "_publish", crash)
+        with pytest.raises(RuntimeError):
+            mj.apply_batch(d1, None, 1)
+    assert _changed(committed, _live_files(state))  # the dead attempt's files
+    assert not mj.applied(1)
+    assert _view_rows(mj) == before  # readers never see them
+    mj.apply_batch(d1, None, 1)  # the replay
+    assert _view_rows(mj) == [(1, 10, 100, "A"), (2, 10, 200, "A")]
+    files = _live_files(state)
+    assert all(len(names) == 1 for names in files.values()), files
 
 
 def test_materialized_join_bucket_locality(spark, tmp_path):
-    """An epoch touching ONE join key must write only that key's bucket
-    into its version dir; every other bucket keeps its old pointer."""
+    """An epoch touching ONE join key must rewrite only that key's
+    bucket, and only in the sides it changes; every other bucket keeps
+    its files."""
     state = str(tmp_path / "mj")
     nb = 8
     mj = MaterializedJoin(spark, state, left_id="l_id", join_key="jk", n_buckets=nb)
@@ -155,31 +182,15 @@ def test_materialized_join_bucket_locality(spark, tmp_path):
     lrows = [(i, i * 10, i * 100, "u", 0) for i in range(1, 13)]
     rrows = [(i * 10, f"s{i}", "u", 0) for i in range(1, 13)]
     mj.apply_batch(_delta(spark, lrows, L_SCHEMA), _delta(spark, rrows, R_SCHEMA), 0)
-    man0 = mj._manifest(mj._current_version())
-    n_buckets_live = len(man0["buckets"])
-    assert n_buckets_live >= 4  # 12 keys over 8 buckets
+    before = _live_files(state)
+    assert len({b for _, b in before}) >= 4  # 12 keys over 8 buckets
 
-    # single-key epoch
+    # single-key epoch on the left side
     mj.apply_batch(_delta(spark, [(1, 10, 999, "u", 1)], L_SCHEMA), None, 1)
-    v1 = mj._current_version()
-    man1 = mj._manifest(v1)
-    moved = [b for b in man1["buckets"] if man1["buckets"][b] != man0["buckets"].get(b)]
-    assert len(moved) == 1, f"exactly one bucket pointer should move, got {moved}"
-    # the new version dir contains ONLY that bucket
-    vdir = os.path.join(state, f"v{v1}")
-    written = {
-        d
-        for side in ("left", "right", "view")
-        if os.path.isdir(os.path.join(vdir, side))
-        for d in os.listdir(os.path.join(vdir, side))
-        if d.startswith("__bktp=")
-    }
-    assert written == {f"__bktp={moved[0]}"}
-    # untouched buckets still point at the OLD version dir (no copies)
-    for b, ver in man1["buckets"].items():
-        if b != moved[0]:
-            assert ver == man0["buckets"][b]
-    # and the view still reads correctly across mixed-version buckets
+    changed = _changed(before, _live_files(state))
+    assert len({b for _, b in changed}) == 1, f"exactly one bucket should move, got {changed}"
+    assert {side for side, _ in changed} == {"left", "view"}
+    # and the view still reads correctly across old and new bucket files
     rows = _view_rows(mj)
     assert (1, 10, 999, "s1") in rows and (12, 120, 1200, "s12") in rows
     assert len(rows) == 12
@@ -255,8 +266,7 @@ def test_materialized_join_streaming_drain(spark, tmp_path):
     q.awaitTermination(180)
     want = _reference_join(all_l, all_r)
     assert _view_rows(mj) == want and want
-    n_epochs = len(mj._manifest(mj._current_version())["epochs"])
-    assert n_epochs >= 3  # one file per trigger
+    assert mj.applied(2)  # one file per trigger
 
     # restart over the same checkpoint: nothing new to process, view
     # unchanged (exactly-once composes with the epoch guard)
@@ -271,36 +281,6 @@ def test_materialized_join_streaming_drain(spark, tmp_path):
     )
     q2.awaitTermination(180)
     assert _view_rows(mj) == want
-
-
-@pytest.mark.slow
-def test_materialized_join_compaction(spark, tmp_path):
-    """compact() must collapse the manifest to ONE version dir without
-    changing a single visible row, and survive being interleaved with
-    further epochs."""
-    mj = MaterializedJoin(
-        spark, str(tmp_path / "mj"), left_id="l_id", join_key="jk", n_buckets=4
-    )
-    for ep in range(4):  # many small epochs -> many version dirs
-        mj.apply_batch(
-            _delta(spark, [(ep + 1, (ep + 1) * 10, ep * 100, "u", ep)], L_SCHEMA),
-            _delta(spark, [((ep + 1) * 10, f"s{ep}", "u", ep)], R_SCHEMA),
-            ep,
-        )
-    man = mj._manifest(mj._current_version())
-    assert len(set(man["buckets"].values())) >= 2  # scattered versions
-    before = _view_rows(mj)
-    mj.compact()
-    man2 = mj._manifest(mj._current_version())
-    assert len(set(man2["buckets"].values())) == 1  # one version dir
-    assert man2["epochs"] == man["epochs"]  # applied-epoch set preserved
-    assert _view_rows(mj) == before
-    # state dir holds exactly the compacted version
-    vdirs = [d for d in os.listdir(str(tmp_path / "mj")) if d.startswith("v")]
-    assert len(vdirs) == 1
-    # epochs continue cleanly after compaction
-    mj.apply_batch(_delta(spark, [(1, 10, 999, "u", 9)], L_SCHEMA), None, 9)
-    assert (1, 10, 999, "s0") in _view_rows(mj)
 
 
 @pytest.mark.slow
@@ -642,49 +622,24 @@ def test_materialized_join_agg_streaming_drain(spark, tmp_path):
 
 def test_materialized_join_agg_partial_locality(spark, tmp_path):
     """A single-key epoch rewrites ONLY the touched bucket's aggregate
-    partial; every other bucket's partial keeps its old version pointer
-    — per-batch rollup upkeep is bounded by delta keys, not view size."""
-    mj = _make_agg(spark, tmp_path / "mjl")
+    partial; every other bucket's partial keeps its files — per-batch
+    rollup upkeep is bounded by delta keys, not view size."""
+    state = str(tmp_path / "mjl")
+    mj = _make_agg(spark, state)
     lrows = [(i, i * 10, i * 100, "u", 0) for i in range(1, 13)]
     rrows = [(i * 10, f"s{i}", "u", 0) for i in range(1, 13)]
     mj.apply_batch(_delta(spark, lrows, L_SCHEMA), _delta(spark, rrows, R_SCHEMA), 0)
-    man0 = mj._manifest(mj._current_version())
+    before = _live_files(state)
 
     mj.apply_batch(_delta(spark, [(1, 10, 999, "u", 1)], L_SCHEMA), None, 1)
-    v1 = mj._current_version()
-    man1 = mj._manifest(v1)
-    moved = [b for b in man1["buckets"] if man1["buckets"][b] != man0["buckets"].get(b)]
-    assert len(moved) == 1
-    agg_dir = os.path.join(str(tmp_path / "mjl"), f"v{v1}", "agg")
-    written = {d for d in os.listdir(agg_dir) if d.startswith("__bktp=")}
-    assert written == {f"__bktp={moved[0]}"}
-    # and the combined rollup is still exact across mixed-version partials
+    changed = _changed(before, _live_files(state))
+    (moved,) = {b for _, b in changed}
+    assert ("agg", moved) in changed
+    # and the combined rollup is still exact across old and new partials
     got = _agg_rows(mj)
     assert got["s1"] == (1, 999, 999)
     assert got["s12"] == (1, 1200, 1200)
     assert len(got) == 12
-
-
-@pytest.mark.slow
-def test_materialized_join_agg_survives_compaction(spark, tmp_path):
-    mj = _make_agg(spark, tmp_path / "mjc", nb=4)
-    all_l, all_r = [], []
-    for e in range(6):
-        lrows = [(e * 10 + 1, (e % 3) * 10, 100 + e, "u", e)]
-        all_l.extend(lrows)
-        if e == 0:
-            rrows = [(0, "X", "u", 0), (10, "Y", "u", 0), (20, "X", "u", 0)]
-            all_r.extend(rrows)
-            mj.apply_batch(
-                _delta(spark, lrows, L_SCHEMA), _delta(spark, rrows, R_SCHEMA), e
-            )
-        else:
-            mj.apply_batch(_delta(spark, lrows, L_SCHEMA), None, e)
-    before = _agg_rows(mj)
-    mj.compact()
-    assert _agg_rows(mj) == before == _reference_agg(all_l, all_r)
-    vers = {int(v) for v in mj._manifest(mj._current_version())["buckets"].values()}
-    assert len(vers) == 1  # every bucket (agg included) in ONE version dir
 
 
 @pytest.mark.slow

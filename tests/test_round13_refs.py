@@ -372,13 +372,11 @@ def test_mirror_merge_in_batch_lww(spark, tmp_path):
     """The emily->emma in-batch last-writer-wins: the merge keeps the
     seq-15M update over the seq-10M insert of the SAME key in the SAME
     micro-batch — verified directly against merge_into_parquet_bucketed
-    + read_bucketed_state."""
+    and the state it commits."""
     import os
 
-    from cdc_poc_spark.cdc.apply import (
-        merge_into_parquet_bucketed,
-        read_bucketed_state,
-    )
+    from cdc_poc_spark.cdc.apply import merge_into_parquet_bucketed
+    from cdc_poc_spark.streaming.commit import BucketedState
 
     target = str(tmp_path / "mirror")
     batch = spark.createDataFrame(
@@ -388,9 +386,9 @@ def test_mirror_merge_in_batch_lww(spark, tmp_path):
         ],
         "id long, val string, op string, seq long",
     )
-    merge_into_parquet_bucketed(spark, target, batch, ["id"], n_buckets=4)
+    merge_into_parquet_bucketed(spark, target, batch, ["id"], n_buckets=4, epoch=0)
     assert os.path.exists(target)
-    rows = read_bucketed_state(spark, target).collect()
+    rows = BucketedState(spark, target).read().collect()
     assert len(rows) == 1
     assert rows[0]["val"] == "emma@example.com" and rows[0]["seq"] == 15
 

@@ -120,26 +120,6 @@ def test_global_index_unordered_is_contiguous(spark):
     assert sorted(r.row_idx for r in idx.select("row_idx").collect()) == list(range(n))
 
 
-def test_compact_small_files(spark, tmp_path):
-    """Many tiny appended files -> one right-sized file; rows preserved;
-    sorted variant keeps data clustered for min/max skipping."""
-    import os
-    p = str(tmp_path / "frag")
-    orders = load_table(spark, SF_DIR, "orders")
-    for i in range(6):  # simulate 6 micro-batch appends
-        orders.filter(F.col("o_orderkey") % 6 == i).repartition(4).write.mode(
-            "append"
-        ).parquet(p)
-    files_before = sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
-    assert files_before >= 20
-    n_rows = spark.read.parquet(p).count()
-    n_after = scale.compact_small_files(spark, p, sort_cols=["o_orderkey"])
-    assert n_after < files_before
-    got = spark.read.parquet(p)
-    assert got.count() == n_rows
-    assert set(got.columns) == set(orders.columns)
-
-
 def test_spread_widens_narrow_scan(spark):
     docs = load_table(spark, SF_DIR, "documents").coalesce(1)
     assert docs.rdd.getNumPartitions() == 1

@@ -616,7 +616,8 @@ def test_versioned_commit_is_durable_before_pointer_swap(spark, tmp_path, monkey
 def test_epoch_commits_only_in_commit_module():
     """Every epoch-partition overwrite, pointer swap and fsync goes
     through streaming/commit.py: no other package file hand-rolls the
-    exactly-once commit."""
+    exactly-once commit. No other cdc/ or streaming/ file renames or
+    deletes files either: the swaps of keyed state are commit.py's."""
     import os
     import re
 
@@ -624,17 +625,20 @@ def test_epoch_commits_only_in_commit_module():
 
     pkg = os.path.dirname(os.path.dirname(commit.__file__))
     pattern = re.compile(r"partitionOverwriteMode|os\.replace|\bfsync\b")
+    swap = re.compile(r"os\.rename|shutil\.rmtree|os\.remove|os\.unlink")
     offenders = []
     for root, _, files in os.walk(pkg):
         for f in files:
             path = os.path.join(root, f)
             if not f.endswith(".py") or path == commit.__file__:
                 continue
+            rel = os.path.relpath(path, pkg)
+            state_code = rel.startswith(("cdc" + os.sep, "streaming" + os.sep))
             with open(path) as fh:
                 offenders += [
-                    f"{os.path.relpath(path, pkg)}:{i}"
+                    f"{rel}:{i}"
                     for i, line in enumerate(fh, 1)
-                    if pattern.search(line)
+                    if pattern.search(line) or (state_code and swap.search(line))
                 ]
     assert not offenders, offenders
 

@@ -39,6 +39,10 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# Python-UDF workers import the package too, and they see PYTHONPATH, not
+# this process's sys.path: set it before the session starts, so a run
+# from any working directory finds the checkout.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 RECORD = os.path.join(REPO, "LAYOUT_AUDIT.json")
 

@@ -23,6 +23,10 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# Python-UDF workers import the package too, and they see PYTHONPATH, not
+# this process's sys.path: set it before the session starts, so a run
+# from any working directory finds the checkout.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
