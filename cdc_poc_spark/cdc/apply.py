@@ -107,22 +107,34 @@ def merge_into_parquet_bucketed(
 ) -> None:
     """Partition-pruned merge of micro-batch ``epoch`` into the
     ``BucketedState`` at ``target_path``: rows live under
-    ``__bucket=pmod(xxhash64(keys), n_buckets)/``, and a batch rewrites
-    only the buckets its keys hash into.
+    ``__bucket=pmod(xxhash64(keys), width)/``, and a batch rewrites only
+    the buckets its keys hash into.
 
-    Cost per batch is O(touched_buckets / n_buckets × state) instead of
-    a full rewrite's O(state) — the file pruning a MERGE INTO on a
-    transactional format applies. At 100 TB with n_buckets sized so a
-    bucket ≈ a few GB, a small CDC batch touches a handful of
-    directories and the merge is effectively O(batch). A replayed epoch
-    is a no-op."""
-    state = BucketedState(spark, target_path)
+    The width is the state's, sized by its bytes (``BucketedState``):
+    the smallest power of two >= state bytes / the advisory partition
+    size, capped at ``n_buckets``. A small mirror is one file, read and
+    rewritten whole per batch; a large one keeps about one partition's
+    worth of rows per bucket, so a batch costs O(touched buckets ×
+    partition size) instead of a full rewrite's O(state) — the file
+    pruning a MERGE INTO on a transactional format applies. At 100 TB
+    with ``n_buckets`` sized so a bucket ≈ a few GB, a small CDC batch
+    touches a handful of directories and the merge is effectively
+    O(batch). A batch that moves the width rewrites every bucket. A
+    replayed epoch is a no-op."""
+    state = BucketedState(spark, target_path, n_buckets)
     if state.applied(epoch):
         return
-    batch_b = batch_df.withColumn(BUCKET, BucketedState.bucket(key_cols, n_buckets))
+    resized = state.resize([batch_df])
+    bucket = state.bucket(key_cols)
+    batch_b = batch_df.withColumn(BUCKET, bucket)
     old, touched = state.read(), None
-    if old is not None:
-        touched = [r[BUCKET] for r in batch_b.select(BUCKET).distinct().collect()]
+    if old is not None and resized:
+        old = old.withColumn(BUCKET, bucket)
+    elif old is not None:
+        if state.width == 1:  # the one bucket is touched unless the batch is empty
+            touched = [] if batch_b.isEmpty() else [0]
+        else:
+            touched = [r[BUCKET] for r in batch_b.select(BUCKET).distinct().collect()]
         if not touched:
             return
         old = old.filter(F.col(BUCKET).isin(touched))

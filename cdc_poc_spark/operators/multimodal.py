@@ -16,7 +16,6 @@ thanks to parquet column pruning.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -81,17 +80,6 @@ def decode_image(payload: bytes):  # pragma: no cover - deliberate stub
         "image decoding requires an image codec (e.g. Pillow); "
         "not available in this environment — use extract_features(fake=True)"
     )
-
-
-def _fake_feature_vector(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a real encoder: 8 doubles derived from
-    sha256(payload) — stable across runs, machines, and partitionings."""
-    if payload is None:
-        return [0.0] * FEATURE_DIM
-    dig = hashlib.sha256(payload).digest()
-    return [
-        int.from_bytes(dig[4 * i : 4 * i + 4], "big") / 2**32 for i in range(FEATURE_DIM)
-    ]
 
 
 def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:

@@ -32,10 +32,6 @@ _B = 0.75
 _TOPK = 10
 
 
-def _terms_sql_list() -> str:
-    return ", ".join(f"'{t}'" for t in _QUERY_TERMS)
-
-
 _BM25_ORACLE = f"""
 WITH d AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents

@@ -19,12 +19,14 @@ Three forms, one per kind of state:
   file.
 - ``BucketedState``: hash-bucketed keyed state (the CDC mirror, the
   maintained join view) appends each epoch's touched buckets in place
-  and publishes the set of live files through the same pointer swap.
+  and publishes the set of live files through the same pointer swap;
+  its bucket count follows the state's bytes.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 from typing import Iterable
@@ -85,6 +87,13 @@ def mark_applied(spark: SparkSession, ledger: str, batch_id: int) -> None:
     spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
         "append"
     ).format("parquet").saveAsTable(ledger)
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Spark's size estimate of ``df``'s optimized plan, with no job:
+    file sizes for a file scan, ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue) for rows it cannot size, such as a local collection."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _write_durable(path: str, text: str) -> None:
@@ -163,8 +172,15 @@ class BucketedState(VersionedDir):
     side ``s`` keeps its rows under ``<state_dir>/<s>/__bucket=N/`` (side
     ``""`` is ``state_dir`` itself). The committed version's meta.json is
     the manifest: each side's live file names per bucket, each side's
-    row schema (union by name of every epoch's, types widened) and the
-    last applied epoch.
+    row schema (union by name of every epoch's, types widened), the
+    width (bucket count) every side is hashed with, and the last applied
+    epoch.
+
+    The width follows the state's bytes: it is the smallest power of two
+    >= bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    capped at ``max_width``, so a bucket holds about one merge task's
+    rows and a small state is one file per side. ``resize`` fixes the
+    width of each commit (see there); ``bucket`` hashes with it.
 
     A commit appends new files for the buckets it touches next to the
     live ones, publishes the manifest that swaps them in, and only then
@@ -173,22 +189,61 @@ class BucketedState(VersionedDir):
     before it writes) or the new one (the superseded files are never
     read again), so a replay of the epoch rebuilds or skips it."""
 
-    def __init__(self, spark: SparkSession, state_dir: str) -> None:
+    def __init__(self, spark: SparkSession, state_dir: str, max_width: int = 64) -> None:
         super().__init__(state_dir)
         self.spark = spark
+        self.max_width = max_width
+        #: the width the next commit hashes and writes with (``resize``)
+        self.width: int | None = None
 
-    @staticmethod
-    def bucket(key_cols: Iterable[str], n_buckets: int) -> Column:
-        """The bucket of a row: ``pmod(xxhash64(cast(key as string)), n)``.
-        The cast makes it a function of the key's value, not of its
-        physical type (xxhash64(int 2) != xxhash64(bigint 2)), so a key
-        widened by schema evolution stays in its bucket."""
+    def bucket(self, key_cols: Iterable[str]) -> Column:
+        """The bucket of a row at ``self.width``:
+        ``pmod(xxhash64(cast(key as string)), width)``. The cast makes it
+        a function of the key's value, not of its physical type
+        (xxhash64(int 2) != xxhash64(bigint 2)), so a key widened by
+        schema evolution stays in its bucket."""
         h = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
-        return F.pmod(h, F.lit(n_buckets)).cast("int")
+        return F.pmod(h, F.lit(self.width)).cast("int")
+
+    def resize(self, fresh: Iterable[DataFrame] = ()) -> bool:
+        """Fix ``self.width`` for the next commit; True when it differs
+        from the committed width. Such a commit rewrites every side in
+        every bucket (``touched=None``) from its rows re-bucketed with
+        ``bucket``: a full rewrite, amortised like a hash-table resize.
+
+        The state's bytes are its live files' sizes (``os.stat``, no
+        Spark job). A fresh state takes the plan's size estimate of the
+        ``fresh`` rows it is about to hold, so rows with no estimate
+        start it at ``max_width``. The width grows as soon as the state
+        outgrows it but shrinks only once the state fits a quarter of
+        it, so a state at a boundary does not flap between widths."""
+        m = self._manifest()
+        if m is None:
+            size, cur = sum(_plan_bytes(df) for df in fresh), None
+        else:
+            paths = [p for side in m["files"] for p in self._paths(m, side)]
+            size, cur = sum(os.stat(p).st_size for p in paths), m["width"]
+        target = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        fit = min(self.max_width, 1 << max(0, math.ceil(size / target) - 1).bit_length())
+        if cur is None or fit > cur or cur > self.max_width or 4 * size <= cur * target:
+            self.width = fit
+        else:
+            self.width = cur
+        return self.width != cur
 
     def _manifest(self) -> dict | None:
         cur = self._current_version()
         return None if cur is None else self._meta(cur)
+
+    def _paths(self, m: dict, side: str) -> list[str]:
+        root = os.path.join(self.state_dir, side)
+        return [
+            os.path.join(root, f"{BUCKET}={b}", name)
+            for b, names in m["files"][side].items()
+            for name in names
+        ]
 
     def applied(self, epoch: int) -> bool:
         """True when ``epoch`` is at or below the last committed one:
@@ -197,34 +252,36 @@ class BucketedState(VersionedDir):
         return m is not None and epoch <= m["epoch"]
 
     def read(self, side: str = "") -> DataFrame | None:
-        """Every live row of ``side`` with ``BUCKET``, or None before
-        the side's first commit. One scan over the manifest's files in
-        its recorded schema, so it plans with no Spark job; a side that
-        holds no rows reads as zero rows in that schema. Filter on
-        ``BUCKET`` to read some buckets: the scan prunes the rest."""
+        """Every live row of ``side`` with ``BUCKET`` at the committed
+        width, or None before the side's first commit. One scan over the
+        manifest's files in its recorded schema, so it plans with no
+        Spark job; a side that holds no rows reads as zero rows in that
+        schema. Filter on ``BUCKET`` to read some buckets: the scan
+        prunes the rest."""
         m = self._manifest()
         if m is None or side not in m["schemas"]:
             return None
         schema = T.StructType.fromJson(m["schemas"][side]).add(BUCKET, T.IntegerType())
-        root = os.path.join(self.state_dir, side)
-        paths = [
-            os.path.join(root, f"{BUCKET}={b}", name)
-            for b, names in m["files"][side].items()
-            for name in names
-        ]
+        paths = self._paths(m, side)
         if not paths:
             return self.spark.createDataFrame([], schema)
+        root = os.path.join(self.state_dir, side)
         return self.spark.read.schema(schema).option("basePath", root).parquet(*paths)
 
     def commit(
         self, epoch: int, touched: Iterable[int] | None, sides: dict[str, DataFrame]
     ) -> None:
-        """Commit ``epoch``: each ``sides[s]`` (rows with ``BUCKET``)
-        becomes the whole content of side ``s``'s ``touched`` buckets
-        (of every bucket when ``touched`` is None), one file per bucket;
-        every other bucket and side keeps its files."""
+        """Commit ``epoch`` at ``self.width``: each ``sides[s]`` (rows
+        with ``BUCKET``) becomes the whole content of side ``s``'s
+        ``touched`` buckets (of every bucket when ``touched`` is None),
+        one file per bucket; every other bucket and side keeps its
+        files. A commit that changes the width must rewrite every side
+        in full."""
         cur = self._current_version()
         old = self._meta(cur) if cur is not None else {"schemas": {}, "files": {}}
+        assert self.width is not None, "resize() fixes the width of a commit"
+        if self.width != old.get("width"):
+            assert touched is None and set(old["files"]) <= set(sides), "a resize is a full rewrite"
         version = self._begin(cur)
         self._sweep(old["files"])
         touched = None if touched is None else {str(b) for b in touched}
@@ -240,7 +297,8 @@ class BucketedState(VersionedDir):
                 if new and (touched is None or b in touched):
                     live[b] = new
             files[side] = live
-        self._commit(version, {"epoch": epoch, "schemas": schemas, "files": files})
+        meta = {"epoch": epoch, "width": self.width, "schemas": schemas, "files": files}
+        self._commit(version, meta)
         self._sweep(files)
 
     def _widen(self, recorded: dict | None, schema: T.StructType) -> dict:

@@ -53,10 +53,13 @@ class CDCConsumer:
     checkpoint_dir: str
     #: mirror mode needs per-table specs; log mode needs none
     tables: dict[str, TableSpec] = field(default_factory=dict)
-    #: key buckets of each mirror's partition-pruned merge
-    #: (cdc_apply.merge_into_parquet_bucketed): a small CDC batch
-    #: rewrites only the buckets its keys hash into, never the whole
-    #: mirror — per-batch cost O(touched buckets), not O(state)
+    #: the most key buckets of each mirror's partition-pruned merge
+    #: (cdc_apply.merge_into_parquet_bucketed): a mirror is hashed into
+    #: the smallest power of two of buckets that holds it at about one
+    #: advisory partition size (spark.sql.adaptive.
+    #: advisoryPartitionSizeInBytes) each, up to this many; a CDC batch
+    #: rewrites only the buckets its keys hash into, so a small mirror
+    #: is one file and a large one costs O(touched buckets) per batch
     mirror_buckets: int = 64
     #: when set, unparseable records (null/malformed/op-less envelopes)
     #: are quarantined to this parquet dir instead of poisoning the
@@ -295,6 +298,14 @@ class CDCConsumer:
     def read_mirror(self, spark, table_name: str) -> DataFrame:
         """Current state of one mirrored table: its row columns plus the
         ``op``/``seq`` of each key's last change. A mirror whose keys were
-        all deleted reads as zero rows."""
+        all deleted, or that no batch has committed yet, reads as zero
+        rows."""
         target = os.path.join(self.warehouse_dir, "mirror", table_name)
-        return BucketedState(spark, target).read().drop(BUCKET)
+        state = BucketedState(spark, target).read()
+        if state is None:
+            schema = T.StructType(
+                [*self.tables[table_name].schema.fields,
+                 T.StructField("op", T.StringType()), T.StructField("seq", T.LongType())]
+            )
+            return spark.createDataFrame([], schema)
+        return state.drop(BUCKET)

@@ -18,9 +18,12 @@ recomputed ONLY for the join keys the batch touches:
 Storage: both side states and the view are sides of one
 ``streaming.commit.BucketedState`` — the keyed store the CDC mirror
 (cdc/apply.py) commits through too — hash-bucketed by join key under
-``<state_dir>/<side>/__bucket=N/``. A batch reads and rewrites only the
-affected buckets of the sides it changes; untouched buckets keep their
-files, so per-batch I/O is O(delta + affected buckets), not O(state).
+``<state_dir>/<side>/__bucket=N/``. All sides share one width (bucket
+count), sized by the bytes of all sides together: one advisory
+partition per bucket, up to ``n_buckets``. A batch reads and rewrites
+only the affected buckets of the sides it changes; untouched buckets
+keep their files, so per-batch I/O is O(delta + affected buckets), not
+O(state). A batch that moves the width rewrites every side.
 The new files of every side and the applied epoch are published by
 one manifest commit, so a crash before it leaves every reader and
 every replay on the old state, and a replayed epoch is a no-op.
@@ -36,12 +39,14 @@ wins per key, matching the CDC mirror's semantics.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.apply import merge_upsert
+from ..operators.scale import spilled
 from .commit import BUCKET, BucketedState
 
 
@@ -54,7 +59,10 @@ class MaterializedJoin(BucketedState):
     every delta row (deletes included — it addresses the bucket).
     Right rows are identified BY the join key (the dimension shape);
     a many-to-many right side would carry its own ``right_id`` — the
-    maintenance algebra is unchanged, only the merge key differs."""
+    maintenance algebra is unchanged, only the merge key differs.
+    ``n_buckets``: the cap on the width both sides, the view and its
+    derived sides share; below it the width follows their bytes
+    (``BucketedState.resize``)."""
 
     def __init__(
         self,
@@ -64,10 +72,9 @@ class MaterializedJoin(BucketedState):
         join_key: str,
         n_buckets: int = 16,
     ) -> None:
-        super().__init__(spark, state_dir)
+        super().__init__(spark, state_dir, max_width=n_buckets)
         self.left_id = left_id
         self.join_key = join_key
-        self.n_buckets = n_buckets
 
     # -- the per-batch update -------------------------------------------
 
@@ -82,19 +89,24 @@ class MaterializedJoin(BucketedState):
         if self.applied(epoch_id):
             return  # replay after crash: committed state reflects this epoch
         jk = self.join_key
-        bucket = self.bucket([jk], self.n_buckets)
         deltas = {
-            side: d.withColumn(BUCKET, bucket)
+            side: d
             for side, d in (("left", delta_left), ("right", delta_right))
             if d is not None
         }
-        affected = []
-        if deltas:
-            bkts = reduce(DataFrame.union, [d.select(BUCKET) for d in deltas.values()])
-            affected = [r[BUCKET] for r in bkts.distinct().collect()]
-        if not affected:  # record the epoch, keep every file
-            self.commit(epoch_id, [], {})
-            return
+        # a width change re-buckets and rewrites every side and bucket
+        resized = self.resize(deltas.values())
+        bucket = self.bucket([jk])
+        deltas = {side: d.withColumn(BUCKET, bucket) for side, d in deltas.items()}
+        affected = None
+        if not resized:
+            affected = []
+            if deltas:
+                bkts = reduce(DataFrame.union, [d.select(BUCKET) for d in deltas.values()])
+                affected = [r[BUCKET] for r in bkts.distinct().collect()]
+            if not affected:  # record the epoch, keep every file
+                self.commit(epoch_id, [], {})
+                return
 
         # only the affected buckets' old state is ever read; last writer
         # wins per key, the CDC mirror's rule: max __seq, a delete wins
@@ -104,24 +116,31 @@ class MaterializedJoin(BucketedState):
         new = {}
         for side in ("left", "right"):
             old = self.read(side)
-            if old is not None:
+            if old is not None and resized:
+                old = old.withColumn(BUCKET, bucket)
+            elif old is not None:
                 old = old.filter(F.col(BUCKET).isin(affected))
             new[side] = (
                 merge_upsert(old, deltas[side], keys[side], **lww)
                 if side in deltas
                 else old
             )
-        sides = {side: new[side] for side in deltas}
-        if new["left"] is not None and new["right"] is not None:
-            meta = ("__op", "__seq", BUCKET)
-            lpay = [c for c in new["left"].columns if c not in meta]
-            rpay = [c for c in new["right"].columns if c not in (*meta, jk)]
-            view_new = new["left"].select(*lpay, BUCKET).join(
-                new["right"].select(jk, *rpay), jk
-            )
-            sides["view"] = view_new
-            sides.update(self._derived_sides(view_new))
-        self.commit(epoch_id, affected, sides)
+        with ExitStack() as held:
+            # each side feeds its own write, the view and the view's
+            # derived sides: held, it is merged once per commit. A write
+            # to a directory drops the cached rows read from it, so the
+            # view and what derives from it are written first.
+            new = {s: held.enter_context(spilled(df)) for s, df in new.items() if df is not None}
+            sides = {}
+            if len(new) == 2:
+                meta = ("__op", "__seq", BUCKET)
+                lpay = [c for c in new["left"].columns if c not in meta]
+                rpay = [c for c in new["right"].columns if c not in (*meta, jk)]
+                view_new = new["left"].select(*lpay, BUCKET).join(new["right"].select(jk, *rpay), jk)
+                sides["view"] = view_new
+                sides.update(self._derived_sides(view_new))
+            sides.update((s, df) for s, df in new.items() if resized or s in deltas)
+            self.commit(epoch_id, affected, sides)
 
     def _derived_sides(self, view_new: DataFrame) -> dict[str, DataFrame]:
         """Hook for subclasses that maintain relations DERIVED from the

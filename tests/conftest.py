@@ -26,6 +26,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def partition_size(spark):
+    """Set the advisory partition size a bucketed state sizes its width
+    by (``partition_size("1")``: every state is as wide as its cap);
+    the session's value is restored after the test."""
+    conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    was = spark.conf.get(conf)
+    yield lambda size: spark.conf.set(conf, size)
+    spark.conf.set(conf, was)
+
+
+@pytest.fixture
+def tiny_partitions(partition_size):
+    """A 1-byte advisory partition size for the whole test: every
+    bucketed state hashes with its full ``n_buckets``."""
+    partition_size("1")
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -58,6 +58,11 @@ def _state(spark, target):
     return BucketedState(spark, target).read().drop(BUCKET)
 
 
+def _buckets(target):
+    """The bucket directories of a bucketed-merge target."""
+    return sorted(d for d in os.listdir(target) if d.startswith(BUCKET + "="))
+
+
 def _row(uid, email):
     return {"user_id": uid, "email": email, "created_at": GOLDEN_MICROS}
 
@@ -266,9 +271,10 @@ def test_scd2_history(spark, typed_log):
     assert not emily[1].is_current
 
 
-def test_merge_into_parquet_bucketed(spark, tmp_path):
+def test_merge_into_parquet_bucketed(spark, tmp_path, tiny_partitions):
     """Bucketed merge: correct state across batches, only touched bucket
-    dirs rewritten, all-deleted buckets removed."""
+    dirs rewritten, all-deleted buckets removed. (A 1-byte partition
+    size holds the state at its 8 buckets.)"""
     import os
 
     target = str(tmp_path / "state")
@@ -314,12 +320,13 @@ def test_merge_into_parquet_bucketed(spark, tmp_path):
     assert got == set(range(20)) - set(same_bucket_keys)
 
 
-def test_bucketed_merge_writes_one_file_per_bucket(spark, tmp_path):
+def test_bucketed_merge_writes_one_file_per_bucket(spark, tmp_path, tiny_partitions):
     """A merge writes one file per bucket whatever the partition count
     of its shuffle. The merge's window once shuffled by key alone, so
     with AQE's coalescing off every shuffle partition held rows of
     every bucket: a fresh 5,000-row merge at local[4] left 256 files in
-    64 buckets."""
+    64 buckets. (A 1-byte partition size holds the state at its 64
+    buckets.)"""
     target = str(tmp_path / "state")
     rows = [(i, f"v{i}", i, "c") for i in range(5000)]
     b1 = spark.createDataFrame(rows, "pk LONG, val STRING, seq LONG, op STRING")
@@ -373,19 +380,20 @@ def _crash_at(monkeypatch, k):
     return calls
 
 
-def _crash_replay(spark, tmp_path, sweep):
+def _crash_replay(spark, tmp_path, partition_size, sweep):
     """40 keys in 8 buckets, then an 8-key update batch whose merge dies
     at the k-th filesystem call and is replayed, as foreachBatch re-
     delivers a failed epoch. For every k the state must equal
-    apply_changes of the whole log. ``sweep(calls)`` picks the k's from
-    the call names of an uninterrupted merge."""
+    apply_changes of the whole log. The update epoch runs twice: at the
+    state's width (a 1-byte partition size keeps 8 buckets) and as a
+    width change (at 64 MB the 40-row state shrinks to one bucket).
+    ``sweep(calls)`` picks the k's from the call names of an
+    uninterrupted merge."""
     schema = "pk LONG, val STRING, seq LONG, op STRING"
     rows = [(i, f"v{i}", i, "c") for i in range(40)]
     upd = [(i, f"w{i}", 100 + i, "u") for i in range(0, 40, 5)]
     b1, b2 = spark.createDataFrame(rows, schema), spark.createDataFrame(upd, schema)
     want = {r[0]: r[:3] for r in rows} | {r[0]: r[:3] for r in upd}
-    base = str(tmp_path / "base")
-    cdc_apply.merge_into_parquet_bucketed(spark, base, b1, ["pk"], n_buckets=8, epoch=0)
 
     def merge(target, k):
         with pytest.MonkeyPatch.context() as mp:
@@ -398,32 +406,44 @@ def _crash_replay(spark, tmp_path, sweep):
                 pass
         return calls
 
-    calls = merge(shutil.copytree(base, str(tmp_path / "dry")), 0)
-    for k in sweep(calls):
-        target = shutil.copytree(base, str(tmp_path / f"k{k}"))
-        merge(target, k)
-        cdc_apply.merge_into_parquet_bucketed(
-            spark, target, b2, ["pk"], n_buckets=8, epoch=1
-        )
-        got = {r.pk: (r.pk, r.val, r.seq) for r in _state(spark, target).collect()}
-        assert got == want, (k, calls[k - 1], len(got))
+    for size, width in (("1", 8), ("64m", 1)):
+        partition_size(size)
+        base = str(tmp_path / f"base{size}")
+        cdc_apply.merge_into_parquet_bucketed(spark, base, b1, ["pk"], n_buckets=8, epoch=0)
+        calls = merge(shutil.copytree(base, str(tmp_path / f"dry{size}")), 0)
+        for k in sweep(calls):
+            target = shutil.copytree(base, str(tmp_path / f"k{k}_{size}"))
+            merge(target, k)
+            cdc_apply.merge_into_parquet_bucketed(
+                spark, target, b2, ["pk"], n_buckets=8, epoch=1
+            )
+            rows = BucketedState(spark, target).read().collect()
+            got = {r.pk: (r.pk, r.val, r.seq) for r in rows}
+            assert got == want, (size, k, calls[k - 1], len(got))
+            # the live rows' buckets: files superseded by a commit that
+            # died before deleting them stay on disk until the next one
+            buckets = {r[BUCKET] for r in rows}
+            assert buckets <= set(range(width)) and len(buckets) > width // 2, (size, k, buckets)
 
 
-def test_bucketed_merge_replay_after_crash_is_exact(spark, tmp_path):
+def test_bucketed_merge_replay_after_crash_is_exact(spark, tmp_path, partition_size):
     """A merge that dies at the first call of each kind it makes (the
     pointer swap, the durable meta.json write, the delete of a
     superseded file, ...) and is then replayed leaves exactly the state
-    of the whole log: no bucket is lost and no update is applied twice.
+    of the whole log: no bucket is lost and no update is applied twice,
+    also in an epoch that changes the state's width.
     (The write-aside-then-rename swap lost a bucket when the process
     died between its rmtree and its rename: 38 rows of 40 came back.)"""
-    _crash_replay(spark, tmp_path, lambda calls: sorted({calls.index(c) + 1 for c in calls}))
+    _crash_replay(
+        spark, tmp_path, partition_size, lambda calls: sorted({calls.index(c) + 1 for c in calls})
+    )
 
 
 @pytest.mark.slow
-def test_bucketed_merge_replay_after_crash_at_every_call(spark, tmp_path):
+def test_bucketed_merge_replay_after_crash_at_every_call(spark, tmp_path, partition_size):
     """The exhaustive sweep: a crash at every one of the merge's
     filesystem calls in turn, each replayed to the exact state."""
-    _crash_replay(spark, tmp_path, lambda calls: range(1, len(calls) + 1))
+    _crash_replay(spark, tmp_path, partition_size, lambda calls: range(1, len(calls) + 1))
 
 
 def test_bucketed_state_keeps_columns_of_any_bucket(spark, tmp_path):
@@ -476,6 +496,113 @@ def test_bucketed_state_widens_a_type_that_differs_across_buckets(spark, tmp_pat
     assert {r.pk: r.val for r in state.collect()} == want
 
 
+def test_read_mirror_before_first_commit_is_empty(spark, tmp_path):
+    """A mirror that no batch has committed yet reads as zero rows in
+    its table's columns plus ``op``/``seq``, the schema a committed
+    mirror reads in. (It raised AttributeError on the None state.)"""
+    c = CDCConsumer(
+        str(tmp_path / "wh"),
+        str(tmp_path / "ck"),
+        tables={"commerce_account": TableSpec(ACCOUNT_SCHEMA, ("user_id",))},
+    )
+    empty = c.read_mirror(spark, "commerce_account")
+    assert empty.count() == 0
+    insert = spark.createDataFrame(
+        [_env("c", None, _row(6, "frank@example.com"), 5000, 0)],
+        "value string, topic string, offset long",
+    )
+    c.merge_mirror_batch(insert, 0)
+    assert empty.dtypes == c.read_mirror(spark, "commerce_account").dtypes
+
+
+def _bucket_files(target):
+    return [f for b in _buckets(target) for f in os.listdir(os.path.join(target, b))
+            if f.endswith(".parquet")]
+
+
+def test_small_state_commits_one_file(spark, tmp_path):
+    """A state far below one advisory partition is one bucket, one
+    file. Fresh from a file scan, whose plan Spark sizes, it starts at
+    width 1; fresh from local rows, which Spark cannot size, it starts
+    at ``n_buckets`` and its next merge shrinks it to one file."""
+    schema = "pk LONG, val STRING, seq LONG, op STRING"
+    rows = spark.createDataFrame([(i, f"v{i}", i, "c") for i in range(100)], schema)
+    rows.write.parquet(str(tmp_path / "batch"))
+    sized = str(tmp_path / "sized")
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, sized, spark.read.parquet(str(tmp_path / "batch")), ["pk"], epoch=0
+    )
+    assert len(_bucket_files(sized)) == 1
+
+    unsized = str(tmp_path / "unsized")
+    cdc_apply.merge_into_parquet_bucketed(spark, unsized, rows, ["pk"], n_buckets=8, epoch=0)
+    assert len(_buckets(unsized)) == 8
+    upd = spark.createDataFrame([(1, "w1", 200, "u")], schema)
+    cdc_apply.merge_into_parquet_bucketed(spark, unsized, upd, ["pk"], n_buckets=8, epoch=1)
+    assert _buckets(unsized) == [f"{BUCKET}=0"] and len(_bucket_files(unsized)) == 1
+    want = {i: f"v{i}" for i in range(100)} | {1: "w1"}
+    assert {r.pk: r.val for r in _state(spark, unsized).collect()} == want
+
+
+def test_bucketed_state_width_follows_bytes(spark, tmp_path, partition_size):
+    """The width is the smallest power of two >= bytes / partition size,
+    capped at ``max_width``; it grows as soon as the state outgrows it
+    and shrinks only once the state fits a quarter of it."""
+    schema = "pk LONG, val STRING, seq LONG, op STRING"
+    target = str(tmp_path / "state")
+    rows = spark.createDataFrame([(i, f"v{i}", i, "c") for i in range(100)], schema)
+    cdc_apply.merge_into_parquet_bucketed(spark, target, rows, ["pk"], n_buckets=4, epoch=0)
+    size = sum(
+        os.path.getsize(os.path.join(target, b, f)) for b in _buckets(target)
+        for f in os.listdir(os.path.join(target, b)) if f.endswith(".parquet")
+    )
+
+    def width(target_bytes, max_width=4):
+        partition_size(str(target_bytes))
+        state = BucketedState(spark, target, max_width)
+        return state.resize(), state.width
+
+    assert width(size // 3) == (False, 4)  # needs 4 buckets
+    assert width(size // 2) == (False, 4)  # fits 2, but not a quarter of 4
+    assert width(size) == (True, 1)  # fits a quarter of 4
+    assert width(size // 100) == (False, 4)  # capped
+    assert width(size // 100, max_width=2) == (True, 2)  # a lower cap
+
+
+def test_bucketed_merge_is_exact_across_width_changes(spark, tmp_path, partition_size):
+    """A merge that changes the width re-buckets the whole state in the
+    same commit: growing 1 -> 8 and shrinking 8 -> 1, each with
+    inserts, updates and deletes, leaves the state of the whole log."""
+    schema = "pk LONG, val STRING, seq LONG, op STRING"
+    target = str(tmp_path / "state")
+    want = {}
+    epochs = [
+        ("64m", 1, [(i, f"v{i}", i, "c") for i in range(60)]),
+        ("1", 8, [(i, f"w{i}", 100 + i, "u") for i in range(0, 60, 3)]
+         + [(i, None, 200 + i, "d") for i in range(1, 60, 7)] + [(70, "x", 300, "c")]),
+        ("64m", 1, [(i, f"y{i}", 400 + i, "u") for i in range(0, 60, 4)]
+         + [(i, None, 500 + i, "d") for i in range(2, 60, 5)]),
+    ]
+    seed = spark.createDataFrame(epochs[0][2], schema)
+    seed.write.parquet(str(tmp_path / "seed"))
+    for epoch, (size, width, rows) in enumerate(epochs):
+        partition_size(size)
+        batch = (
+            spark.read.parquet(str(tmp_path / "seed")) if epoch == 0
+            else spark.createDataFrame(rows, schema)
+        )
+        cdc_apply.merge_into_parquet_bucketed(
+            spark, target, batch, ["pk"], n_buckets=8, epoch=epoch
+        )
+        for pk, val, _, op in rows:
+            if op == "d":
+                want.pop(pk, None)
+            else:
+                want[pk] = val
+        assert len(_buckets(target)) == width, (epoch, _buckets(target))
+        assert {r.pk: r.val for r in _state(spark, target).collect()} == want, epoch
+
+
 def _jobs_in_group(spark, group, fn) -> int:
     """Run ``fn`` under Spark job group ``group``; return its job count."""
     sc = spark.sparkContext
@@ -501,26 +628,30 @@ def test_bucketed_merge_plans_state_read_without_jobs(spark, tmp_path):
     """The merge into an existing 64-bucket target plans its state read
     with no Spark job: no schema-inference job (the schema comes from
     the state's manifest) and no listing job (its 64 file paths are
-    under ``parallelPartitionDiscovery.threshold``). Measured at local[4]:
-    the merge ran 6 jobs when its state read inferred the schema and
-    listed the buckets in a job, and runs 4 now (touched collect and
-    write); one two-table ``merge_mirror_batch`` with a DLQ ran 16 jobs
-    when it also collected the batch's tables, and runs 9 now."""
+    under ``parallelPartitionDiscovery.threshold``). That merge shrinks
+    the 1,000-row state to the one bucket its bytes call for, and the
+    next merge runs at that width; each keeps the budget. Measured at
+    local[4]: the merge ran 6 jobs when its state read inferred the
+    schema and listed the buckets in a job, and runs 4 now (touched
+    collect and write); one two-table ``merge_mirror_batch`` with a DLQ
+    ran 16 jobs when it also collected the batch's tables, and runs 9
+    now."""
     target = str(tmp_path / "state")
     schema = "pk LONG, val STRING, seq LONG, op STRING"
     keys = range(1000)
     b1 = spark.createDataFrame([(i, f"v{i}", i, "c") for i in keys], schema)
     cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], epoch=0)
-    b2 = spark.createDataFrame([(i, f"w{i}", 5000 + i, "u") for i in keys], schema)
-    n_jobs = _jobs_in_group(
-        spark,
-        "bucketed_merge_budget",
-        lambda: cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], epoch=1),
-    )
-    assert len([d for d in os.listdir(target) if d.startswith("__bucket=")]) == 64
-    got = {(r.pk, r.val) for r in _state(spark, target).collect()}
-    assert got == {(i, f"w{i}") for i in keys}
-    assert n_jobs <= 4, n_jobs
+    for epoch in (1, 2):
+        b2 = spark.createDataFrame([(i, f"w{epoch}_{i}", 5000 * epoch + i, "u") for i in keys], schema)
+        n_jobs = _jobs_in_group(
+            spark,
+            f"bucketed_merge_budget_{epoch}",
+            lambda: cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], epoch=epoch),
+        )
+        assert len(_buckets(target)) == 1
+        got = {(r.pk, r.val) for r in _state(spark, target).collect()}
+        assert got == {(i, f"w{epoch}_{i}") for i in keys}
+        assert n_jobs <= 4, (epoch, n_jobs)
 
     tables = {
         f"commerce_{t}": TableSpec(
@@ -549,14 +680,15 @@ def test_bucketed_merge_plans_state_read_without_jobs(spark, tmp_path):
         return spark.createDataFrame(rows + [("{oops", "cdc.commerce.account", base)], raw)
 
     c.merge_mirror_batch(batch(0), 0)
-    b = batch(10_000)
-    n_jobs = _jobs_in_group(
-        spark, "mirror_batch_budget", lambda: c.merge_mirror_batch(b, 1)
-    )
-    for tbl, key in (("commerce_account", "account_id"), ("commerce_product", "product_id")):
-        got = {(r[key], r.name) for r in c.read_mirror(spark, tbl).collect()}
-        assert got == {(i, f"n{10_000 + i}") for i in range(500)}
-    assert n_jobs <= 9, n_jobs
+    for epoch in (1, 2):
+        b = batch(10_000 * epoch)
+        n_jobs = _jobs_in_group(
+            spark, f"mirror_batch_budget_{epoch}", lambda: c.merge_mirror_batch(b, epoch)
+        )
+        for tbl, key in (("commerce_account", "account_id"), ("commerce_product", "product_id")):
+            got = {(r[key], r.name) for r in c.read_mirror(spark, tbl).collect()}
+            assert got == {(i, f"n{10_000 * epoch + i}") for i in range(500)}
+        assert n_jobs <= 9, (epoch, n_jobs)
 
 
 def test_merge_sql_statement_shape():

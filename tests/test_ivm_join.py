@@ -171,10 +171,11 @@ def test_materialized_join_crash_is_atomic(spark, tmp_path, monkeypatch):
     assert all(len(names) == 1 for names in files.values()), files
 
 
-def test_materialized_join_bucket_locality(spark, tmp_path):
+def test_materialized_join_bucket_locality(spark, tmp_path, tiny_partitions):
     """An epoch touching ONE join key must rewrite only that key's
     bucket, and only in the sides it changes; every other bucket keeps
-    its files."""
+    its files. (A 1-byte partition size holds the state at its 8
+    buckets.)"""
     state = str(tmp_path / "mj")
     nb = 8
     mj = MaterializedJoin(spark, state, left_id="l_id", join_key="jk", n_buckets=nb)
@@ -620,10 +621,11 @@ def test_materialized_join_agg_streaming_drain(spark, tmp_path):
     assert _agg_rows(mj) == want and want == {"B": (1, 100, 100)}
 
 
-def test_materialized_join_agg_partial_locality(spark, tmp_path):
+def test_materialized_join_agg_partial_locality(spark, tmp_path, tiny_partitions):
     """A single-key epoch rewrites ONLY the touched bucket's aggregate
     partial; every other bucket's partial keeps its files — per-batch
-    rollup upkeep is bounded by delta keys, not view size."""
+    rollup upkeep is bounded by delta keys, not view size. (A 1-byte
+    partition size holds the state at its 8 buckets.)"""
     state = str(tmp_path / "mjl")
     mj = _make_agg(spark, state)
     lrows = [(i, i * 10, i * 100, "u", 0) for i in range(1, 13)]
@@ -700,3 +702,76 @@ def test_materialized_join_agg_random_histories(spark, tmp_path):
                 assert want == {}, f"seed {seed} epoch {epoch}"
                 continue
             assert got == want, f"seed {seed} epoch {epoch}"
+
+
+def test_materialized_join_small_state_is_one_file_per_side(spark, tmp_path):
+    """A join state far below one advisory partition keeps one bucket:
+    after the epoch that shrinks it from its 8-bucket start (local rows
+    carry no size estimate), every side is one file in ``__bucket=0``."""
+    state = str(tmp_path / "mjs")
+    mj = _make_agg(spark, state)
+    lrows = [(i, i % 5 * 10, i * 100, "u", 0) for i in range(1, 41)]
+    rrows = [(k * 10, f"s{k}", "u", 0) for k in range(5)]
+    mj.apply_batch(_delta(spark, lrows, L_SCHEMA), _delta(spark, rrows, R_SCHEMA), 0)
+    mj.apply_batch(_delta(spark, [(1, 10, 999, "u", 1)], L_SCHEMA), None, 1)
+    files = _live_files(state)
+    assert set(files) == {(s, "__bucket=0") for s in ("left", "right", "view", "agg")}, files
+    assert all(len(names) == 1 for names in files.values()), files
+    assert _agg_rows(mj) == _reference_agg(lrows + [(1, 10, 999, "u", 1)], rrows)
+
+
+def test_materialized_join_agg_exact_across_width_changes(spark, tmp_path, partition_size):
+    """Epochs that grow the state 1 -> 4 buckets and shrink it 4 -> 1
+    re-bucket every side, the view and the aggregate partials in one
+    commit; the rollup equals the pure-Python recompute after each."""
+    mj = _make_agg(spark, tmp_path / "mjw", nb=4)
+    all_l, all_r = [], []
+    epochs = [
+        ("1", 4, [(i, i % 6 * 10, i, "u", 0) for i in range(1, 31)],
+         [(k * 10, f"s{k % 3}", "u", 0) for k in range(6)]),
+        ("64m", 1, [(i, i % 6 * 10, None, "d", 1) for i in range(1, 31, 4)]
+         + [(40, 20, 7000, "u", 1)], [(30, "s9", "u", 1)]),
+        ("1", 4, [(3, 30, 5, "u", 2)], [(50, None, "d", 2)]),
+    ]
+    for epoch, (size, width, lrows, rrows) in enumerate(epochs):
+        partition_size(size)
+        all_l.extend(lrows)
+        all_r.extend(rrows)
+        mj.apply_batch(_delta(spark, lrows, L_SCHEMA), _delta(spark, rrows, R_SCHEMA), epoch)
+        assert mj.width == width
+        assert _agg_rows(mj) == _reference_agg(all_l, all_r), epoch
+        assert _view_rows(mj) == _reference_join(all_l, all_r), epoch
+
+
+def test_materialized_join_agg_epoch_job_budget(spark, tmp_path, tiny_partitions):
+    """One two-sided epoch of a MaterializedJoinAggregate (2,000 left
+    rows, 50 join keys, 8 buckets) merges each side once: the merged
+    sides are held for the commit, so the view and the aggregate
+    partials read them instead of merging again. Measured: 16 jobs and
+    33 stages (skipped ones included) at local[2] and local[4], running
+    25 and 37 tasks. When each side was merged three times (its write,
+    the view, the partials) the epoch ran 14-17 jobs and 21-31 stages
+    but 35-38 and 64-65 tasks."""
+    mj = _make_agg(spark, tmp_path / "mjb")
+    lrows = [(i, i % 50, i, "u", 0) for i in range(2000)]
+    rrows = [(k, f"s{k % 5}", "u", 0) for k in range(50)]
+    mj.apply_batch(_delta(spark, lrows, L_SCHEMA), _delta(spark, rrows, R_SCHEMA), 0)
+    lrows1 = [(i, i % 50, i + 1, "u", 1) for i in range(2000)]
+    rrows1 = [(k, f"t{k % 5}", "u", 1) for k in range(50)]
+    dl, dr = _delta(spark, lrows1, L_SCHEMA), _delta(spark, rrows1, R_SCHEMA)
+    sc = spark.sparkContext
+    sc.setJobGroup("mj_epoch_budget", "mj_epoch_budget")
+    try:
+        mj.apply_batch(dl, dr, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("mj_epoch_budget")
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    tasks = sum(i.numCompletedTasks for i in map(tracker.getStageInfo, stages) if i)
+    assert _agg_rows(mj) == _reference_agg(lrows + lrows1, rrows + rrows1)
+    assert len(jobs) <= 16 and len(stages) <= 33, (len(jobs), len(stages))
+    # the two measured task counts, 6 per task slot and 13 more
+    assert tasks <= 6 * sc.defaultParallelism + 13, (tasks, sc.defaultParallelism)
