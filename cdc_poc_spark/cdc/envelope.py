@@ -60,11 +60,6 @@ def micros_to_ts(col: F.Column | str) -> F.Column:
     return F.timestamp_micros(c)
 
 
-def ts_to_micros(col: F.Column | str) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c)
-
-
 def parse_envelope_raw(df: DataFrame, value_col: str = "value", topic_col: str = "topic") -> DataFrame:
     """Kafka record -> raw CDC log row (before/after as JSON strings).
 

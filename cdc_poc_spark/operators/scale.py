@@ -24,7 +24,6 @@ joined on the same key by many queries.
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, Iterator, TypeVar
@@ -323,41 +322,6 @@ def zorder_by(
     else:
         out = out.repartitionByRange("__zkey")
     return out.sortWithinPartitions("__zkey").drop("__zkey")
-
-
-def expire_log_epochs(path: str, keep_last: int) -> list[int]:
-    """Retention for the epoch-partitioned CDC log/DLQ
-    (`__epoch=N/` directories under each table partition, written by
-    CDCConsumer.land_log_batch / _quarantine): delete every epoch
-    partition older than the newest ``keep_last`` epochs and return the
-    sorted list of expired epoch ids.
-
-    This is the parquet-directory form of lakehouse snapshot expiry
-    (Iceberg `expireSnapshots` / Delta `VACUUM`): the log grows without
-    bound otherwise, and at 100 TB the object-store LIST cost of an
-    unbounded partition count taxes EVERY downstream scan, not just
-    storage. Partition-pruned readers (filters on __epoch / table) are
-    unaffected by expiry of partitions they don't read; expiry is a
-    driver-side metadata walk + directory deletes — no data job, no
-    shuffle, safe to run concurrently with partition-pruned readers of
-    RETAINED epochs (the same contract lakehouse retention gives)."""
-    import shutil
-
-    epoch_dirs: dict[int, list[str]] = {}
-    for dp, dns, _ in os.walk(path):
-        for dn in dns:
-            if dn.startswith("__epoch="):
-                epoch_dirs.setdefault(
-                    int(dn.split("=", 1)[1]), []
-                ).append(os.path.join(dp, dn))
-    if not epoch_dirs:
-        return []
-    keep = set(sorted(epoch_dirs)[-keep_last:]) if keep_last > 0 else set()
-    expired = sorted(e for e in epoch_dirs if e not in keep)
-    for e in expired:
-        for d in epoch_dirs[e]:
-            shutil.rmtree(d)
-    return expired
 
 
 def global_cumsum(

@@ -380,13 +380,14 @@ def cdc_incremental_agg(spark, sf_dir):
 def cdc_continuous_aggregate(spark, sf_dir):
     """The MAINTAINED version of cdc_incremental_agg: the changelog is
     replayed as three time-ordered micro-batches through
-    streaming/ivm.ContinuousAggregate (per-batch delta application,
-    epoch-guarded), and the maintained totals table is returned. The
-    oracle is the naive full-history recompute — passing means the
+    streaming/ivm_join.ContinuousAggregate (a MaterializedJoinAggregate
+    of each key's latest event, tombstones kept, with the customer dim;
+    epoch-guarded), and the maintained totals are returned. The oracle
+    is the naive full-history recompute — passing means the
     incrementally-maintained view is bit-exact with recomputation
     after multiple batch applications, which is the IVM correctness
     property."""
-    from ..streaming.ivm import ContinuousAggregate
+    from ..streaming.ivm_join import ContinuousAggregate
 
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer")

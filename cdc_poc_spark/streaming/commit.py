@@ -13,14 +13,13 @@ Three forms, one per kind of state:
   ledger guards side effects that cannot be made per-epoch (appends to
   bucketed catalog tables). The unguarded window is the one write
   between the side effect and ``mark_applied``.
-- ``VersionedDir``: state that is rewritten rather than appended
-  (maintained aggregates) commits whole versions ``v<N>/`` with a
-  ``meta.json`` and publishes them by swapping the ``CURRENT`` pointer
-  file.
 - ``BucketedState``: hash-bucketed keyed state (the CDC mirror, the
-  maintained join view) appends each epoch's touched buckets in place
-  and publishes the set of live files through the same pointer swap;
-  its bucket count follows the state's bytes.
+  maintained join view and aggregates) appends each epoch's touched
+  buckets in place and publishes the set of live files by swapping the
+  ``CURRENT`` pointer to a new ``v<N>/meta.json`` manifest; its bucket
+  count follows the state's bytes.
+
+``expire_log_epochs`` is the retention of the ``write_epoch`` layout.
 """
 
 from __future__ import annotations
@@ -89,6 +88,39 @@ def mark_applied(spark: SparkSession, ledger: str, batch_id: int) -> None:
     ).format("parquet").saveAsTable(ledger)
 
 
+def expire_log_epochs(path: str, keep_last: int) -> list[int]:
+    """Retention for the epoch-partitioned CDC log/DLQ
+    (`__epoch=N/` directories under each table partition, written by
+    CDCConsumer.land_log_batch / _quarantine): delete every epoch
+    partition older than the newest ``keep_last`` epochs and return the
+    sorted list of expired epoch ids.
+
+    This is the parquet-directory form of lakehouse snapshot expiry
+    (Iceberg `expireSnapshots` / Delta `VACUUM`): the log grows without
+    bound otherwise, and at 100 TB the object-store LIST cost of an
+    unbounded partition count taxes EVERY downstream scan, not just
+    storage. Partition-pruned readers (filters on __epoch / table) are
+    unaffected by expiry of partitions they don't read; expiry is a
+    driver-side metadata walk + directory deletes — no data job, no
+    shuffle, safe to run concurrently with partition-pruned readers of
+    RETAINED epochs (the same contract lakehouse retention gives)."""
+    epoch_dirs: dict[int, list[str]] = {}
+    for dp, dns, _ in os.walk(path):
+        for dn in dns:
+            if dn.startswith("__epoch="):
+                epoch_dirs.setdefault(
+                    int(dn.split("=", 1)[1]), []
+                ).append(os.path.join(dp, dn))
+    if not epoch_dirs:
+        return []
+    keep = set(sorted(epoch_dirs)[-keep_last:]) if keep_last > 0 else set()
+    expired = sorted(e for e in epoch_dirs if e not in keep)
+    for e in expired:
+        for d in epoch_dirs[e]:
+            shutil.rmtree(d)
+    return expired
+
+
 def _plan_bytes(df: DataFrame) -> int:
     """Spark's size estimate of ``df``'s optimized plan, with no job:
     file sizes for a file scan, ``spark.sql.defaultSizeInBytes``
@@ -103,18 +135,35 @@ def _write_durable(path: str, text: str) -> None:
         os.fsync(f.fileno())
 
 
-class VersionedDir:
-    """State under ``state_dir`` that commits as whole versions:
-    ``v<N>/`` holds one version's data and its ``meta.json``, and the
-    ``CURRENT`` file names the committed version. A batch writes a new
-    version while reading the committed one and then publishes it with
-    one atomic rename, so a crash before the swap leaves every reader
-    and every replay on the old version — data and meta.json (which
-    records the applied epochs) move together or not at all."""
+class BucketedState:
+    """Keyed state hash-bucketed by ``BUCKET`` into one or more sides:
+    side ``s`` keeps its rows under ``<state_dir>/<s>/__bucket=N/`` (side
+    ``""`` is ``state_dir`` itself). The manifest is ``v<N>/meta.json``
+    of the version the ``CURRENT`` file names: each side's live file
+    names per bucket, each side's row schema (union by name of every
+    epoch's, types widened), the width (bucket count) every side is
+    hashed with, and the last applied epoch.
 
-    def __init__(self, state_dir: str) -> None:
+    The width follows the state's bytes: it is the smallest power of two
+    >= bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    capped at ``max_width``, so a bucket holds about one merge task's
+    rows and a small state is one file per side. ``resize`` fixes the
+    width of each commit (see there); ``bucket`` hashes with it.
+
+    A commit appends new files for the buckets it touches next to the
+    live ones, publishes the manifest that swaps them in, and only then
+    deletes the files it superseded. A crash anywhere leaves either the
+    old manifest (the new files are orphans, deleted by the next commit
+    before it writes) or the new one (the superseded files are never
+    read again), so a replay of the epoch rebuilds or skips it."""
+
+    def __init__(self, spark: SparkSession, state_dir: str, max_width: int = 64) -> None:
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
+        self.spark = spark
+        self.max_width = max_width
+        #: the width the next commit hashes and writes with (``resize``)
+        self.width: int | None = None
 
     @property
     def _pointer_path(self) -> str:
@@ -152,49 +201,13 @@ class VersionedDir:
         _write_durable(tmp, str(version))
         os.replace(tmp, self._pointer_path)
 
-    def _gc(self, live_versions: set[int]) -> None:
-        """Best-effort removal of every version dir not in
-        ``live_versions`` (post-commit)."""
-        for entry in os.listdir(self.state_dir):
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) not in live_versions:
-                    shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
-
-    def _commit(self, version: int, meta: dict, live_versions: Iterable[int] = ()) -> None:
-        """Publish ``version`` and drop every version that neither it
-        nor ``live_versions`` still needs."""
+    def _commit(self, version: int, meta: dict) -> None:
+        """Publish ``version``, then remove every other version dir
+        (best effort)."""
         self._publish(version, meta)
-        self._gc({version, *live_versions})
-
-
-class BucketedState(VersionedDir):
-    """Keyed state hash-bucketed by ``BUCKET`` into one or more sides:
-    side ``s`` keeps its rows under ``<state_dir>/<s>/__bucket=N/`` (side
-    ``""`` is ``state_dir`` itself). The committed version's meta.json is
-    the manifest: each side's live file names per bucket, each side's
-    row schema (union by name of every epoch's, types widened), the
-    width (bucket count) every side is hashed with, and the last applied
-    epoch.
-
-    The width follows the state's bytes: it is the smallest power of two
-    >= bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
-    capped at ``max_width``, so a bucket holds about one merge task's
-    rows and a small state is one file per side. ``resize`` fixes the
-    width of each commit (see there); ``bucket`` hashes with it.
-
-    A commit appends new files for the buckets it touches next to the
-    live ones, publishes the manifest that swaps them in, and only then
-    deletes the files it superseded. A crash anywhere leaves either the
-    old manifest (the new files are orphans, deleted by the next commit
-    before it writes) or the new one (the superseded files are never
-    read again), so a replay of the epoch rebuilds or skips it."""
-
-    def __init__(self, spark: SparkSession, state_dir: str, max_width: int = 64) -> None:
-        super().__init__(state_dir)
-        self.spark = spark
-        self.max_width = max_width
-        #: the width the next commit hashes and writes with (``resize``)
-        self.width: int | None = None
+        for entry in os.listdir(self.state_dir):
+            if entry.startswith("v") and entry[1:].isdigit() and int(entry[1:]) != version:
+                shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
 
     def bucket(self, key_cols: Iterable[str]) -> Column:
         """The bucket of a row at ``self.width``:

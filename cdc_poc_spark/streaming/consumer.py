@@ -144,7 +144,7 @@ class CDCConsumer:
                 ).drop("_cdc")
                 target = os.path.join(self.warehouse_dir, "mirror", tbl)
                 cdc_apply.merge_into_parquet_bucketed(
-                    self._spark(batch_df), target, typed,
+                    batch_df.sparkSession, target, typed,
                     list(spec.key_cols), seq_col="seq", op_col="op",
                     delete_ops=("D",), n_buckets=self.mirror_buckets,
                     epoch=epoch_id,
@@ -237,7 +237,7 @@ class CDCConsumer:
         reference's N+1 re-scan, consumer.py:69-72); the
         distinct-collect is one row per source table (tiny)."""
         assert self.catalog_db, "catalog_db must be set for catalog landing"
-        spark = self._spark(batch_df)
+        spark = batch_df.sparkSession
         parsed = env.parse_envelope_raw(self._quarantine(batch_df, epoch_id))
         out = parsed.withColumn("table_name", env.table_from_topic("topic")).drop(
             "topic"
@@ -279,11 +279,7 @@ class CDCConsumer:
         (print_iceberg_tables.py:40-41)."""
         return spark.read.table(f"{self.catalog_db}.{table_name}")
 
-    # -- helpers ------------------------------------------------------
-
-    @staticmethod
-    def _spark(df: DataFrame):
-        return df.sparkSession
+    # -- readers ------------------------------------------------------
 
     def read_log_table(self, spark, table_name: str) -> DataFrame:
         """Read one table's CDC log (partition pruning on table_name —

@@ -199,12 +199,13 @@ def streaming_anomaly_zscore(
     z-score baseline is a PER-SERIES GLOBAL statistic — every bucket's
     flag can change when new buckets arrive, so finalized-append
     semantics are the wrong contract; the right streaming shape is
-    incremental view maintenance of the bucket counts (the IVM pattern
-    of streaming/ivm.py) with derivation on read. Each epoch lands its
-    per-batch bucket increments under ``__epoch=N`` with
-    dynamic-partition overwrite — a replayed epoch REWRITES its own
-    partition, so the maintained counts are exactly-once under restart
-    (same discipline as CDCConsumer.land_log_batch).
+    incremental view maintenance of the bucket counts (the pattern of
+    streaming/ivm_join.py's maintained aggregates) with derivation on
+    read. Each epoch lands its per-batch bucket increments under
+    ``__epoch=N`` with dynamic-partition overwrite — a replayed epoch
+    REWRITES its own partition, so the maintained counts are
+    exactly-once under restart (same discipline as
+    CDCConsumer.land_log_batch).
 
     Drained with availableNow over the full fixture,
     derive_bucket_anomalies(inc_dir) is asserted row-for-row EQUAL to

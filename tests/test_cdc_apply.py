@@ -102,7 +102,7 @@ def test_micros_golden_roundtrip(spark):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     r = df.select(
         F.date_format(env.micros_to_ts("us"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("s"),
-        env.ts_to_micros(env.micros_to_ts("us")).alias("back"),
+        F.unix_micros(env.micros_to_ts("us")).alias("back"),
     ).first()
     assert r.s == GOLDEN_TS_STR
     assert r.back == GOLDEN_MICROS

@@ -117,6 +117,13 @@ ivm_events = st.lists(
         st.integers(min_value=0, max_value=4),          # user
         st.sampled_from(["click", "buy", "error"]),      # error = tombstone
         st.integers(min_value=0, max_value=99_999),      # value in cents
+        # ts offset in nanos: few seconds, so timestamps collide and run
+        # out of order; 0/1/999 share a microsecond, 1000 is the next
+        st.builds(
+            lambda s, ns: s * 1_000_000_000 + ns,
+            st.integers(min_value=0, max_value=3),
+            st.sampled_from([0, 1, 999, 1000]),
+        ),
     ),
     min_size=0,
     max_size=24,
@@ -125,21 +132,23 @@ ivm_events = st.lists(
 
 def _ivm_rows(events):
     return [
-        (i, _T0 + i * 1_000_000_000, u, etype, cents / 100.0)
-        for i, (u, etype, cents) in enumerate(events)
+        (i, _T0 + off, u, etype, cents / 100.0)
+        for i, (u, etype, cents, off) in enumerate(events)
     ]
 
 
 def _ivm_expected_cents(events):
-    """Spec: final live value (cents) per user; totals per dim group."""
-    last: dict[int, int | None] = {}
-    for u, etype, cents in events:
-        last[u] = None if etype == "error" else cents
+    """Spec: final live value (cents) per user — its latest event by
+    (ts // 1000, event_id), a tombstone counting 0; totals per dim group."""
+    latest: dict[int, tuple[tuple[int, int], int]] = {}
+    for i, (u, etype, cents, off) in enumerate(events):
+        seq = ((_T0 + off) // 1000, i)
+        if u not in latest or seq > latest[u][0]:
+            latest[u] = (seq, 0 if etype == "error" else cents)
     groups: dict[str, int] = {}
     gmap = dict(DIM)
-    for u in last:
-        groups.setdefault(gmap[u], 0)
-        groups[gmap[u]] += last[u] or 0
+    for u, (_, cents) in latest.items():
+        groups[gmap[u]] = groups.get(gmap[u], 0) + cents
     return groups
 
 
@@ -149,7 +158,7 @@ def _ivm_expected_cents(events):
 @given(events=ivm_events, cut=st.integers(min_value=0, max_value=24))
 @pytest.mark.slow
 def test_continuous_aggregate_any_split_equals_spec(spark, events, cut, tmp_path_factory):
-    from cdc_poc_spark.streaming.ivm import ContinuousAggregate
+    from cdc_poc_spark.streaming.ivm_join import ContinuousAggregate
 
     cut = min(cut, len(events))
     rows = _ivm_rows(events)

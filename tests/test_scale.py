@@ -189,7 +189,7 @@ def test_zorder_clusters_both_columns(spark, tmp_path):
 def test_expire_log_epochs(spark, tmp_path):
     """Epoch retention must drop exactly the old epoch partitions (per
     table), keep the newest N readable, and be a pure metadata op."""
-    from cdc_poc_spark.operators.scale import expire_log_epochs
+    from cdc_poc_spark.streaming.commit import expire_log_epochs
 
     log = str(tmp_path / "log")
     for epoch in range(5):

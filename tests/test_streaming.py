@@ -493,7 +493,7 @@ def _ivm_chunks(spark):
 
 
 def test_continuous_aggregate_matches_recompute(spark, tmp_path):
-    from cdc_poc_spark.streaming.ivm import ContinuousAggregate
+    from cdc_poc_spark.streaming.ivm_join import ContinuousAggregate
 
     ev, cust, chunks = _ivm_chunks(spark)
     agg = ContinuousAggregate(spark, str(tmp_path / "ivm"), cust)
@@ -532,7 +532,7 @@ def test_continuous_aggregate_crash_is_atomic(spark, tmp_path):
     BEFORE the commit must leave the previous version fully intact
     (totals unadvanced AND epoch unrecorded), and the retried epoch
     must then land exactly once — no double-count."""
-    from cdc_poc_spark.streaming.ivm import ContinuousAggregate
+    from cdc_poc_spark.streaming.ivm_join import ContinuousAggregate
 
     ev, cust, chunks = _ivm_chunks(spark)
     agg = ContinuousAggregate(spark, str(tmp_path / "ivm"), cust)
@@ -548,7 +548,7 @@ def test_continuous_aggregate_crash_is_atomic(spark, tmp_path):
         agg.apply_batch(chunks[2], epoch_id=2)
     # nothing visible changed: totals identical, epoch 2 not recorded
     assert {(r[0], round(float(r[1]), 2)) for r in agg.totals().collect()} == committed
-    assert agg._epochs(agg._current_version()) == [0, 1]
+    assert agg.applied(1) and not agg.applied(2)
 
     # retry (foreachBatch replay) applies epoch 2 exactly once
     agg._publish = real_publish
@@ -572,6 +572,44 @@ def test_continuous_aggregate_crash_is_atomic(spark, tmp_path):
     assert got == expect
 
 
+_T0 = 1_700_000_000_000_000_000  # epoch-nanos, like the events fixture
+_S = 1_000_000_000  # one second in nanos
+
+
+@pytest.mark.parametrize(
+    "batches, expect",
+    [
+        pytest.param(
+            # (event_id, ts, user_id, event_type, value) per batch
+            [[(1, _T0, 0, "buy", 7.0)], [(3, _T0 + 2 * _S, 0, "error", 0.0)], [(2, _T0 + _S, 0, "buy", 7.0)]],
+            0.0,
+            id="late_event_after_tombstone",
+        ),
+        pytest.param(
+            [[(1, _T0, 0, "buy", 5.0)], [(2, _T0 + 1, 0, "buy", 15.0)], [(3, _T0 + _S, 0, "buy", 5.0)]],
+            5.0,
+            id="same_microsecond_update_then_later",
+        ),
+    ],
+)
+def test_continuous_aggregate_history_equals_spec(spark, tmp_path, batches, expect):
+    """The totals equal the full-history spec (each key's latest event
+    by (ts DIV 1000, event_id), a tombstone counting 0) for histories
+    whose order is decided across batches: an event older than a
+    tombstone must not bring its key back, and an update in the same
+    microsecond as the state's row wins by event_id. The last epoch is
+    replayed."""
+    from cdc_poc_spark.streaming.ivm_join import ContinuousAggregate
+
+    schema = "event_id long, ts long, user_id long, event_type string, value double"
+    dim = spark.createDataFrame([(0, "A")], "c_custkey long, c_mktsegment string")
+    agg = ContinuousAggregate(spark, str(tmp_path / "ivm"), dim)
+    for epoch, rows in enumerate(batches):
+        agg.apply_batch(spark.createDataFrame(rows, schema), epoch_id=epoch)
+    agg.apply_batch(spark.createDataFrame(batches[-1], schema), epoch_id=len(batches) - 1)
+    assert {r[0]: float(r[1]) for r in agg.totals().collect()} == {"A": expect}
+
+
 @pytest.mark.parametrize("cls", ["ContinuousAggregate", "MaterializedJoin"])
 def test_versioned_commit_is_durable_before_pointer_swap(spark, tmp_path, monkeypatch, cls):
     """A version's meta.json must be fsynced BEFORE the CURRENT.tmp
@@ -579,8 +617,7 @@ def test_versioned_commit_is_durable_before_pointer_swap(spark, tmp_path, monkey
     meta.json), and CURRENT must name that version."""
     import os
 
-    from cdc_poc_spark.streaming.ivm import ContinuousAggregate
-    from cdc_poc_spark.streaming.ivm_join import MaterializedJoin
+    from cdc_poc_spark.streaming.ivm_join import ContinuousAggregate, MaterializedJoin
 
     state = str(tmp_path / "state")
     if cls == "ContinuousAggregate":
@@ -616,8 +653,9 @@ def test_versioned_commit_is_durable_before_pointer_swap(spark, tmp_path, monkey
 def test_epoch_commits_only_in_commit_module():
     """Every epoch-partition overwrite, pointer swap and fsync goes
     through streaming/commit.py: no other package file hand-rolls the
-    exactly-once commit. No other cdc/ or streaming/ file renames or
-    deletes files either: the swaps of keyed state are commit.py's."""
+    exactly-once commit. No other cdc/, streaming/ or operators/ file
+    renames or deletes files either: the swaps of keyed state and the
+    expiry of epoch partitions are commit.py's."""
     import os
     import re
 
@@ -633,7 +671,7 @@ def test_epoch_commits_only_in_commit_module():
             if not f.endswith(".py") or path == commit.__file__:
                 continue
             rel = os.path.relpath(path, pkg)
-            state_code = rel.startswith(("cdc" + os.sep, "streaming" + os.sep))
+            state_code = rel.startswith(tuple(d + os.sep for d in ("cdc", "streaming", "operators")))
             with open(path) as fh:
                 offenders += [
                     f"{rel}:{i}"
